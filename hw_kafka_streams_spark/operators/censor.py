@@ -73,6 +73,11 @@ def censor_column_many_words(text: Column | str, words: list[str]) -> Column:
     group: one regexp_replace per distinct word length, each with an
     alternation of that length's words. #passes = #distinct lengths,
     typically ≪ #words.
+
+    Output matches ``censor_column`` only when no word overlaps another:
+    the fold masks words one at a time in list order, an alternation
+    takes the leftmost match, so ``["bc", "ab"]`` on ``"abc"`` gives
+    ``"a**"`` there and ``"**c"`` here.
     """
     col = F.col(text) if isinstance(text, str) else text
     by_len: dict[int, list[str]] = {}

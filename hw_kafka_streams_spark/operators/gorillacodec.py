@@ -62,10 +62,6 @@ def _zz(v: int) -> int:
     return (v << 1) ^ (v >> 63) if v < 0 else v << 1
 
 
-def _unzz(u: int) -> int:
-    return -(u + 1 >> 1) if u & 1 else u >> 1
-
-
 def encode_gorilla(ts: np.ndarray, values: np.ndarray) -> bytes:
     """Encode parallel int64 timestamps (must be non-decreasing) and
     float64 values into one Gorilla block.

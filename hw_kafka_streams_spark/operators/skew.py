@@ -86,7 +86,7 @@ def spread_small(
     (``df.inputFiles()`` walks the cached file index; no planning):
     parquet byte-splits cannot subdivide a row group, so effective scan
     parallelism is the source row-group count, read from local footers
-    via pyarrow and memoized per file list (the bench re-constructs
+    via pyarrow and memoized per file stamp (the bench re-constructs
     each query several times per timed loop). Anything un-probe-able —
     non-local URIs, many files, Spark Connect, missing footers —
     resolves to "already wide", i.e. the no-op: at 100 TB scale the
@@ -104,9 +104,9 @@ def spread_small(
     return df.repartition(n, *[F.col(c) for c in cols])
 
 
-#: file-list → row-group-count memo; keyed on the exact file set so a
-#: different sf_dir (or a rewritten table) re-probes.
-_WIDTH_MEMO: dict[tuple[str, ...], int] = {}
+#: (path, st_size, st_mtime_ns) → parquet row-group count; a file
+#: rewritten in place gets a new stamp and is probed again.
+_WIDTH_MEMO: dict[tuple[str, int, int], int] = {}
 
 #: At or above this many source files the scan is wide by construction
 #: (each file is >= 1 split) and footers are not worth reading.
@@ -124,12 +124,8 @@ def _probed_scan_width(df: DataFrame) -> int:
         # empty relation or a non-file source (rate, memory, ...):
         # nothing to spread
         return 1 << 30
-    memo_key = tuple(sorted(files))
-    hit = _WIDTH_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
     total = 0
-    for uri in memo_key:
+    for uri in files:
         if uri.startswith("file:"):
             path = uri[len("file://"):] if uri.startswith("file://") \
                 else uri[len("file:"):]
@@ -137,10 +133,16 @@ def _probed_scan_width(df: DataFrame) -> int:
             path = uri
         else:
             return 1 << 30  # remote store: treat as wide, add nothing
-        if not os.path.exists(path):
+        try:
+            st = os.stat(path)
+        except OSError:
             return 1 << 30
-        import pyarrow.parquet as pq
+        memo_key = (path, st.st_size, st.st_mtime_ns)
+        groups = _WIDTH_MEMO.get(memo_key)
+        if groups is None:
+            import pyarrow.parquet as pq
 
-        total += pq.ParquetFile(path).metadata.num_row_groups
-    _WIDTH_MEMO[memo_key] = total
+            groups = pq.ParquetFile(path).metadata.num_row_groups
+            _WIDTH_MEMO[memo_key] = groups
+        total += groups
     return total

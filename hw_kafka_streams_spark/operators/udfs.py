@@ -34,8 +34,10 @@ def make_censor_udf(words: list[str]):
     length-preserving mask) — one compiled regex per word length, built
     once per executor process, applied vectorized per Arrow batch.
 
-    Semantics identical to operators.censor.censor_column (and the
-    reference's MessageFilterProcessor): use this variant only when the
+    Output matches operators.censor.censor_column (and the reference's
+    MessageFilterProcessor) only when no word overlaps another: with
+    ``["bc", "ab"]`` on ``"abc"`` the fold gives ``"a**"``, this
+    length-grouped alternation ``"**c"``. Use this variant only when the
     dictionary is too large for plan-time regexp_replace folding.
     """
     by_len: dict[int, list[str]] = {}

@@ -13,6 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the package's parent directory: Python workers and the worker daemon
+#: import the engine from it whatever the working directory
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "hw_kafka_streams_spark",
@@ -51,6 +55,10 @@ def get_spark(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
+        # skip re-reading unchanged zip archives at every Python task
+        # (pydaemon.py); a core conf, read when the SparkContext starts
+        .config("spark.python.daemon.module", "hw_kafka_streams_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     if extra_conf:
         for k, v in extra_conf.items():

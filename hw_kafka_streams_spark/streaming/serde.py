@@ -51,14 +51,6 @@ def encode_messages(df: DataFrame, key_col: str = "sender") -> DataFrame:
     )
 
 
-def kv_string(raw: DataFrame, key_alias: str = "key", value_alias: str = "value") -> DataFrame:
-    """String↔string control-topic frame (blocked-users / forbidden-words)."""
-    return raw.select(
-        F.col("key").cast("string").alias(key_alias),
-        F.col("value").cast("string").alias(value_alias),
-    )
-
-
 def latest_per_key(
     df: DataFrame, key_col: str = "key", order_col: str = "offset"
 ) -> DataFrame:

@@ -82,28 +82,6 @@ def _make_ttl_count_fn(ttl_ms: int):
     return fn
 
 
-def running_counts_with_ttl(
-    df: DataFrame, key_col: str = "user_id", ttl_minutes: int = 60
-) -> DataFrame:
-    """Per-key running counts whose state EXPIRES after ``ttl_minutes``
-    without arrivals (processing-time timeout → final row flagged
-    ``expired`` + state removed).
-
-    The unbounded-key-space guard the plain running count lacks: with
-    billions of transient keys (session ids, request ids), NoTimeout
-    state grows forever; a TTL bounds it to keys active within the
-    horizon — the Spark analog of a Kafka Streams punctuator evicting
-    a KeyValueStore.
-    """
-    return df.groupBy(key_col).applyInPandasWithState(
-        _make_ttl_count_fn(ttl_minutes * 60 * 1000),
-        outputStructType="key string, n_total bigint, expired boolean",
-        stateStructType=RUNNING_COUNT_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
 MG_OUTPUT_SCHEMA = "shard int, token string, est_count bigint, shard_rows bigint"
 MG_STATE_SCHEMA = "tokens array<string>, counts array<bigint>, n_rows bigint"
 

@@ -140,11 +140,3 @@ def stream_stream_interval_join(
     return lw.alias("l").join(
         rw.withColumnRenamed(key_col, f"{key_col}_r").alias("r"), cond, how
     )
-
-
-def late_data_policy(
-    df: DataFrame, ts_col: str = "ts", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Declare the late-data policy: rows later than the watermark are
-    dropped from stateful ops downstream (Spark's documented default)."""
-    return df.withWatermark(ts_col, watermark) if df.isStreaming else df

@@ -82,6 +82,20 @@ def test_censor_many_words_variant(spark):
     assert out.collect()[0].text == "******** ****** ****** **"
 
 
+def test_censor_overlapping_words_fold_order(spark):
+    """``censor_column`` folds one word at a time in list order, so an
+    earlier word's mask hides a later word it overlaps. The grouped
+    alternation takes the leftmost match instead: the two agree only
+    when no word overlaps another."""
+    df = spark.createDataFrame([("abc",)], "text string")
+    row = df.select(
+        censor_column("text", ["bc", "ab"]).alias("fold"),
+        censor_column_many_words("text", ["bc", "ab"]).alias("grouped"),
+    ).collect()[0]
+    assert row.fold == "a**"
+    assert row.grouped == "**c"
+
+
 def test_block_is_anti_join_plan(spark):
     """The physical plan must be a broadcast anti-join (no shuffle)."""
     messages, blocked, words = _fixtures(spark)

@@ -48,7 +48,6 @@ def _run_day(spark, rows, state, day_id):
 
 
 @pytest.mark.slowgate
-@pytest.mark.slowgate
 def test_two_day_incremental_dedup_e2e(spark, tmp_path):
     state = str(tmp_path / "dedup_state")
 
@@ -83,7 +82,6 @@ def test_two_day_incremental_dedup_e2e(spark, tmp_path):
 
 
 @pytest.mark.slowgate
-@pytest.mark.slowgate
 def test_incremental_replay_is_idempotent(spark, tmp_path):
     """Redelivering the same day (same day_id) must not duplicate index
     state or flip labels — the at-least-once compensation story."""
@@ -109,7 +107,6 @@ def test_incremental_replay_is_idempotent(spark, tmp_path):
     )
 
 
-@pytest.mark.slowgate
 @pytest.mark.slowgate
 def test_streaming_incremental_dedup_foreachbatch(spark, tmp_path):
     """The incremental pipeline as a StreamingQuery: two micro-batches
@@ -211,7 +208,6 @@ def test_incremental_null_text_and_id_passthrough(spark, tmp_path):
         incremental_dedup_step(spark, sdf, state, day_id=2)
 
 
-@pytest.mark.slowgate
 @pytest.mark.slowgate
 def test_corpus_build_over_snapshots_e2e(spark, tmp_path):
     """Composed pipeline: incremental (bloom + LSH) dedup -> quality

@@ -120,6 +120,36 @@ def test_spread_small_noop_on_non_file_source(spark):
     assert spread_small(df, key="doc_id") is df
 
 
+def test_width_probe_reprobes_file_rewritten_in_place(spark, tmp_path, monkeypatch):
+    """The width memo is keyed on each file's (path, size, mtime): a
+    parquet file rewritten in place under the same name with a different
+    row-group count is probed again, not served its stale width."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hw_kafka_streams_spark.operators import skew
+
+    monkeypatch.setattr(skew, "_WIDTH_MEMO", {})
+    path = tmp_path / "t" / "part-0.parquet"
+    path.parent.mkdir()
+    table = pa.table({"doc_id": list(range(60))})
+    pq.write_table(table, path, row_group_size=30)
+    df = spark.read.parquet(str(path.parent))
+    assert skew._probed_scan_width(df) == 2
+
+    probes = []
+    real_parquet_file = pq.ParquetFile
+    monkeypatch.setattr(
+        pq, "ParquetFile", lambda p: probes.append(p) or real_parquet_file(p)
+    )
+    assert skew._probed_scan_width(df) == 2
+    assert probes == []  # unchanged file: memo hit
+
+    pq.write_table(table, path, row_group_size=10)
+    assert skew._probed_scan_width(spark.read.parquet(str(path.parent))) == 6
+    assert probes == [str(path)]
+
+
 def test_mlm_mask_plan_hashes_actions_once(spark, sf_dir):
     """The round-11 rewrite binds the masked-position and action-hash
     arrays as lambda variables: within each output column's expression

@@ -307,7 +307,6 @@ def test_dim_refresh_between_batches(spark, tmpdir):
 
 
 @pytest.mark.slowgate
-@pytest.mark.slowgate
 def test_dim_refresh_midstream_live_query(spark, tmpdir):
     """GlobalKTable freshness through a RUNNING StreamingQuery
     (KafkaStreamApp.java:140-152): a blocked pair AND a forbidden word
@@ -363,7 +362,6 @@ def test_dim_refresh_midstream_live_query(spark, tmpdir):
 
 
 @pytest.mark.slowgate
-@pytest.mark.slowgate
 def test_checkpoint_resume_no_reprocessing(spark, tmpdir):
     """Restarting from the checkpoint must process ONLY new files —
     the file source's exactly-once bookkeeping."""
@@ -407,7 +405,6 @@ def test_checkpoint_resume_no_reprocessing(spark, tmpdir):
 
 
 @pytest.mark.slowgate
-@pytest.mark.slowgate
 def test_append_mode_watermark_finalization(spark, tmpdir):
     """Append-mode windowed aggs emit a window only after the watermark
     passes its end — late-data semantics, batch by batch."""
@@ -446,7 +443,6 @@ def test_append_mode_watermark_finalization(spark, tmpdir):
     assert rows == {("u1", "2026-01-01 00:00:00", 2)}
 
 
-@pytest.mark.slowgate
 @pytest.mark.slowgate
 def test_streaming_prep_cross_batch_dedup(spark, tmpdir):
     """The prep pipeline drops a duplicate document that arrives in a
@@ -493,7 +489,6 @@ def test_streaming_prep_cross_batch_dedup(spark, tmpdir):
     assert r.n_docs == 2
 
 
-@pytest.mark.slowgate
 @pytest.mark.slowgate
 def test_streaming_session_window_finalization(spark, tmpdir):
     """Session windows close (and emit, append mode) once the watermark
@@ -627,7 +622,6 @@ def test_streaming_heavy_hitters_misra_gries(spark, tmpdir):
 
 
 @pytest.mark.slowgate
-@pytest.mark.slowgate
 def test_stream_stream_left_outer_null_emission(spark, tmpdir):
     """LEFT OUTER stream-stream join: an unmatched left row must emit
     with NULL right columns once the watermark passes its join window —
@@ -687,7 +681,6 @@ def test_stream_stream_left_outer_null_emission(spark, tmpdir):
 
 
 @pytest.mark.slowgate
-@pytest.mark.slowgate
 def test_globalktable_snapshot_refresh_through_topology(spark, tmpdir):
     """Judge r2 item 8: the full run_reference_topology snapshot path
     (changelog-compacted control tables re-read per batch), not just the
@@ -741,7 +734,6 @@ def test_globalktable_snapshot_refresh_through_topology(spark, tmpdir):
     assert sorted(out) == [("login2", "back again"), ("login4", "******** now")]
 
 
-@pytest.mark.slowgate
 @pytest.mark.slowgate
 def test_streaming_neardup_index_across_batches(spark, tmpdir):
     """Incremental MinHash-LSH dedup: batch 2 must detect near-dups of
@@ -885,7 +877,6 @@ def test_sessions_with_timeout_plan_builds(spark, tmpdir):
 
 
 @pytest.mark.slowgate
-@pytest.mark.slowgate
 def test_neardup_replay_is_stable_and_idempotent(spark, tmpdir):
     """foreachBatch at-least-once: redelivering a batch must (a) produce
     identical labels — the probe's `ix.id != new.id` guard keeps docs
@@ -942,7 +933,6 @@ def test_neardup_short_docs_still_labeled(spark, tmpdir):
     assert ids == {1}
 
 
-@pytest.mark.slowgate
 @pytest.mark.slowgate
 def test_neardup_index_compaction_preserves_labels(spark, tmpdir):
     """compact_neardup_index: file count collapses to ~1/band, replay
@@ -1043,7 +1033,6 @@ def test_observed_funnel_streaming_metrics(spark, tmp_path):
     assert metrics["pass_ge10"] == 90 and metrics["pass_even"] == 45
 
 
-@pytest.mark.slowgate
 @pytest.mark.slowgate
 def test_streaming_bloom_dedup_unbounded_horizon(spark, tmpdir):
     """Cross-batch exact dedup with O(num_bits) state: batch-2 repeats
@@ -1276,7 +1265,6 @@ def test_streaming_cms_heavy_hitter_monitor(spark, tmp_path):
 
 
 @pytest.mark.slowgate
-@pytest.mark.slowgate
 def test_streaming_decayed_counts_matches_batch_twin(spark, tmpdir):
     """Two micro-batches through the stateful event-time-decayed
     counter must end at exactly the state the batch fold computes over
@@ -1408,7 +1396,6 @@ def test_kafka_admin_raises_without_client():
         KafkaTopicAdmin("localhost:9092")
 
 
-@pytest.mark.slowgate
 @pytest.mark.slowgate
 def test_keyed_quota_across_batches(spark, tmpdir):
     """Cross-batch per-key quota: admissions must carry over micro-
