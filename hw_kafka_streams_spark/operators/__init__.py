@@ -9,10 +9,10 @@ decontamination), udfs (the pandas-UDF/UDTF surface).
 """
 
 from hw_kafka_streams_spark.operators.censor import (
-    block_messages,
     censor_column,
     censor_column_many_words,
     filter_pipeline,
+    filtered_messages,
 )
 from hw_kafka_streams_spark.operators.chunking import sequence_pack_stats
 from hw_kafka_streams_spark.operators.dedup import (
@@ -45,7 +45,6 @@ from hw_kafka_streams_spark.operators.text import (
 )
 
 __all__ = [
-    "block_messages",
     "boilerplate_prune",
     "brute_force_topk",
     "censor_column",
@@ -54,6 +53,7 @@ __all__ = [
     "embedding_near_dup_pairs",
     "exact_dedup",
     "filter_pipeline",
+    "filtered_messages",
     "hash_split",
     "ivf_topk",
     "jaccard_candidate_pairs",

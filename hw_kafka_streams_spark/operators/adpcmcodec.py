@@ -38,11 +38,10 @@ module belongs to the north-star multimodal extension surface
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from hw_kafka_streams_spark.operators.multimodal import payload_stage
 
 # Public IMA/DVI ADPCM tables (89 steps, 8 index deltas).
 STEP_TABLE = [
@@ -221,19 +220,8 @@ def adpcm_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     order changes them), which is what makes the recursive-CTE oracle
     a bit-exact check of the codec rather than a smoke test."""
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                samples = decode_ima_adpcm_wav(bytes(payload))
-                rows.append(
-                    (doc_id, len(samples), samples[-1], sum(samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "last_sample", "sum_samples"],
-            )
+    def row(doc_id, raw: bytes):
+        samples = decode_ima_adpcm_wav(raw)
+        return [(doc_id, len(samples), samples[-1], sum(samples))]
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        work, schema=ADPCM_STATS_SCHEMA
-    )
+    return payload_stage(df, row, ADPCM_STATS_SCHEMA, payload_col)

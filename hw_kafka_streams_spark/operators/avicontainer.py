@@ -29,11 +29,16 @@ H.264/VP9/HEVC inter-frame codecs remain honestly out of scope.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
+import numpy as np
 
 from pyspark.sql import DataFrame
+
+from hw_kafka_streams_spark.operators.multimodal import (
+    payload_stage,
+    pixel_channel_means,
+    synth_stage,
+)
 
 AVI_FRAME_SCHEMA = (
     "doc_id long, frame_idx int, width int, height int, "
@@ -186,33 +191,14 @@ def avi_frame_means(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Parse AVI payloads, decode every MJPEG frame, emit per-frame
     channel means — one row per (doc, frame), the row-expanding
     Arrow-batched fan-out shape of a real video feature extractor."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import decode_baseline_jpeg
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                _, _, frames = parse_avi_mjpeg(bytes(payload))
-                for fi, frame in enumerate(frames):
-                    rgb = decode_baseline_jpeg(frame)
-                    h, w, _ = rgb.shape
-                    s = rgb.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                    n = h * w
-                    rows.append(
-                        (doc_id, fi, w, h,
-                         int(s[0] // n), int(s[1] // n), int(s[2] // n))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "width", "height",
-                         "mean_r", "mean_g", "mean_b"],
-            )
+    def frame_rows(doc_id, raw: bytes):
+        _, _, frames = parse_avi_mjpeg(raw)
+        for fi, frame in enumerate(frames):
+            yield (doc_id, fi, *pixel_channel_means(decode_baseline_jpeg(frame)))
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        work, schema=AVI_FRAME_SCHEMA
-    )
+    return payload_stage(df, frame_rows, AVI_FRAME_SCHEMA, payload_col)
 
 
 def synthesize_mjpeg_avi_payloads(
@@ -223,31 +209,21 @@ def synthesize_mjpeg_avi_payloads(
     (13id+41f)%256). Constant fills keep the full container→codec
     chain closed-form for the arithmetic DuckDB oracle while the
     bytes on disk are a complete spec-correct AVI."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import encode_baseline_jpeg
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                frames = [
-                    encode_baseline_jpeg(
-                        np.full(
-                            (8, 8, 3),
-                            ((i + 31 * f) % 256,
-                             (i * 7 + 29 * f) % 256,
-                             (i * 13 + 41 * f) % 256),
-                            dtype=np.uint8,
-                        )
-                    )
-                    for f in range(2 + i % 3)
-                ]
-                payloads.append(make_mjpeg_avi(frames, 8, 8))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        frames = [
+            encode_baseline_jpeg(
+                np.full(
+                    (8, 8, 3),
+                    ((i + 31 * f) % 256,
+                     (i * 7 + 29 * f) % 256,
+                     (i * 13 + 41 * f) % 256),
+                    dtype=np.uint8,
+                )
+            )
+            for f in range(2 + i % 3)
+        ]
+        return make_mjpeg_avi(frames, 8, 8)
 
-    return df.select(id_col).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)

@@ -90,46 +90,42 @@ def censor_column_many_words(text: Column | str, words: list[str]) -> Column:
     return col
 
 
-def block_messages(
+def banned_words(forbidden_words: DataFrame, word_col: str = "key") -> list[str]:
+    """The words whose control ``value`` is ``"ban"``
+    (MessageFilterProcessor.java:37), collected to the driver — the word
+    dim is tiny by construction (GlobalKTable-style full replication)."""
+    banned = forbidden_words.filter(F.col("value") == "ban")
+    return [r[word_col] for r in banned.collect()]
+
+
+def filtered_messages(
     messages: DataFrame,
     blocked: DataFrame,
-    sender_col: str = "sender",
-    receiver_col: str = "receiver",
-    blocked_key_col: str = "key",
+    words: list[str],
 ) -> DataFrame:
-    """Drop messages whose ``receiver:sender`` pair is blocked.
+    """The core transformation, source-agnostic (works on batch AND
+    streaming DataFrames — the plan is identical).
 
-    The reference's O4+O5 (leftJoin-null + filter, KafkaStreamApp.java:
-    157-166) fused into one LEFT ANTI broadcast-hash join. Note the key
-    order: *receiver first* (KafkaStreamApp.java:158) — ``login2:login4``
-    blocks login4→login2, not login4→login1.
+    ``messages``: (sender, text, receiver); ``blocked``: (key, value)
+    with key = "receiver:sender"; ``words``: banned word list.
+
+    Blocking is the reference's O4+O5 (leftJoin-null + filter,
+    KafkaStreamApp.java:157-166) fused into one LEFT ANTI
+    broadcast-hash join. Note the key order: *receiver first*
+    (KafkaStreamApp.java:158) — ``login2:login4`` blocks
+    login4→login2, not login4→login1.
     """
-    join_key = F.concat(F.col(receiver_col), F.lit(":"), F.col(sender_col))
-    return messages.join(
-        F.broadcast(blocked), join_key == blocked[blocked_key_col], "left_anti"
+    join_key = F.concat(F.col("receiver"), F.lit(":"), F.col("sender"))
+    survived = messages.join(
+        F.broadcast(blocked.select("key")), join_key == F.col("key"), "left_anti"
     )
+    return survived.withColumn("text", censor_column("text", words))
 
 
 def filter_pipeline(
-    messages: DataFrame,
-    blocked: DataFrame,
-    forbidden_words: DataFrame,
-    text_col: str = "text",
-    word_col: str = "word",
-    word_value_col: str = "value",
+    messages: DataFrame, blocked: DataFrame, forbidden_words: DataFrame
 ) -> DataFrame:
-    """The full reference topology, batch form: block then censor.
-
-    Only words whose control value equals ``"ban"`` take effect
-    (MessageFilterProcessor.java:37). The word dim is collected at
-    plan-build time (GlobalKTable-style full replication — it is tiny
-    by construction); everything per-record stays JVM-side.
-    """
-    words = [
-        r[0]
-        for r in forbidden_words.filter(F.col(word_value_col) == "ban")
-        .select(word_col)
-        .collect()
-    ]
-    survived = block_messages(messages, blocked)
-    return survived.withColumn(text_col, censor_column(text_col, words))
+    """The full reference topology, batch form: block then censor, with
+    the word dim given as a (word, value) table; only words whose value
+    is ``"ban"`` take effect."""
+    return filtered_messages(messages, blocked, banned_words(forbidden_words, "word"))

@@ -298,9 +298,16 @@ def decode_gorilla(data: bytes) -> tuple[np.ndarray, np.ndarray]:
     24 bytes at a time via ``int.from_bytes`` (the worst-case per-point
     consumption is 145 bits), control branches inlined, and outputs
     appended to plain lists. ~4x faster per point than the previous
-    byte-at-a-time ``_BitReader`` object (round-12 measurement)."""
-    if data[:4] != _MAGIC:
+    byte-at-a-time ``_BitReader`` object (round-12 measurement).
+
+    A block cut short anywhere raises ``ValueError('truncated Gorilla
+    block')``. The loop itself does no bounds checks (it is the hot
+    path): a read past the end drives the bit count ``nb`` negative,
+    the next shift fails, and that one failure is translated below."""
+    if not _MAGIC.startswith(data[:4]):
         raise ValueError("not a Gorilla block")
+    if len(data) < 8:
+        raise ValueError("truncated Gorilla block")
     (n,) = struct.unpack(">I", data[4:8])
     if n == 0:
         return np.empty(0, np.int64), np.empty(0, np.float64)
@@ -328,56 +335,61 @@ def decode_gorilla(data: bytes) -> tuple[np.ndarray, np.ndarray]:
     prev_delta = 0
     prev_lz = -1
     prev_mlen = -1
-    for i in range(1, n):
-        if nb < 145:  # worst case: 68-bit ts field + 77-bit value field
-            chunk = data[pos:pos + 24]
-            acc = (acc << (8 * len(chunk))) | int.from_bytes(chunk, "big")
-            nb += 8 * len(chunk)
-            pos += 24
-        if i == 1:
-            nb -= 64
-            u = (acc >> nb) & 0xFFFFFFFFFFFFFFFF
-            delta = -(u + 1 >> 1) if u & 1 else u >> 1
-        elif not (acc >> (nb := nb - 1)) & 1:
-            delta = prev_delta
-        elif not (acc >> (nb := nb - 1)) & 1:
-            nb -= 7
-            delta = prev_delta + ((acc >> nb) & 0x7F) - 63
-        elif not (acc >> (nb := nb - 1)) & 1:
-            nb -= 9
-            delta = prev_delta + ((acc >> nb) & 0x1FF) - 255
-        elif not (acc >> (nb := nb - 1)) & 1:
-            nb -= 12
-            delta = prev_delta + ((acc >> nb) & 0xFFF) - 2047
-        else:
-            nb -= 64
-            u = (acc >> nb) & 0xFFFFFFFFFFFFFFFF
-            delta = prev_delta + (-(u + 1 >> 1) if u & 1 else u >> 1)
-        t += delta
-        ts_out[i] = t
-        prev_delta = delta
-        if not (acc >> (nb := nb - 1)) & 1:
+    try:
+        for i in range(1, n):
+            if nb < 145:  # worst case: 68-bit ts field + 77-bit value field
+                chunk = data[pos:pos + 24]
+                acc = (acc << (8 * len(chunk))) | int.from_bytes(chunk, "big")
+                nb += 8 * len(chunk)
+                pos += 24
+            if i == 1:
+                nb -= 64
+                u = (acc >> nb) & 0xFFFFFFFFFFFFFFFF
+                delta = -(u + 1 >> 1) if u & 1 else u >> 1
+            elif not (acc >> (nb := nb - 1)) & 1:
+                delta = prev_delta
+            elif not (acc >> (nb := nb - 1)) & 1:
+                nb -= 7
+                delta = prev_delta + ((acc >> nb) & 0x7F) - 63
+            elif not (acc >> (nb := nb - 1)) & 1:
+                nb -= 9
+                delta = prev_delta + ((acc >> nb) & 0x1FF) - 255
+            elif not (acc >> (nb := nb - 1)) & 1:
+                nb -= 12
+                delta = prev_delta + ((acc >> nb) & 0xFFF) - 2047
+            else:
+                nb -= 64
+                u = (acc >> nb) & 0xFFFFFFFFFFFFFFFF
+                delta = prev_delta + (-(u + 1 >> 1) if u & 1 else u >> 1)
+            t += delta
+            ts_out[i] = t
+            prev_delta = delta
+            if not (acc >> (nb := nb - 1)) & 1:
+                v_out[i] = v
+                acc &= (1 << nb) - 1
+                continue
+            if not (acc >> (nb := nb - 1)) & 1:  # '10': reuse open window
+                if prev_mlen <= 0:
+                    raise ValueError("corrupt block: window reuse before open")
+                nb -= prev_mlen
+                v ^= ((acc >> nb) & ((1 << prev_mlen) - 1)) << (
+                    64 - prev_lz - prev_mlen)
+            else:  # '11': new window
+                nb -= 5
+                lz = (acc >> nb) & 0x1F
+                nb -= 6
+                mlen = ((acc >> nb) & 0x3F) or 64  # 0 means 64 (paper)
+                nb -= mlen
+                v ^= ((acc >> nb) & ((1 << mlen) - 1)) << (64 - lz - mlen)
+                prev_lz = lz
+                prev_mlen = mlen
+            v &= 0xFFFFFFFFFFFFFFFF
             v_out[i] = v
             acc &= (1 << nb) - 1
-            continue
-        if not (acc >> (nb := nb - 1)) & 1:  # '10': reuse open window
-            if prev_mlen <= 0:
-                raise ValueError("corrupt block: window reuse before open")
-            nb -= prev_mlen
-            v ^= ((acc >> nb) & ((1 << prev_mlen) - 1)) << (
-                64 - prev_lz - prev_mlen)
-        else:  # '11': new window
-            nb -= 5
-            lz = (acc >> nb) & 0x1F
-            nb -= 6
-            mlen = ((acc >> nb) & 0x3F) or 64  # 0 means 64 (paper)
-            nb -= mlen
-            v ^= ((acc >> nb) & ((1 << mlen) - 1)) << (64 - lz - mlen)
-            prev_lz = lz
-            prev_mlen = mlen
-        v &= 0xFFFFFFFFFFFFFFFF
-        v_out[i] = v
-        acc &= (1 << nb) - 1
+    except ValueError:
+        if nb < 0:  # read past the end of the data
+            raise ValueError("truncated Gorilla block") from None
+        raise
     ts = np.array(ts_out, np.int64)
     vals = np.array(v_out, dtype=np.uint64)
     return ts, vals.view(np.float64)

@@ -31,22 +31,94 @@ luma features, **MJPEG AVI container parse + per-frame decode**
 byte/numpy math in Arrow-batched stages.
 The Spark plumbing — schemas, batch iteration, row-expanding frame
 fan-out — is identical to what ffmpeg/PIL-backed stages would use.
+
+Every payload stage goes through two helpers: :func:`payload_stage`
+(``(doc_id, payload)`` → rows of a fixed schema, 1:1 decoders and
+fan-out samplers alike) and :func:`synth_stage` (id → payload
+fixtures). A codec supplies only its per-row function. Both stay
+``mapInPandas``: the projection, the physical plan, its job/stage/task
+counts and the pandas→Arrow conversion of every output column are
+those of the hand-written loops they replaced, so switching a stage to
+the helpers changes no oracle hash.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 MULTIMODAL_META_SCHEMA = (
     "doc_id long, modality string, n_bytes long, content_sha256 string, mime string"
 )
+
+
+def payload_stage(
+    df: DataFrame,
+    row_fn: Callable[[int, bytes], Iterable[tuple]],
+    schema: str,
+    payload_col: str = "payload",
+) -> DataFrame:
+    """The Arrow-batched payload stage, written once.
+
+    Projects ``doc_id`` and ``payload_col``, calls ``row_fn(doc_id,
+    bytes(payload))`` for every row and frames each batch's output
+    tuples by position against the DDL ``schema``. ``row_fn`` returns an
+    iterable of tuples: one for a 1:1 decoder, any number (zero
+    included) for a fan-out such as a frame sampler. An exception in
+    ``row_fn`` fails the task and so the query.
+    """
+    names = DataType.fromDDL(schema).names
+
+    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+                rows.extend(row_fn(doc_id, bytes(payload)))
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select("doc_id", payload_col).mapInPandas(stage, schema=schema)
+
+
+def synth_stage(
+    ids_df: DataFrame, make_payload: Callable[[int], bytes]
+) -> DataFrame:
+    """The id → payload fixture stage: ``make_payload(id)`` for every
+    row of the one-column ``ids_df``, as ``doc_id long, payload
+    binary``. The caller picks the projection: ``df.select(id_col)``,
+    or :func:`_ids_spread` for the heavy codecs."""
+
+    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf.iloc[:, 0].astype("int64")
+            yield pd.DataFrame(
+                {"doc_id": ids, "payload": [make_payload(int(i)) for i in ids]}
+            )
+
+    return ids_df.mapInPandas(stage, schema="doc_id long, payload binary")
+
+
+#: output of :func:`pixel_channel_means` behind a doc id; BMP names its
+#: channels b, g, r instead (its pixels are stored BGR)
+RGB_MEANS_SCHEMA = (
+    "doc_id long, width int, height int, mean_r int, mean_g int, mean_b int"
+)
+
+
+def pixel_channel_means(px: np.ndarray) -> tuple[int, int, int, int, int]:
+    """``(width, height, mean_0, mean_1, mean_2)`` of an (h, w, 3)
+    image: exact integer channel means, ``sum // n`` in int64."""
+    h, w, _ = px.shape
+    s = px.reshape(-1, 3).astype(np.int64).sum(axis=0)
+    n = h * w
+    return w, h, int(s[0] // n), int(s[1] // n), int(s[2] // n)
 
 
 def _ids_spread(df: DataFrame, id_col: str) -> DataFrame:
@@ -257,35 +329,23 @@ def decode_image_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     IFD walk, either byte order) and WebP (VP8/VP8L/VP8X chunk
     headers); everything else hits the stub. The mapInPandas shape (iterator of batches
     in/out) is exactly what a real pillow/ffmpeg decode stage would
-    use — swap the inner function when codecs are available.
+    use — swap the row function when codecs are available.
     """
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                raw = bytes(data)
-                for fmt, parser in _IMAGE_PARSERS:
-                    dims = parser(raw)
-                    if dims is not None:
-                        out.append((doc_id, dims[0], dims[1], fmt, len(raw)))
-                        break
-                else:
-                    # STUB: no image codecs in this container — formats
-                    # beyond these six header layouts (and any PIXEL
-                    # decode of compressed data) need pillow; a real
-                    # deployment decodes here.
-                    raise NotImplementedError(
-                        "non-PNG/JPEG/GIF/BMP/TIFF/WebP decode requires "
-                        "codec libraries not present in this environment"
-                    )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "format", "n_bytes"]
-            )
+    def row(doc_id, raw: bytes):
+        for fmt, parser in _IMAGE_PARSERS:
+            dims = parser(raw)
+            if dims is not None:
+                return [(doc_id, dims[0], dims[1], fmt, len(raw))]
+        # STUB: no image codecs in this container — formats beyond
+        # these six header layouts (and any PIXEL decode of compressed
+        # data) need pillow; a real deployment decodes here.
+        raise NotImplementedError(
+            "non-PNG/JPEG/GIF/BMP/TIFF/WebP decode requires "
+            "codec libraries not present in this environment"
+        )
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        decode_batches, schema=DECODED_IMAGE_SCHEMA
-    )
+    return payload_stage(df, row, DECODED_IMAGE_SCHEMA, payload_col)
 
 
 DECODED_AUDIO_SCHEMA = (
@@ -315,28 +375,17 @@ def decode_audio_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     header byte-math, non-WAV payloads hit the codec stub.
     """
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                raw = bytes(data)
-                meta = _parse_wav_header(raw)
-                if meta is not None:
-                    out.append((doc_id, meta[0], meta[1], meta[2], len(raw)))
-                else:
-                    # STUB: compressed-audio decode needs ffmpeg/soundfile.
-                    raise NotImplementedError(
-                        "non-WAV audio decode requires codec libraries not "
-                        "present in this environment"
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "sample_rate", "n_channels", "bits", "n_bytes"],
+    def row(doc_id, raw: bytes):
+        meta = _parse_wav_header(raw)
+        if meta is None:
+            # STUB: compressed-audio decode needs ffmpeg/soundfile.
+            raise NotImplementedError(
+                "non-WAV audio decode requires codec libraries not "
+                "present in this environment"
             )
+        return [(doc_id, *meta, len(raw))]
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        decode_batches, schema=DECODED_AUDIO_SCHEMA
-    )
+    return payload_stage(df, row, DECODED_AUDIO_SCHEMA, payload_col)
 
 
 def make_fake_wav(sample_rate: int, n_channels: int = 1, bits: int = 16) -> bytes:
@@ -389,20 +438,9 @@ def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Arrow-batched mapInPandas stage, the same shape a real
     payload-bearing scan would feed downstream.
     """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": [
-                        make_fake_png(int(i) % 640 + 16, int(i) % 480 + 16) for i in ids
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col)).mapInPandas(gen, schema="doc_id long, payload binary")
+    return synth_stage(
+        df.select(id_col), lambda i: make_fake_png(i % 640 + 16, i % 480 + 16)
+    )
 
 
 def make_fake_gif(width: int, height: int) -> bytes:
@@ -473,23 +511,10 @@ def synthesize_image_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFram
     cycles PNG / JPEG / GIF / BMP / TIFF / WebP — same ``id %``
     dimension arithmetic, so an SQL oracle can still verify the decode
     roundtrip per format."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": [
-                        _FAKE_IMAGE_MAKERS[int(i) % 6](
-                            int(i) % 640 + 16, int(i) % 480 + 16
-                        )
-                        for i in ids
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col)).mapInPandas(gen, schema="doc_id long, payload binary")
+    return synth_stage(
+        df.select(id_col),
+        lambda i: _FAKE_IMAGE_MAKERS[i % 6](i % 640 + 16, i % 480 + 16),
+    )
 
 
 def frame_sample_stub(df: DataFrame, every_n: int = 30) -> DataFrame:
@@ -499,11 +524,10 @@ def frame_sample_stub(df: DataFrame, every_n: int = 30) -> DataFrame:
     payload carried through), the decode call raises.
     """
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(doc_id, raw: bytes):
         raise NotImplementedError("video decode requires ffmpeg; plumbing stub only")
-        yield  # pragma: no cover
 
-    return df.mapInPandas(sample, schema="doc_id long, frame_idx int, payload binary")
+    return payload_stage(df, row, "doc_id long, frame_idx int, payload binary")
 
 
 # ------------------------------------------------------------- real pixels
@@ -535,8 +559,6 @@ def _bmp_pixels(data: bytes):
     """Parse an uncompressed 24-bit BMP into an (h, w, 3) numpy array
     (bottom-up row order preserved as stored; callers that only do
     per-pixel math don't care)."""
-    import numpy as np
-
     if data[:2] != b"BM":
         return None
     (offset,) = struct.unpack("<I", data[10:14])
@@ -560,70 +582,47 @@ def resize_bmp_nearest(
     plan as the header decoders. Non-BMP payloads raise at the stub
     (compressed decode needs codecs this container lacks).
     """
-    import numpy as np
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                px = _bmp_pixels(bytes(data))
-                if px is None:
-                    raise NotImplementedError(
-                        "non-BMP resize requires codec libraries not "
-                        "present in this environment"
-                    )
-                h, w, _ = px.shape
-                yi = (np.arange(out_h) * h) // out_h
-                xi = (np.arange(out_w) * w) // out_w
-                resized = px[yi][:, xi]
-                row_pad = b"\x00" * ((4 - (out_w * 3 % 4)) % 4)
-                body = b"".join(
-                    resized[r].tobytes() + row_pad for r in range(out_h)
-                )
-                size = 54 + len(body)
-                hdr = (
-                    b"BM"
-                    + struct.pack("<IHHI", size, 0, 0, 54)
-                    + struct.pack(
-                        "<IiiHHIIiiII",
-                        40, out_w, out_h, 1, 24, 0, 0, 2835, 2835, 0, 0,
-                    )
-                )
-                out.append((doc_id, hdr + body))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def row(doc_id, raw: bytes):
+        px = _bmp_pixels(raw)
+        if px is None:
+            raise NotImplementedError(
+                "non-BMP resize requires codec libraries not "
+                "present in this environment"
+            )
+        h, w, _ = px.shape
+        yi = (np.arange(out_h) * h) // out_h
+        xi = (np.arange(out_w) * w) // out_w
+        resized = px[yi][:, xi]
+        row_pad = b"\x00" * ((4 - (out_w * 3 % 4)) % 4)
+        body = b"".join(resized[r].tobytes() + row_pad for r in range(out_h))
+        hdr = (
+            b"BM"
+            + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
+            + struct.pack(
+                "<IiiHHIIiiII", 40, out_w, out_h, 1, 24, 0, 0, 2835, 2835, 0, 0
+            )
+        )
+        return [(doc_id, hdr + body)]
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        work, schema="doc_id long, payload binary"
-    )
+    return payload_stage(df, row, "doc_id long, payload binary", payload_col)
 
 
 def bmp_channel_means(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Per-image exact integer channel sums/means over real BMP pixels
     (numpy reductions per Arrow batch) — the feature-extract stage."""
-    import numpy as np
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                px = _bmp_pixels(bytes(data))
-                if px is None:
-                    raise NotImplementedError("non-BMP payload")
-                h, w, _ = px.shape
-                s = px.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                n = h * w
-                out.append(
-                    (doc_id, w, h, int(s[0] // n), int(s[1] // n), int(s[2] // n))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "mean_b", "mean_g", "mean_r"],
-            )
+    def row(doc_id, raw: bytes):
+        px = _bmp_pixels(raw)
+        if px is None:
+            raise NotImplementedError("non-BMP payload")
+        return [(doc_id, *pixel_channel_means(px))]
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, width int, height int, "
-        "mean_b int, mean_g int, mean_r int",
+    return payload_stage(
+        df,
+        row,
+        "doc_id long, width int, height int, mean_b int, mean_g int, mean_r int",
+        payload_col,
     )
 
 
@@ -655,46 +654,33 @@ def sample_video_frames(
     compressed containers still raise at the stub
     (:func:`frame_sample_stub`).
     """
-    import numpy as np
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                raw = bytes(data)
-                if not raw.startswith(b"YUV4MPEG2"):
-                    raise NotImplementedError(
-                        "compressed video requires ffmpeg; only y4m is "
-                        "decodable in this environment"
-                    )
-                nl = raw.index(b"\n")
-                fields = dict(
-                    (p[0:1].decode(), p[1:].decode())
-                    for p in raw[10:nl].split(b" ")
-                    if p
-                )
-                w, h = int(fields["W"]), int(fields["H"])
-                fsize = w * h + 2 * ((w // 2) * (h // 2))
-                pos, idx = nl + 1, 0
-                while pos + 6 + fsize <= len(raw):
-                    assert raw[pos : pos + 6] == b"FRAME\n"
-                    if idx % every_n == 0:
-                        y = np.frombuffer(
-                            raw, dtype=np.uint8, count=w * h, offset=pos + 6
-                        )
-                        rows.append(
-                            (doc_id, idx, w, h, int(y.astype(np.int64).mean()))
-                        )
-                    pos += 6 + fsize
-                    idx += 1
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "width", "height", "mean_luma"],
+    def frames(doc_id, raw: bytes):
+        if not raw.startswith(b"YUV4MPEG2"):
+            raise NotImplementedError(
+                "compressed video requires ffmpeg; only y4m is "
+                "decodable in this environment"
             )
+        nl = raw.index(b"\n")
+        fields = dict(
+            (p[0:1].decode(), p[1:].decode()) for p in raw[10:nl].split(b" ") if p
+        )
+        w, h = int(fields["W"]), int(fields["H"])
+        fsize = w * h + 2 * ((w // 2) * (h // 2))
+        pos, idx = nl + 1, 0
+        while pos + 6 + fsize <= len(raw):
+            assert raw[pos : pos + 6] == b"FRAME\n"
+            if idx % every_n == 0:
+                y = np.frombuffer(raw, dtype=np.uint8, count=w * h, offset=pos + 6)
+                yield (doc_id, idx, w, h, int(y.astype(np.int64).mean()))
+            pos += 6 + fsize
+            idx += 1
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, frame_idx int, width int, height int, mean_luma int",
+    return payload_stage(
+        df,
+        frames,
+        "doc_id long, frame_idx int, width int, height int, mean_luma int",
+        payload_col,
     )
 
 
@@ -722,29 +708,22 @@ def audio_rms(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     Arrow-batched narrow map. Compressed audio raises at the stub."""
     import math
 
-    import numpy as np
+    def row(doc_id, raw: bytes):
+        meta = _parse_wav_header(raw)
+        if meta is None or meta[2] != 16:
+            raise NotImplementedError(
+                "compressed/non-16-bit audio requires codec libraries"
+            )
+        di = raw.index(b"data")
+        (dlen,) = struct.unpack("<I", raw[di + 4 : di + 8])
+        x = np.frombuffer(raw, dtype="<i2", count=dlen // 2, offset=di + 8).astype(
+            np.int64
+        )
+        ms = (x * x).sum() / len(x) if len(x) else 0.0
+        return [(doc_id, len(x), math.sqrt(ms))]
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                raw = bytes(data)
-                meta = _parse_wav_header(raw)
-                if meta is None or meta[2] != 16:
-                    raise NotImplementedError(
-                        "compressed/non-16-bit audio requires codec libraries"
-                    )
-                di = raw.index(b"data")
-                (dlen,) = struct.unpack("<I", raw[di + 4 : di + 8])
-                x = np.frombuffer(
-                    raw, dtype="<i2", count=dlen // 2, offset=di + 8
-                ).astype(np.int64)
-                ms = (x * x).sum() / len(x) if len(x) else 0.0
-                out.append((doc_id, len(x), math.sqrt(ms)))
-            yield pd.DataFrame(out, columns=["doc_id", "n_samples", "rms"])
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        work, schema="doc_id long, n_samples long, rms double"
+    return payload_stage(
+        df, row, "doc_id long, n_samples long, rms double", payload_col
     )
 
 
@@ -767,34 +746,21 @@ def synthesize_real_jpeg_payloads(
     the same closed-form oracle (jpegcodec.dc_roundtrip_value) covers
     both entropy organizations, and q_multimodal_jpeg value-hash
     verifies the progressive decode path end to end."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import (
         encode_baseline_jpeg,
         encode_progressive_jpeg,
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                img = np.full(
-                    (8 * (i % 2 + 1), 8 * (i % 3 + 1), 3),
-                    (i % 256, (i * 7) % 256, (i * 13) % 256),
-                    dtype=np.uint8,
-                )
-                enc = (
-                    encode_progressive_jpeg if i % 5 == 0
-                    else encode_baseline_jpeg
-                )
-                payloads.append(enc(img))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        img = np.full(
+            (8 * (i % 2 + 1), 8 * (i % 3 + 1), 3),
+            (i % 256, (i * 7) % 256, (i * 13) % 256),
+            dtype=np.uint8,
+        )
+        enc = encode_progressive_jpeg if i % 5 == 0 else encode_baseline_jpeg
+        return enc(img)
 
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
 
 
 def jpeg_channel_means(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -803,34 +769,15 @@ def jpeg_channel_means(df: DataFrame, payload_col: str = "payload") -> DataFrame
     codec). Arrow-batched mapInPandas; each payload runs the full
     T.81 baseline decode (Huffman → dequant → IDCT → color
     transform), then exact integer mean (sum // n)."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import (
         decode_baseline_jpeg,
     )
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                rgb = decode_baseline_jpeg(bytes(data))
-                h, w, _ = rgb.shape
-                s = rgb.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                n = h * w
-                out.append(
-                    (doc_id, w, h,
-                     int(s[0] // n), int(s[1] // n), int(s[2] // n))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height",
-                         "mean_r", "mean_g", "mean_b"],
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, width int, height int, "
-        "mean_r int, mean_g int, mean_b int",
+    return payload_stage(
+        df,
+        lambda doc_id, raw: [(doc_id, *pixel_channel_means(decode_baseline_jpeg(raw)))],
+        RGB_MEANS_SCHEMA,
+        payload_col,
     )
 
 
@@ -846,34 +793,32 @@ def synthesize_block_jpeg_payloads(
     quantized DCs is lossless. 4:4:4 so chroma blocks align with luma
     blocks. Dims are multiples of 8 (no edge padding), so the channel
     mean is the exact block-value average."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import (
         encode_baseline_jpeg,
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 8 * (i % 2 + 1), 8 * (i % 3 + 1)
-                img = np.zeros((h, w, 3), dtype=np.uint8)
-                for by in range(h // 8):
-                    for bx in range(w // 8):
-                        bi = by * (w // 8) + bx
-                        img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                            (i + 17 * bi) % 256,
-                            (i * 7 + 29 * bi) % 256,
-                            (i * 13 + 41 * bi) % 256,
-                        )
-                payloads.append(encode_baseline_jpeg(img, subsampling="444"))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
+    return synth_stage(
+        df.select(id_col),
+        lambda i: encode_baseline_jpeg(_block_fill_image(i), subsampling="444"),
     )
+
+
+def _block_fill_image(i: int) -> np.ndarray:
+    """Doc ``i``'s block-patterned image, shared by the baseline and
+    arithmetic block-JPEG synthesizers: 8·(i%2+1) × 8·(i%3+1) RGB,
+    each 8x8 block ``bi`` filled with ((i + 17bi) % 256,
+    (7i + 29bi) % 256, (13i + 41bi) % 256)."""
+    h, w = 8 * (i % 2 + 1), 8 * (i % 3 + 1)
+    img = np.zeros((h, w, 3), dtype=np.uint8)
+    for by in range(h // 8):
+        for bx in range(w // 8):
+            bi = by * (w // 8) + bx
+            img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
+                (i + 17 * bi) % 256,
+                (i * 7 + 29 * bi) % 256,
+                (i * 13 + 41 * bi) % 256,
+            )
+    return img
 
 
 # ------------------------------------------------------------- real PNG
@@ -891,67 +836,38 @@ def synthesize_real_png_payloads(
     Every third doc encodes ADAM7-INTERLACED (same pixels, different
     wire layout) so the oracled decode exercises both scanline orders —
     lossless means the oracle's pixel predictions hold either way."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.pngcodec import (
         encode_png,
         encode_png_interlaced,
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 8 + i % 7, 8 + i % 9
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = np.stack(
-                    [
-                        (i + 3 * xx + 5 * yy) % 256,
-                        (i * 7 + 2 * xx + yy) % 256,
-                        (i * 13 + xx + 4 * yy) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                enc = encode_png_interlaced if i % 3 == 0 else encode_png
-                payloads.append(enc(img))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        h, w = 8 + i % 7, 8 + i % 9
+        yy, xx = np.mgrid[0:h, 0:w]
+        img = np.stack(
+            [
+                (i + 3 * xx + 5 * yy) % 256,
+                (i * 7 + 2 * xx + yy) % 256,
+                (i * 13 + xx + 4 * yy) % 256,
+            ],
+            axis=-1,
+        ).astype(np.uint8)
+        enc = encode_png_interlaced if i % 3 == 0 else encode_png
+        return enc(img)
 
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
 
 
 def png_channel_means(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Exact integer channel means over REAL decoded PNG pixels —
     the lossless twin of jpeg_channel_means."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.pngcodec import decode_png
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                rgb = decode_png(bytes(data))
-                h, w, _ = rgb.shape
-                s = rgb.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                n = h * w
-                out.append(
-                    (doc_id, w, h,
-                     int(s[0] // n), int(s[1] // n), int(s[2] // n))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height",
-                         "mean_r", "mean_g", "mean_b"],
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, width int, height int, "
-        "mean_r int, mean_g int, mean_b int",
+    return payload_stage(
+        df,
+        lambda doc_id, raw: [(doc_id, *pixel_channel_means(decode_png(raw)))],
+        RGB_MEANS_SCHEMA,
+        payload_col,
     )
 
 
@@ -968,49 +884,28 @@ def synthesize_real_gif_payloads(
     """One REAL LZW-compressed grayscale GIF per row: pixel (y, x) of
     doc i is (11i + 2x + 3y) % 256, dims (8 + i%7) rows x (8 + i%9)
     cols, gray 256-entry palette."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.gifcodec import encode_gif_gray
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 8 + i % 7, 8 + i % 9
-                yy, xx = np.mgrid[0:h, 0:w]
-                g = ((11 * i + 2 * xx + 3 * yy) % 256).astype(np.uint8)
-                payloads.append(encode_gif_gray(g))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        h, w = 8 + i % 7, 8 + i % 9
+        yy, xx = np.mgrid[0:h, 0:w]
+        return encode_gif_gray(((11 * i + 2 * xx + 3 * yy) % 256).astype(np.uint8))
 
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
 
 
 def gif_channel_means(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Exact integer mean over REAL LZW-decoded GIF pixels (gray
     payloads decode to replicated RGB; the R plane is reported)."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.gifcodec import decode_gif
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                rgb = decode_gif(bytes(data))
-                h, w, _ = rgb.shape
-                s = int(rgb[..., 0].astype(np.int64).sum())
-                out.append((doc_id, w, h, s // (h * w)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "mean_gray"]
-            )
+    def row(doc_id, raw: bytes):
+        rgb = decode_gif(raw)
+        h, w, _ = rgb.shape
+        return [(doc_id, w, h, int(rgb[..., 0].astype(np.int64).sum()) // (h * w))]
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, width int, height int, mean_gray int",
+    return payload_stage(
+        df, row, "doc_id long, width int, height int, mean_gray int", payload_col
     )
 
 
@@ -1022,56 +917,36 @@ def synthesize_real_gif_anim_payloads(
     LZW-compressed for real. Fills are deterministic from the id, and
     frame composition reduces to area-weighted integer means — the
     closed form q_multimodal_gif_anim's oracle replays."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.gifcodec import (
         encode_gif_gray_animation,
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = 8 + i % 9, 8 + i % 7
-                v1, v2, v3 = (11 * i + 3) % 256, (7 * i + 5) % 256, (13 * i + 1) % 256
-                frames = [
-                    (np.full((h, w), v1, dtype=np.uint8), 0, 0),
-                    (np.full((h - 2, w - 2), v2, dtype=np.uint8), 1, 1),
-                    (np.full((h // 2, w // 2), v3, dtype=np.uint8), 2, 2),
-                ]
-                payloads.append(
-                    encode_gif_gray_animation(frames, (w, h), disposal=1)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        w, h = 8 + i % 9, 8 + i % 7
+        v1, v2, v3 = (11 * i + 3) % 256, (7 * i + 5) % 256, (13 * i + 1) % 256
+        frames = [
+            (np.full((h, w), v1, dtype=np.uint8), 0, 0),
+            (np.full((h - 2, w - 2), v2, dtype=np.uint8), 1, 1),
+            (np.full((h // 2, w // 2), v3, dtype=np.uint8), 2, 2),
+        ]
+        return encode_gif_gray_animation(frames, (w, h), disposal=1)
 
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
 
 
 def gif_frame_means(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Per-frame integer gray means over COMPOSED animation frames
     (full disposal/transparency semantics in gifcodec) — the GIF twin
     of the MJPEG-AVI per-frame fan-out."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.gifcodec import decode_gif_frames
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                for fi, fr in enumerate(decode_gif_frames(bytes(payload))):
-                    g = fr[..., 0].astype(np.int64)
-                    rows.append((int(doc_id), fi, int(g.sum() // g.size)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "mean_gray"]
-            )
+    def frames(doc_id, raw: bytes):
+        for fi, fr in enumerate(decode_gif_frames(raw)):
+            g = fr[..., 0].astype(np.int64)
+            yield (doc_id, fi, int(g.sum() // g.size))
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        work, schema="doc_id long, frame_idx int, mean_gray int"
+    return payload_stage(
+        df, frames, "doc_id long, frame_idx int, mean_gray int", payload_col
     )
 
 
@@ -1089,77 +964,39 @@ def synthesize_real_tiff_payloads(
     (BitsPerSample [16,16,16], file-byte-order words), so the oracled
     battery also covers the round-9 16-bit read path; values are
     unchanged, so the oracle stays identical."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.tiffcodec import encode_tiff_rgb
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 8 + i % 7, 8 + i % 9
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = np.stack(
-                    [
-                        (5 * i + 2 * xx + 3 * yy) % 256,
-                        (3 * i + xx + 2 * yy) % 256,
-                        (7 * i + 4 * xx + yy) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint16 if i % 5 == 0 else np.uint8)
-                comp = {0: 1, 1: 5, 2: 8, 3: 5}[i % 4]
-                pred = 2 if i % 4 == 3 else 1
-                payloads.append(
-                    encode_tiff_rgb(
-                        img,
-                        ">" if i % 3 == 0 else "<",
-                        compression=comp,
-                        predictor=pred,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        h, w = 8 + i % 7, 8 + i % 9
+        yy, xx = np.mgrid[0:h, 0:w]
+        img = np.stack(
+            [
+                (5 * i + 2 * xx + 3 * yy) % 256,
+                (3 * i + xx + 2 * yy) % 256,
+                (7 * i + 4 * xx + yy) % 256,
+            ],
+            axis=-1,
+        ).astype(np.uint16 if i % 5 == 0 else np.uint8)
+        return encode_tiff_rgb(
+            img,
+            ">" if i % 3 == 0 else "<",
+            compression={0: 1, 1: 5, 2: 8, 3: 5}[i % 4],
+            predictor=2 if i % 4 == 3 else 1,
+        )
 
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
 
 
 def tiff_channel_means(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Exact integer channel means over REAL decoded TIFF pixels —
     the uncompressed twin of png_channel_means."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.tiffcodec import decode_tiff_pixels
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                px = decode_tiff_pixels(bytes(payload)).astype(np.int64)
-                h, w = px.shape[:2]
-                rows.append(
-                    (
-                        int(doc_id),
-                        w,
-                        h,
-                        int(px[..., 0].sum() // (w * h)),
-                        int(px[..., 1].sum() // (w * h)),
-                        int(px[..., 2].sum() // (w * h)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, width int, height int, "
-        "mean_r int, mean_g int, mean_b int",
+    return payload_stage(
+        df,
+        lambda doc_id, raw: [(doc_id, *pixel_channel_means(decode_tiff_pixels(raw)))],
+        RGB_MEANS_SCHEMA,
+        payload_col,
     )
 
 
@@ -1171,61 +1008,33 @@ def synthesize_g711_payloads(
     under BOTH companding laws in q_multimodal_g711, and the per-byte
     closed forms let the oracle recompute every sample."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make(d: int) -> bytes:
+        i = np.arange(64 + d % 64, dtype=np.int64)
+        return ((31 * d + 7 * i) % 256).astype(np.uint8).tobytes()
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for d in ids:
-                d = int(d)
-                n = 64 + d % 64
-                i = np.arange(n, dtype=np.int64)
-                payloads.append(((31 * d + 7 * i) % 256).astype(np.uint8).tobytes())
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
 
 
 def g711_sample_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Decode each payload under µ-law AND A-law (operators/g711.py)
     and reduce to exact integer sample sums — the strongest possible
     check on a companding codec (every decoded value participates)."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.g711 import alaw_decode, ulaw_decode
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                raw = bytes(payload)
-                u = ulaw_decode(raw).astype(np.int64)
-                a = alaw_decode(raw).astype(np.int64)
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(raw),
-                        int(u.sum()),
-                        int(np.abs(u).sum()),
-                        int(a.sum()),
-                        int(np.abs(a).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_samples",
-                    "ulaw_sum", "ulaw_abs_sum", "alaw_sum", "alaw_abs_sum",
-                ],
-            )
+    def row(doc_id, raw: bytes):
+        u = ulaw_decode(raw).astype(np.int64)
+        a = alaw_decode(raw).astype(np.int64)
+        return [
+            (doc_id, len(raw), int(u.sum()), int(np.abs(u).sum()),
+             int(a.sum()), int(np.abs(a).sum()))
+        ]
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, n_samples long, ulaw_sum long, "
+    return payload_stage(
+        df,
+        row,
+        "doc_id long, n_samples long, ulaw_sum long, "
         "ulaw_abs_sum long, alaw_sum long, alaw_abs_sum long",
+        payload_col,
     )
 
 
@@ -1242,64 +1051,35 @@ def synthesize_qoi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the gradient exercises the luma path — except every fifth doc is
     FLAT (every pixel = the (0,0) value), exercising QOI_OP_RUN and the
     62-run split."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.qoicodec import encode_qoi
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 8 + i % 6, 8 + i % 11
-                yy, xx = np.mgrid[0:h, 0:w]
-                if i % 5 == 0:
-                    yy, xx = np.zeros_like(yy), np.zeros_like(xx)
-                img = np.stack(
-                    [
-                        (5 * i + 2 * xx + 7 * yy) % 256,
-                        (3 * i + 4 * xx + yy) % 256,
-                        (11 * i + xx + 2 * yy) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                payloads.append(encode_qoi(img))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        h, w = 8 + i % 6, 8 + i % 11
+        yy, xx = np.mgrid[0:h, 0:w]
+        if i % 5 == 0:
+            yy, xx = np.zeros_like(yy), np.zeros_like(xx)
+        img = np.stack(
+            [
+                (5 * i + 2 * xx + 7 * yy) % 256,
+                (3 * i + 4 * xx + yy) % 256,
+                (11 * i + xx + 2 * yy) % 256,
+            ],
+            axis=-1,
+        ).astype(np.uint8)
+        return encode_qoi(img)
 
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
 
 
 def qoi_channel_means(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Exact integer channel means over REAL decoded QOI pixels."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.qoicodec import decode_qoi
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                rgb = decode_qoi(bytes(data))
-                h, w, _ = rgb.shape
-                s = rgb.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                n = h * w
-                out.append(
-                    (doc_id, w, h,
-                     int(s[0] // n), int(s[1] // n), int(s[2] // n))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height",
-                         "mean_r", "mean_g", "mean_b"],
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, width int, height int, "
-        "mean_r int, mean_g int, mean_b int",
+    return payload_stage(
+        df,
+        lambda doc_id, raw: [(doc_id, *pixel_channel_means(decode_qoi(raw)))],
+        RGB_MEANS_SCHEMA,
+        payload_col,
     )
 
 
@@ -1330,41 +1110,20 @@ def synthesize_flac_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     sizes cycling 192/320/256, strategy bit set, sample-number frame
     addressing) — the oracle is unchanged because losslessness makes
     the container layout invisible to the PCM moments."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.flaccodec import encode_flac
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = 400 + (i % 7) * 100
-                t = np.arange(n, dtype=np.int64)
-                left = (37 * i + t * (5 + i % 11)) % 4001 - 2000
-                if i % 3 == 0:
-                    right = (23 * i + t * (7 + i % 5)) % 3001 - 1500
-                    s = np.stack([left * 37, right * 41], axis=1).astype(
-                        np.int32
-                    )
-                    payloads.append(
-                        encode_flac(s, bits_per_sample=24, stereo_mode="auto")
-                    )
-                elif i % 5 == 1:
-                    payloads.append(
-                        encode_flac(
-                            left.astype(np.int16),
-                            block_schedule=[192, 320, 256],
-                        )
-                    )
-                else:
-                    payloads.append(encode_flac(left.astype(np.int16)))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        t = np.arange(400 + (i % 7) * 100, dtype=np.int64)
+        left = (37 * i + t * (5 + i % 11)) % 4001 - 2000
+        if i % 3 == 0:
+            right = (23 * i + t * (7 + i % 5)) % 3001 - 1500
+            s = np.stack([left * 37, right * 41], axis=1).astype(np.int32)
+            return encode_flac(s, bits_per_sample=24, stereo_mode="auto")
+        if i % 5 == 1:
+            return encode_flac(left.astype(np.int16), block_schedule=[192, 320, 256])
+        return encode_flac(left.astype(np.int16))
 
-    return _ids_spread(df, id_col).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(_ids_spread(df, id_col), make)
 
 
 def flac_pcm_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -1372,32 +1131,24 @@ def flac_pcm_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     count, per-channel sample count, sum, sum of |s|, sum of s^2 over
     all channels — all integer-exact, so the oracle can predict them
     from the synthesis formula (lossless chain)."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.flaccodec import decode_flac
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                s, sr = decode_flac(bytes(data))
-                v = s.astype(np.int64)
-                n_ch = 1 if v.ndim == 1 else v.shape[1]
-                flat = v.ravel()
-                out.append(
-                    (doc_id, sr, n_ch, v.shape[0], int(flat.sum()),
-                     int(np.abs(flat).sum()), int((flat * flat).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "sample_rate", "n_channels",
-                         "n_samples", "sum_s", "sum_abs", "sum_sq"],
-            )
+    def row(doc_id, raw: bytes):
+        s, sr = decode_flac(raw)
+        v = s.astype(np.int64)
+        n_ch = 1 if v.ndim == 1 else v.shape[1]
+        flat = v.ravel()
+        return [
+            (doc_id, sr, n_ch, v.shape[0], int(flat.sum()),
+             int(np.abs(flat).sum()), int((flat * flat).sum()))
+        ]
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, sample_rate int, n_channels int, "
+    return payload_stage(
+        df,
+        row,
+        "doc_id long, sample_rate int, n_channels int, "
         "n_samples long, sum_s long, sum_abs long, sum_sq long",
+        payload_col,
     )
 
 
@@ -1414,36 +1165,25 @@ def synthesize_exif_jpeg_payloads(
     (i%24):00:00 — little-endian IFDs on even docs, big-endian on odd
     (the parser must handle both), and every 7th doc ships NO EXIF at
     all (metadata-less files are data, not errors)."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.exifmeta import (
         build_exif_app1,
         inject_app1,
     )
     from hw_kafka_streams_spark.operators.jpegcodec import encode_baseline_jpeg
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                img = np.full((8, 8, 3), (i * 29) % 256, np.uint8)
-                jpg = encode_baseline_jpeg(img)
-                if i % 7 != 0:
-                    app1 = build_exif_app1(
-                        1 + i % 8,
-                        f"CAM{i % 5}",
-                        f"2024:01:{1 + i % 27:02d} {i % 24:02d}:00:00",
-                        "<" if i % 2 == 0 else ">",
-                    )
-                    jpg = inject_app1(jpg, app1)
-                payloads.append(jpg)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        jpg = encode_baseline_jpeg(np.full((8, 8, 3), (i * 29) % 256, np.uint8))
+        if i % 7 == 0:
+            return jpg
+        app1 = build_exif_app1(
+            1 + i % 8,
+            f"CAM{i % 5}",
+            f"2024:01:{1 + i % 27:02d} {i % 24:02d}:00:00",
+            "<" if i % 2 == 0 else ">",
+        )
+        return inject_app1(jpg, app1)
 
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
 
 
 def exif_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -1451,25 +1191,18 @@ def exif_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     walking the real segment stream + TIFF IFD (exifmeta.parse_exif)."""
     from hw_kafka_streams_spark.operators.exifmeta import parse_exif
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                m = parse_exif(bytes(data))
-                out.append(
-                    (doc_id, m["orientation"], m["make"], m["datetime"],
-                     m["byte_order"])
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "orientation", "make", "taken_at",
-                         "byte_order"],
-            )
+    def row(doc_id, raw: bytes):
+        m = parse_exif(raw)
+        return [
+            (doc_id, m["orientation"], m["make"], m["datetime"], m["byte_order"])
+        ]
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, orientation int, make string, "
+    return payload_stage(
+        df,
+        row,
+        "doc_id long, orientation int, make string, "
         "taken_at string, byte_order string",
+        payload_col,
     )
 
 
@@ -1487,65 +1220,46 @@ def synthesize_lossless_jpeg_payloads(
     pixel(r, c) = (1009*i + 37*r + 101*c) mod 65536, encoded with
     predictor 1 + (i % 7) — so the fixture set exercises every T.81
     predictor (H.1.2) and the mod-2^16 difference fold."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import (
         encode_lossless_jpeg,
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h = 16 + (i % 5) * 4
-                w = 20 + (i % 3) * 8
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                img = ((1009 * i + 37 * r + 101 * c) % 65536).astype(
-                    np.uint16
-                )
-                payloads.append(
-                    encode_lossless_jpeg(img, predictor=1 + i % 7)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        r = np.arange(16 + (i % 5) * 4, dtype=np.int64)[:, None]
+        c = np.arange(20 + (i % 3) * 8, dtype=np.int64)[None, :]
+        img = ((1009 * i + 37 * r + 101 * c) % 65536).astype(np.uint16)
+        return encode_lossless_jpeg(img, predictor=1 + i % 7)
 
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
+
+
+#: output of :func:`_plane_stats` behind a doc id
+PLANE_STATS_SCHEMA = (
+    "doc_id long, height int, width int, precision int, sum_v long, sum_sq long"
+)
+
+
+def _plane_stats(doc_id, decoded: tuple[np.ndarray, int]) -> list[tuple]:
+    """One ``PLANE_STATS_SCHEMA`` row from a ``(pixels, precision)``
+    decode: dims, precision, exact int64 sum and sum of squares."""
+    px, prec = decoded
+    v = px.astype(np.int64)
+    return [(doc_id, px.shape[0], px.shape[1], prec, int(v.sum()), int((v * v).sum()))]
 
 
 def lossless_jpeg_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Exact integer pixel stats over REAL decoded lossless JPEGs:
     dims, precision, sum and sum-of-squares — predictable from the
     synthesis formula because the codec is bit-exact."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import (
         decode_lossless_jpeg,
     )
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                px, prec = decode_lossless_jpeg(bytes(data))
-                v = px.astype(np.int64)
-                out.append(
-                    (doc_id, px.shape[0], px.shape[1], prec,
-                     int(v.sum()), int((v * v).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "height", "width", "precision",
-                         "sum_v", "sum_sq"],
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, height int, width int, precision int, "
-        "sum_v long, sum_sq long",
+    return payload_stage(
+        df,
+        lambda doc_id, raw: _plane_stats(doc_id, decode_lossless_jpeg(raw)),
+        PLANE_STATS_SCHEMA,
+        payload_col,
     )
 
 
@@ -1559,36 +1273,20 @@ def synthesize_lossless_arith_jpeg_payloads(
     predictor 1 + (i % 7) — every H.1 predictor, both precisions, and
     (via the mod-2^P wraps) all five (Da, Db) conditioning categories
     of the H.2 statistical model are exercised across the fixture."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import (
         encode_lossless_arith_jpeg,
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h = 16 + (i % 5) * 4
-                w = 20 + (i % 3) * 8
-                prec = 16 if i % 4 == 0 else 8
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                img = ((1013 * i + 41 * r + 97 * c) % (1 << prec)).astype(
-                    np.uint16 if prec == 16 else np.uint8
-                )
-                payloads.append(
-                    encode_lossless_arith_jpeg(
-                        img, predictor=1 + i % 7, precision=prec
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        prec = 16 if i % 4 == 0 else 8
+        r = np.arange(16 + (i % 5) * 4, dtype=np.int64)[:, None]
+        c = np.arange(20 + (i % 3) * 8, dtype=np.int64)[None, :]
+        img = ((1013 * i + 41 * r + 97 * c) % (1 << prec)).astype(
+            np.uint16 if prec == 16 else np.uint8
+        )
+        return encode_lossless_arith_jpeg(img, predictor=1 + i % 7, precision=prec)
 
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
 
 
 def lossless_arith_jpeg_stats(
@@ -1598,32 +1296,15 @@ def lossless_arith_jpeg_stats(
     arithmetic JPEGs: dims, precision, sum and sum-of-squares —
     predictable from the synthesis formula because the QM entropy
     cycle is bit-exact."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import (
         decode_lossless_arith_jpeg,
     )
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                px, prec = decode_lossless_arith_jpeg(bytes(data))
-                v = px.astype(np.int64)
-                out.append(
-                    (doc_id, px.shape[0], px.shape[1], prec,
-                     int(v.sum()), int((v * v).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "height", "width", "precision",
-                         "sum_v", "sum_sq"],
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, height int, width int, precision int, "
-        "sum_v long, sum_sq long",
+    return payload_stage(
+        df,
+        lambda doc_id, raw: _plane_stats(doc_id, decode_lossless_arith_jpeg(raw)),
+        PLANE_STATS_SCHEMA,
+        payload_col,
     )
 
 
@@ -1640,40 +1321,26 @@ def synthesize_hier_jpeg_payloads(
     base + EXP + SOF7 differential refinements), odd docs are
     ARITHMETIC pyramids (SOF11 base + SOF15 QM-coded differential
     frames) — both lossless, so the pixel-moment oracle is shared."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import (
         encode_hierarchical_jpeg,
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h = 17 + (i % 5) * 4
-                w = 21 + (i % 3) * 8
-                prec = 16 if i % 4 == 0 else 8
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                img = ((911 * i + 43 * r + 89 * c) % (1 << prec)).astype(
-                    np.uint16 if prec == 16 else np.uint8
-                )
-                payloads.append(
-                    encode_hierarchical_jpeg(
-                        img,
-                        levels=2 + i % 3,
-                        predictor=1 + i % 7,
-                        precision=prec,
-                        entropy="arith" if i % 2 else "huffman",
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        prec = 16 if i % 4 == 0 else 8
+        r = np.arange(17 + (i % 5) * 4, dtype=np.int64)[:, None]
+        c = np.arange(21 + (i % 3) * 8, dtype=np.int64)[None, :]
+        img = ((911 * i + 43 * r + 89 * c) % (1 << prec)).astype(
+            np.uint16 if prec == 16 else np.uint8
+        )
+        return encode_hierarchical_jpeg(
+            img,
+            levels=2 + i % 3,
+            predictor=1 + i % 7,
+            precision=prec,
+            entropy="arith" if i % 2 else "huffman",
+        )
 
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
 
 
 def hier_jpeg_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -1681,32 +1348,15 @@ def hier_jpeg_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     (DHP/EXP/SOF7 pyramid): dims, precision, sum and sum-of-squares —
     predictable from the synthesis formula because the lossless
     pyramid is bit-exact."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import (
         decode_hierarchical_jpeg,
     )
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                px, prec = decode_hierarchical_jpeg(bytes(data))
-                v = px.astype(np.int64)
-                out.append(
-                    (doc_id, px.shape[0], px.shape[1], prec,
-                     int(v.sum()), int((v * v).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "height", "width", "precision",
-                         "sum_v", "sum_sq"],
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, height int, width int, precision int, "
-        "sum_v long, sum_sq long",
+    return payload_stage(
+        df,
+        lambda doc_id, raw: _plane_stats(doc_id, decode_hierarchical_jpeg(raw)),
+        PLANE_STATS_SCHEMA,
+        payload_col,
     )
 
 
@@ -1723,37 +1373,21 @@ def synthesize_hier_dct_jpeg_payloads(
     to one more quantize/dequantize of the constant residual, all
     floor(x+0.5) integer arithmetic a SQL oracle replays exactly. Odd
     dims keep every EXP upsample on the crop/edge-replication path."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import (
         encode_hierarchical_jpeg,
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h = 17 + (i % 5) * 4
-                w = 21 + (i % 3) * 8
-                img = np.full((h, w), (911 * i) % 256, np.uint8)
-                # odd docs take the QM-coded pyramid (SOF9 base +
-                # SOF13 differentials): the quantized coefficients —
-                # and therefore the closed-form oracle — are identical
-                # to the Huffman path; only the entropy layer differs
-                payloads.append(
-                    encode_hierarchical_jpeg(
-                        img,
-                        levels=2 + i % 3,
-                        entropy="dct_arith" if i % 2 else "dct",
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        img = np.full((17 + (i % 5) * 4, 21 + (i % 3) * 8), (911 * i) % 256, np.uint8)
+        # odd docs take the QM-coded pyramid (SOF9 base + SOF13
+        # differentials): the quantized coefficients — and therefore
+        # the closed-form oracle — are identical to the Huffman path;
+        # only the entropy layer differs
+        return encode_hierarchical_jpeg(
+            img, levels=2 + i % 3, entropy="dct_arith" if i % 2 else "dct"
+        )
 
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
 
 
 def synthesize_jls_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1768,63 +1402,35 @@ def synthesize_jls_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         v(r, c) = (11*i + 29*r) mod 2^P                 for c < w/2
         v(r, c) = (11*i + 29*r + 23*(c - w/2)*(1 + i%3)) mod 2^P  else
     """
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jlscodec import encode_jls
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h = 16 + (i % 5) * 4
-                w = 24 + (i % 3) * 8
-                prec = 16 if i % 4 == 0 else 8
-                maxv = 1 << prec
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                base = 11 * i + 29 * r + 0 * c
-                grad = 23 * np.maximum(c - w // 2, 0) * (1 + i % 3)
-                img = ((base + grad) % maxv).astype(
-                    np.uint16 if prec == 16 else np.uint8
-                )
-                payloads.append(encode_jls(img, precision=prec))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        h = 16 + (i % 5) * 4
+        w = 24 + (i % 3) * 8
+        prec = 16 if i % 4 == 0 else 8
+        r = np.arange(h, dtype=np.int64)[:, None]
+        c = np.arange(w, dtype=np.int64)[None, :]
+        base = 11 * i + 29 * r + 0 * c
+        grad = 23 * np.maximum(c - w // 2, 0) * (1 + i % 3)
+        img = ((base + grad) % (1 << prec)).astype(
+            np.uint16 if prec == 16 else np.uint8
+        )
+        return encode_jls(img, precision=prec)
 
-    return _ids_spread(df, id_col).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(_ids_spread(df, id_col), make)
 
 
 def jls_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Exact integer pixel stats over REAL decoded JPEG-LS streams:
     dims, precision, sum and sum-of-squares — predictable from the
     synthesis formula because the codec is lossless."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jlscodec import decode_jls
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                px, prec = decode_jls(bytes(data))
-                v = px.astype(np.int64)
-                out.append(
-                    (doc_id, px.shape[0], px.shape[1], prec,
-                     int(v.sum()), int((v * v).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "height", "width", "precision",
-                         "sum_v", "sum_sq"],
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, height int, width int, precision int, "
-        "sum_v long, sum_sq long",
+    return payload_stage(
+        df,
+        lambda doc_id, raw: _plane_stats(doc_id, decode_jls(raw)),
+        PLANE_STATS_SCHEMA,
+        payload_col,
     )
 
 
@@ -1839,33 +1445,22 @@ def synthesize_mclv_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     — so interior blocks motion-compensate EXACTLY (skip-coded, MV =
     (-dy, -dx)) while border blocks exercise the edge-replicated
     unrestricted-MV path with real Rice-coded residuals."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.mcvideo import encode_mclv
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                dy = (i % 3) - 1
-                dx = ((i // 3) % 3) - 1
-                r = np.arange(32, dtype=np.int64)[:, None]
-                c = np.arange(48, dtype=np.int64)[None, :]
-                frames = [
-                    (
-                        (1000 + 5 * i + 3 * (r - t * dy) + 7 * (c - t * dx))
-                        % 256
-                    ).astype(np.uint8)
-                    for t in range(6)
-                ]
-                payloads.append(encode_mclv(np.stack(frames)))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        dy = (i % 3) - 1
+        dx = ((i // 3) % 3) - 1
+        r = np.arange(32, dtype=np.int64)[:, None]
+        c = np.arange(48, dtype=np.int64)[None, :]
+        frames = [
+            ((1000 + 5 * i + 3 * (r - t * dy) + 7 * (c - t * dx)) % 256).astype(
+                np.uint8
+            )
+            for t in range(6)
+        ]
+        return encode_mclv(np.stack(frames))
 
-    return _ids_spread(df, id_col).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(_ids_spread(df, id_col), make)
 
 
 def mclv_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -1873,30 +1468,19 @@ def mclv_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     clips (I-frame + motion search + Rice residual replay): frame
     count, dims, sum and sum-of-squares over every frame — predictable
     from the synthesis formula because the codec is lossless."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.mcvideo import decode_mclv
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                clip = decode_mclv(bytes(data))
-                v = clip.astype(np.int64)
-                out.append(
-                    (doc_id, clip.shape[0], clip.shape[1], clip.shape[2],
-                     int(v.sum()), int((v * v).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "n_frames", "height", "width",
-                         "sum_v", "sum_sq"],
-            )
+    def row(doc_id, raw: bytes):
+        clip = decode_mclv(raw)
+        v = clip.astype(np.int64)
+        return [(doc_id, *clip.shape[:3], int(v.sum()), int((v * v).sum()))]
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, n_frames int, height int, width int, "
+    return payload_stage(
+        df,
+        row,
+        "doc_id long, n_frames int, height int, width int, "
         "sum_v long, sum_sq long",
+        payload_col,
     )
 
 
@@ -1910,33 +1494,21 @@ def synthesize_jls_rgb_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFr
     every 5th doc adds an LSE preset segment (T1/T2/T3 = 4/8/32,
     RESET = 32), so the corpus exercises every T.87 scan layout the
     codec supports plus the parameter-preset path (VERDICT r8 item 4)."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jlscodec import encode_jls
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h = 12 + (i % 4) * 4
-                w = 20 + (i % 3) * 6
-                r = np.arange(h, dtype=np.int64)[:, None, None]
-                c = np.arange(w, dtype=np.int64)[None, :, None]
-                ch = np.arange(3, dtype=np.int64)[None, None, :]
-                img = (
-                    (7 * i + 13 * r + 17 * c + 31 * ch * (1 + r % 3)) % 256
-                ).astype(np.uint8)
-                kw = {"ilv": i % 3}
-                if i % 5 == 0:
-                    kw.update(t1=4, t2=8, t3=32, reset=32)
-                payloads.append(encode_jls(img, **kw))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        r = np.arange(12 + (i % 4) * 4, dtype=np.int64)[:, None, None]
+        c = np.arange(20 + (i % 3) * 6, dtype=np.int64)[None, :, None]
+        ch = np.arange(3, dtype=np.int64)[None, None, :]
+        img = ((7 * i + 13 * r + 17 * c + 31 * ch * (1 + r % 3)) % 256).astype(
+            np.uint8
+        )
+        kw = {"ilv": i % 3}
+        if i % 5 == 0:
+            kw.update(t1=4, t2=8, t3=32, reset=32)
+        return encode_jls(img, **kw)
 
-    return _ids_spread(df, id_col).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(_ids_spread(df, id_col), make)
 
 
 def jls_rgb_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -1945,34 +1517,21 @@ def jls_rgb_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     back from the FIRST SOS header of the stream itself, so the oracle
     (which derives it as doc_id % 3) verifies the payload genuinely
     carries the interleaved layout, not just that decode succeeded."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jlscodec import decode_jls
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                data = bytes(data)
-                px, _ = decode_jls(data)
-                sos = data.index(b"\xff\xda")
-                ns = data[sos + 4]
-                ilv = data[sos + 6 + 2 * ns]
-                v = px.astype(np.int64)
-                out.append(
-                    (doc_id, px.shape[0], px.shape[1], px.shape[2],
-                     int(ilv), int(v.sum()), int((v * v).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "height", "width", "n_channels",
-                         "ilv", "sum_v", "sum_sq"],
-            )
+    def row(doc_id, raw: bytes):
+        px, _ = decode_jls(raw)
+        sos = raw.index(b"\xff\xda")
+        ilv = raw[sos + 6 + 2 * raw[sos + 4]]
+        v = px.astype(np.int64)
+        return [(doc_id, *px.shape[:3], ilv, int(v.sum()), int((v * v).sum()))]
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, height int, width int, n_channels int, "
+    return payload_stage(
+        df,
+        row,
+        "doc_id long, height int, width int, n_channels int, "
         "ilv int, sum_v long, sum_sq long",
+        payload_col,
     )
 
 
@@ -1990,41 +1549,18 @@ def synthesize_arith_jpeg_payloads(
     Every third payload encodes PROGRESSIVE arithmetic (SOF10, the
     Annex G 10-scan script), so the successive-approximation QM path
     is value-hash-verified too."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import (
         encode_progressive_arith_jpeg,
         encode_sequential_arith_jpeg,
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 8 * (i % 2 + 1), 8 * (i % 3 + 1)
-                img = np.zeros((h, w, 3), dtype=np.uint8)
-                for by in range(h // 8):
-                    for bx in range(w // 8):
-                        bi = by * (w // 8) + bx
-                        img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                            (i + 17 * bi) % 256,
-                            (i * 7 + 29 * bi) % 256,
-                            (i * 13 + 41 * bi) % 256,
-                        )
-                enc = (
-                    encode_progressive_arith_jpeg if i % 3 == 0
-                    else lambda im: encode_sequential_arith_jpeg(
-                        im, subsampling="444"
-                    )
-                )
-                payloads.append(enc(img))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        img = _block_fill_image(i)
+        if i % 3 == 0:
+            return encode_progressive_arith_jpeg(img)
+        return encode_sequential_arith_jpeg(img, subsampling="444")
 
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
 
 
 def synthesize_ext12_jpeg_payloads(
@@ -2037,58 +1573,29 @@ def synthesize_ext12_jpeg_payloads(
     whole decode reduces to the q00=128 DC roundtrip at precision 12
     (dc_roundtrip_value), exact floor(x+0.5) integer arithmetic a SQL
     oracle replays. Odd dims keep edge-replication padding live."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import (
         encode_extended_jpeg_gray12,
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h = 9 + (i % 5) * 4
-                w = 14 + (i % 3) * 8
-                img = np.full((h, w), (1337 * i) % 4096, np.uint16)
-                payloads.append(encode_extended_jpeg_gray12(img))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        h = 9 + (i % 5) * 4
+        w = 14 + (i % 3) * 8
+        img = np.full((h, w), (1337 * i) % 4096, np.uint16)
+        return encode_extended_jpeg_gray12(img)
 
-    return df.select(F.col(id_col)).mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    return synth_stage(df.select(id_col), make)
 
 
 def ext12_jpeg_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Exact integer pixel stats over REAL decoded 12-bit extended
     sequential JPEGs: dims, declared precision (12), sum and
     sum-of-squares of the gray channel."""
-    import numpy as np
-
     from hw_kafka_streams_spark.operators.jpegcodec import (
         decode_baseline_jpeg,
     )
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                px = decode_baseline_jpeg(bytes(data))
-                prec = 12 if px.dtype == np.uint16 else 8
-                v = px[..., 0].astype(np.int64)
-                out.append(
-                    (doc_id, px.shape[0], px.shape[1], prec,
-                     int(v.sum()), int((v * v).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "height", "width", "precision",
-                         "sum_v", "sum_sq"],
-            )
+    def row(doc_id, raw: bytes):
+        px = decode_baseline_jpeg(raw)
+        return _plane_stats(doc_id, (px[..., 0], 12 if px.dtype == np.uint16 else 8))
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        work,
-        schema="doc_id long, height int, width int, precision int, "
-        "sum_v long, sum_sq long",
-    )
+    return payload_stage(df, row, PLANE_STATS_SCHEMA, payload_col)

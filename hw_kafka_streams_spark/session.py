@@ -18,6 +18,16 @@ from pyspark.sql import SparkSession
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Half of physical RAM (``os.sysconf``), capped at 32g, as a Spark
+    size string. Local mode runs every task in the driver JVM, so a
+    fixed 32g heap on a smaller host lets the JVM grow until the OS
+    kills it; half leaves room for Python workers and the page cache."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys_bytes // 2 >> 20, 32 << 10)}m"
+
+
 def get_spark(
     app_name: str = "hw_kafka_streams_spark",
     shuffle_partitions: int | None = None,
@@ -26,8 +36,10 @@ def get_spark(
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all
-    cores). On a real cluster the master/memory settings come from
-    spark-submit and these builder calls are inert.
+    cores); ``SPARK_GRAFT_DRIVER_MEM`` overrides the driver heap
+    (default: :func:`default_driver_memory`). On a real cluster the
+    master/memory settings come from spark-submit and these builder
+    calls are inert.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
     if shuffle_partitions is None:
@@ -53,7 +65,10 @@ def get_spark(
         # the engine ships pushdown-capable Python data sources
         # (sources/message_source.py); off by default in Spark 4.1
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # skip re-reading unchanged zip archives at every Python task
         # (pydaemon.py); a core conf, read when the SparkContext starts

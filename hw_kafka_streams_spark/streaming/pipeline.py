@@ -31,7 +31,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hw_kafka_streams_spark.operators.censor import censor_column, filter_pipeline
+from hw_kafka_streams_spark.operators.censor import banned_words, filtered_messages
 from hw_kafka_streams_spark.streaming import serde
 
 TOPIC_MESSAGES = "messages"
@@ -83,55 +83,21 @@ def read_control_table(spark: SparkSession, bootstrap: str, topic: str) -> DataF
     return serde.compact_changelog(kv).select("key", "value")
 
 
-def filtered_messages(
-    messages: DataFrame,
-    blocked: DataFrame,
-    words: list[str],
-) -> DataFrame:
-    """The core transformation, source-agnostic (works on batch AND
-    streaming DataFrames — the plan is identical).
-
-    ``messages``: (sender, text, receiver); ``blocked``: (key, value)
-    with key = "receiver:sender"; ``words``: banned word list.
-    """
-    join_key = F.concat(F.col("receiver"), F.lit(":"), F.col("sender"))
-    survived = messages.join(
-        F.broadcast(blocked.select("key")), join_key == F.col("key"), "left_anti"
-    )
-    return survived.withColumn("text", censor_column("text", words))
-
-
 def run_reference_topology(
     spark: SparkSession,
     bootstrap: str,
     checkpoint_dir: str,
-    refresh_dims_each_batch: bool = True,
     sink_topic: str = TOPIC_OUT,
 ):
     """Wire the full streaming job: Kafka → filter/censor → Kafka.
 
-    With ``refresh_dims_each_batch`` the control tables are re-read
-    inside ``foreachBatch`` every microbatch — the closest Spark
-    equivalent of GlobalKTable live updates (new blocks/words take
-    effect on the next batch). Otherwise they are snapshotted once at
-    start (cheaper; dictionary frozen for the query lifetime).
+    The control tables are re-read inside ``foreachBatch`` every
+    microbatch — the closest Spark equivalent of GlobalKTable live
+    updates (new blocks/words take effect on the next batch).
 
     Returns the started StreamingQuery.
     """
     stream = serde.decode_messages(read_kafka_stream(spark, bootstrap, TOPIC_MESSAGES))
-
-    if not refresh_dims_each_batch:
-        blocked = read_control_table(spark, bootstrap, TOPIC_BLOCKED)
-        words_df = read_control_table(spark, bootstrap, TOPIC_WORDS)
-        words = [r.key for r in words_df.filter(F.col("value") == "ban").collect()]
-        out = serde.encode_messages(filtered_messages(stream, blocked, words))
-        return (
-            out.writeStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap)
-            .option("topic", sink_topic)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
 
     def _kafka_sink(result: DataFrame) -> None:
         (
@@ -145,12 +111,9 @@ def run_reference_topology(
         process_batch_with_refresh(
             batch_df,
             blocked_provider=lambda: read_control_table(spark, bootstrap, TOPIC_BLOCKED),
-            words_provider=lambda: [
-                r.key
-                for r in read_control_table(spark, bootstrap, TOPIC_WORDS)
-                .filter(F.col("value") == "ban")
-                .collect()
-            ],
+            words_provider=lambda: banned_words(
+                read_control_table(spark, bootstrap, TOPIC_WORDS)
+            ),
             sink=lambda df: _kafka_sink(serde.encode_messages(df)),
         )
 
@@ -198,9 +161,9 @@ def run_file_topology_with_refresh(
     checkpoint_dir: str,
     sink: Callable[[DataFrame], None],
 ):
-    """Broker-free twin of ``run_reference_topology(refresh_dims_each_
-    batch=True)``: the SAME per-batch snapshot machinery (changelog
-    compaction through :func:`process_batch_with_refresh`), with parquet
+    """Broker-free twin of :func:`run_reference_topology`: the SAME
+    per-batch snapshot machinery (changelog compaction through
+    :func:`process_batch_with_refresh`), with parquet
     directories standing in for the control topics. A blocked user or
     banned word appended to the control dir while the query runs takes
     effect on the next microbatch — the reference's GlobalKTable
@@ -213,12 +176,7 @@ def run_file_topology_with_refresh(
         process_batch_with_refresh(
             batch_df,
             blocked_provider=lambda: read_control_dir(spark, blocked_dir),
-            words_provider=lambda: [
-                r.key
-                for r in read_control_dir(spark, words_dir)
-                .filter(F.col("value") == "ban")
-                .collect()
-            ],
+            words_provider=lambda: banned_words(read_control_dir(spark, words_dir)),
             sink=sink,
         )
 
@@ -266,7 +224,6 @@ def run_file_topology(
 
 __all__ = [
     "filtered_messages",
-    "filter_pipeline",
     "read_control_dir",
     "read_control_table",
     "read_kafka_stream",

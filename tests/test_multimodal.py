@@ -55,6 +55,49 @@ def test_frame_sample_is_stub(spark):
         frame_sample_stub(df).collect()
 
 
+def test_payload_stage_shapes(spark):
+    """One helper serves every payload stage: a 1:1 row function, a
+    fan-out emitting 0, 1 or 3 rows per payload, empty input
+    partitions, and a row_fn exception that fails the query."""
+    from hw_kafka_streams_spark.operators.multimodal import (
+        payload_stage,
+        synth_stage,
+    )
+
+    rows = [(1, b"a"), (2, b""), (3, b"xyz")]
+    # 3 rows over 5 slices leaves two partitions empty
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 5), "doc_id long, payload binary"
+    )
+    assert 0 in df.rdd.glom().map(len).collect()
+
+    one = payload_stage(df, lambda d, p: [(d, len(p))], "doc_id long, n long")
+    assert sorted(map(tuple, one.collect())) == [(1, 1), (2, 0), (3, 3)]
+
+    fan = payload_stage(
+        df,
+        lambda d, p: [(d, i, p[i : i + 1]) for i in range(len(p))],
+        "doc_id long, idx int, byte binary",
+    )
+    got = sorted((r.doc_id, r.idx, bytes(r.byte)) for r in fan.collect())
+    assert got == [(1, 0, b"a"), (3, 0, b"x"), (3, 1, b"y"), (3, 2, b"z")]
+
+    def bad(d, p):
+        if d == 3:
+            raise ValueError("bad payload 3")
+        return [(d,)]
+
+    with pytest.raises(Exception, match="bad payload 3"):
+        payload_stage(df, bad, "doc_id long").collect()
+
+    ids = spark.createDataFrame([(5,), (7,)], "id long")
+    synth = synth_stage(ids, lambda i: bytes([i]))
+    assert [f.name for f in synth.schema.fields] == ["doc_id", "payload"]
+    assert sorted((r.doc_id, bytes(r.payload)) for r in synth.collect()) == [
+        (5, b"\x05"), (7, b"\x07"),
+    ]
+
+
 def test_decode_schema_stable(spark):
     out = decode_image_meta(_payloads(spark).limit(0))
     assert [f.name for f in out.schema.fields] == [

@@ -50,7 +50,8 @@ _GATE_SUBSET = {
     "q_mlm_mask_plan", "q_bleu_pairs", "q_chrf_pairs",
     "q_bpe_train", "q_bpe_encode",
     "q_multimodal_jpeg", "q_multimodal_flac", "q_multimodal_jls",
-    "q_multimodal_mclv", "q_gorilla_ts_blocks",
+    "q_multimodal_mclv", "q_multimodal_video", "q_multimodal_avi",
+    "q_multimodal_png", "q_gorilla_ts_blocks",
     "q_sequence_pack", "q_data_mixture", "q_dsir_weights",
     "q_gopher_rules", "q_quality_deciles", "q_epoch_repetition_plan",
     "q_corpus_build_e2e", "q_text_quality", "q_censor_documents",

@@ -1871,6 +1871,35 @@ def test_gorilla_rejects_bad_input():
         decode_gorilla(b"nope")
 
 
+def test_gorilla_every_truncation_raises_typed_error():
+    """A block cut at ANY byte raises ValueError('truncated Gorilla
+    block'), never a bare 'negative shift count' or struct.error. The
+    cadence jitter and value mix put cuts inside every delta-of-delta
+    width and every XOR control (repeat, window reuse, new window)."""
+    import numpy as np
+    import pytest
+
+    from hw_kafka_streams_spark.operators.gorillacodec import (
+        decode_gorilla,
+        encode_gorilla,
+    )
+
+    rng = np.random.RandomState(7)
+    n = 200
+    jitter = rng.choice([0, 0, 0, 10, -10, 200, -200, 2000, -2000, 10**9], n)
+    ts = np.cumsum(60_000_000 + jitter).astype(np.int64)
+    vs = np.round(np.cumsum(rng.randn(n)) + 100, 2)
+    vs[rng.rand(n) < 0.3] = 42.5
+    vs[::17] = rng.randn(len(vs[::17])) * 1e9
+    block = encode_gorilla(ts, vs)
+    dts, dvs = decode_gorilla(block)
+    assert np.array_equal(dts, ts)
+    assert np.array_equal(dvs.view(np.uint64), vs.view(np.uint64))
+    for cut in range(len(block)):
+        with pytest.raises(ValueError, match="^truncated Gorilla block$"):
+            decode_gorilla(block[:cut])
+
+
 def test_tiff_jpeg_in_tiff_roundtrip_within_tolerance():
     """Compression 7 (new-style JPEG-in-TIFF): each strip is a full
     JPEG interchange stream decoded through the in-house T.81 codec;
