@@ -218,10 +218,13 @@ def adpcm_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     columns out.  ``sum_samples``/``last_sample`` pin the ENTIRE
     decoded waveform (any wrong nibble, table entry, clamp, or pack
     order changes them), which is what makes the recursive-CTE oracle
-    a bit-exact check of the codec rather than a smoke test."""
+    a bit-exact check of the codec rather than a smoke test. A data
+    chunk with no complete block decodes to no samples, as a partial
+    trailing block does: ``(doc_id, 0, NULL, 0)``."""
 
     def row(doc_id, raw: bytes):
         samples = decode_ima_adpcm_wav(raw)
-        return [(doc_id, len(samples), samples[-1], sum(samples))]
+        last = samples[-1] if samples else None
+        return [(doc_id, len(samples), last, sum(samples))]
 
     return payload_stage(df, row, ADPCM_STATS_SCHEMA, payload_col)

@@ -38,68 +38,7 @@ import struct
 
 import numpy as np
 
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, bits: int) -> None:
-        if bits == 0:
-            return
-        self.acc = (self.acc << bits) | (value & ((1 << bits) - 1))
-        self.nbits += bits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)  # q zeros then a one
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        assert self.nbits == 0
-        return bytes(self.buf)
-
-
-class _BitReader:
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.byte = pos
-        self.bit = 0
-
-    def read(self, bits: int) -> int:
-        v = 0
-        for _ in range(bits):
-            b = (self.data[self.byte] >> (7 - self.bit)) & 1
-            v = (v << 1) | b
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.byte += 1
-        return v
-
-    def read_unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-        return q
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.byte += 1
-
-    def eof(self) -> bool:
-        return self.byte >= len(self.data)
+from hw_kafka_streams_spark.operators.bitio import BitReader, BitWriter
 
 
 def _crc8(data: bytes) -> int:
@@ -150,8 +89,8 @@ def _utf8_code(n: int) -> bytes:
     return bytes(reversed(out))
 
 
-def _utf8_decode(r: "_BitReader") -> int:
-    b0 = r.read(8)
+def _utf8_decode(r: BitReader) -> int:
+    b0 = r.bits(8)
     if b0 < 0x80:
         return b0
     # count leading ones
@@ -161,7 +100,7 @@ def _utf8_decode(r: "_BitReader") -> int:
         m >>= 1
     v = b0 & (0x7F >> nbytes)
     for _ in range(nbytes - 1):
-        v = (v << 6) | (r.read(8) & 0x3F)
+        v = (v << 6) | (r.bits(8) & 0x3F)
     return v
 
 
@@ -210,7 +149,7 @@ def _sbits(v: int) -> int:
     return (v.bit_length() if v >= 0 else (-v - 1).bit_length()) + 1
 
 
-def _write_residual_partition(w: "_BitWriter", res: np.ndarray) -> None:
+def _write_residual_partition(w: BitWriter, res: np.ndarray) -> None:
     """One Rice partition: 4-bit parameter + zigzag Rice codes, OR the
     0b1111 escape (5-bit raw width, two's-complement residuals) when
     raw coding is cheaper — large uniform residuals (e.g. noise near
@@ -234,7 +173,7 @@ def _write_residual_partition(w: "_BitWriter", res: np.ndarray) -> None:
         return
     w.write(k, 4)
     for q, low in zip((u >> k).tolist(), (u & ((1 << k) - 1)).tolist()):
-        w.write_unary(q)
+        w.unary(q)
         w.write(low, k)
 
 
@@ -250,11 +189,11 @@ def _wasted_bits(blk: np.ndarray, bps: int) -> int:
     return min(k, bps - 1)
 
 
-def _write_wasted(w: "_BitWriter", k: int) -> None:
+def _write_wasted(w: BitWriter, k: int) -> None:
     """Subframe wasted-bits field: flag 0, or flag 1 + unary(k-1)."""
     if k:
         w.write(1, 1)
-        w.write_unary(k - 1)
+        w.unary(k - 1)
     else:
         w.write(0, 1)
 
@@ -336,7 +275,7 @@ def encode_flac(
     out = bytearray(b"fLaC")
     # STREAMINFO: last-block flag + type 0, length 34
     out += bytes([0x80, 0, 0, 34])
-    si = _BitWriter()
+    si = BitWriter()
     si.write(min_bs, 16)  # min block size
     si.write(max_bs, 16)  # max block size
     si.write(0, 24)  # min frame size unknown
@@ -345,7 +284,7 @@ def encode_flac(
     si.write(channels - 1, 3)
     si.write(bps - 1, 5)
     si.write(n_total, 36)
-    out += si.bytes() + md5
+    out += si.out + md5
 
     if block_schedule is not None:
         start = idx = 0
@@ -422,7 +361,7 @@ def _encode_frame(
     else:
         chan_code = channels - 1
         subs = [(blk[:, c], 0) for c in range(channels)]
-    w = _BitWriter()
+    w = BitWriter()
     w.write(0x3FFE, 14)  # sync
     w.write(0, 1)  # reserved
     # blocking strategy: 1 = variable (frame_no is a SAMPLE number)
@@ -438,21 +377,17 @@ def _encode_frame(
     w.write(chan_code, 4)
     w.write(_SS_CODE[bps], 3)
     w.write(0, 1)  # reserved
-    # header so far is exactly 4 bytes (32 bits) — safe to snapshot
-    head = bytearray(w.buf)
-    head += _utf8_code(frame_no)
+    # header so far is exactly 4 bytes (32 bits) — safe to append bytes
+    w.out += _utf8_code(frame_no)
     if bs_tail is not None:
-        head += bytes([bs_tail]) if bs_code == 0b0110 else struct.pack(
+        w.out += bytes([bs_tail]) if bs_code == 0b0110 else struct.pack(
             ">H", bs_tail
         )
-    head.append(_crc8(bytes(head)))
-
-    body = _BitWriter()
-    body.buf = bytearray(head)
+    w.out.append(_crc8(bytes(w.out)))
     for ch, extra in subs:
-        _encode_subframe(body, ch, bps + extra, lpc_order)
-    body.align()
-    frame = bytes(body.buf)
+        _encode_subframe(w, ch, bps + extra, lpc_order)
+    w.flush()
+    frame = bytes(w.out)
     return frame + struct.pack(">H", _crc16(frame))
 
 
@@ -476,7 +411,7 @@ def _lpc_quantized(blk: np.ndarray, order: int, prec: int = 12, shift: int = 10)
 
 
 def _encode_subframe(
-    w: "_BitWriter", blk: np.ndarray, bps: int, lpc_order: int = 0
+    w: BitWriter, blk: np.ndarray, bps: int, lpc_order: int = 0
 ) -> None:
     n = len(blk)
     mask = (1 << bps) - 1
@@ -497,7 +432,7 @@ def _encode_subframe(
 
 
 def _encode_shifted_subframe(
-    w: "_BitWriter", blk: np.ndarray, bps: int, wasted: int,
+    w: BitWriter, blk: np.ndarray, bps: int, wasted: int,
     lpc_order: int = 0,
 ) -> None:
     n = len(blk)
@@ -572,7 +507,8 @@ def decode_flac(data: bytes) -> tuple[np.ndarray, int]:
     otherwise; dtype int16 when bps <= 16, int32 above. Handles all
     four stereo channel assignments, 8/12/16/20/24/32-bit depths and
     up to 8 independent channels. Validates the magic, both frame
-    CRCs, and the STREAMINFO MD5 of the decoded stream.
+    CRCs, and the STREAMINFO MD5 of the decoded stream. A stream that
+    ends before STREAMINFO's sample count raises ``CodecError``.
     """
     if data[:4] != b"fLaC":
         raise ValueError("not a FLAC file (bad magic)")
@@ -588,15 +524,15 @@ def decode_flac(data: bytes) -> tuple[np.ndarray, int]:
         length = int.from_bytes(data[pos + 1 : pos + 4], "big")
         body = data[pos + 4 : pos + 4 + length]
         if btype == 0:
-            r = _BitReader(body)
-            r.read(16)
-            r.read(16)
-            r.read(24)
-            r.read(24)
-            sr = r.read(20)
-            channels = r.read(3) + 1
-            bps = r.read(5) + 1
-            n_total = r.read(36)
+            r = BitReader(body)
+            r.bits(16)
+            r.bits(16)
+            r.bits(24)
+            r.bits(24)
+            sr = r.bits(20)
+            channels = r.bits(3) + 1
+            bps = r.bits(5) + 1
+            n_total = r.bits(36)
             md5_expect = body[18:34]
             if channels > 8:
                 raise NotImplementedError(f"{channels} channels unsupported")
@@ -611,7 +547,7 @@ def decode_flac(data: bytes) -> tuple[np.ndarray, int]:
     out: list[np.ndarray] = []
     got = n_frames = 0
     stream_variable: bool | None = None
-    while got < n_total and pos < len(data):
+    while got < n_total:
         blk, pos, variable, coded_no = _decode_frame(data, pos, bps, channels)
         if stream_variable is None:
             stream_variable = variable
@@ -654,16 +590,16 @@ _SR_TABLE = {
 def _decode_frame(
     data: bytes, pos: int, si_bps: int, si_channels: int
 ) -> tuple[np.ndarray, int]:
-    r = _BitReader(data, pos)
-    if r.read(14) != 0x3FFE:
+    r = BitReader(data, pos)
+    if r.bits(14) != 0x3FFE:
         raise ValueError(f"bad frame sync at byte {pos}")
-    r.read(1)
-    variable = r.read(1)  # blocking strategy
-    bs_code = r.read(4)
-    sr_code = r.read(4)
-    chan = r.read(4)
-    ss_code = r.read(3)
-    r.read(1)
+    r.bits(1)
+    variable = r.bits(1)  # blocking strategy
+    bs_code = r.bits(4)
+    sr_code = r.bits(4)
+    chan = r.bits(4)
+    ss_code = r.bits(3)
+    r.bits(1)
     if chan <= 7:
         channels, assign = chan + 1, "independent"
     elif chan == _CH_LEFT_SIDE:
@@ -684,17 +620,17 @@ def _decode_frame(
         raise ValueError(f"reserved sample-size code {ss_code:03b}")
     coded_no = _utf8_decode(r)
     if bs_code == 0b0110:
-        bs = r.read(8) + 1
+        bs = r.bits(8) + 1
     elif bs_code == 0b0111:
-        bs = r.read(16) + 1
+        bs = r.bits(16) + 1
     else:
         bs = _BS_TABLE[bs_code]
     if sr_code == 0b1100:
-        r.read(8)
+        r.bits(8)
     elif sr_code in (0b1101, 0b1110):
-        r.read(16)
-    header_end = r.byte
-    if _crc8(data[pos:header_end]) != r.read(8):
+        r.bits(16)
+    header_end = r.pos
+    if _crc8(data[pos:header_end]) != r.bits(8):
         raise ValueError("frame header CRC-8 mismatch")
     if assign == "independent":
         chans = [_decode_subframe(r, bs, bps) for _ in range(channels)]
@@ -710,24 +646,22 @@ def _decode_frame(
         m2 = (mid << 1) | (side & 1)
         chans = [(m2 + side) >> 1, (m2 - side) >> 1]
     r.align()
-    frame_end = r.byte
-    crc = struct.unpack(">H", data[frame_end : frame_end + 2])[0]
-    if _crc16(data[pos:frame_end]) != crc:
+    if _crc16(data[pos : r.pos]) != r.bits(16):
         raise ValueError("frame CRC-16 mismatch")
-    return np.stack(chans, axis=1), frame_end + 2, bool(variable), coded_no
+    return np.stack(chans, axis=1), r.pos, bool(variable), coded_no
 
 
 def _signed(v: int, bits: int) -> int:
     return v - (1 << bits) if v & (1 << (bits - 1)) else v
 
 
-def _decode_subframe(r: "_BitReader", n: int, bps: int) -> np.ndarray:
-    if r.read(1) != 0:
+def _decode_subframe(r: BitReader, n: int, bps: int) -> np.ndarray:
+    if r.bits(1) != 0:
         raise ValueError("subframe padding bit set")
-    t = r.read(6)
+    t = r.bits(6)
     wasted = 0
-    if r.read(1):  # wasted-bits flag: k-1 unary coded
-        wasted = r.read_unary() + 1
+    if r.bits(1):  # wasted-bits flag: k-1 unary coded
+        wasted = r.unary() + 1
         if wasted >= bps:
             raise ValueError("wasted bits exceed sample width")
         bps -= wasted
@@ -736,17 +670,17 @@ def _decode_subframe(r: "_BitReader", n: int, bps: int) -> np.ndarray:
 
 
 def _decode_subframe_body(
-    r: "_BitReader", n: int, bps: int, t: int
+    r: BitReader, n: int, bps: int, t: int
 ) -> np.ndarray:
     if t == 0:  # CONSTANT
-        return np.full(n, _signed(r.read(bps), bps), np.int64)
+        return np.full(n, _signed(r.bits(bps), bps), np.int64)
     if t == 1:  # VERBATIM
         return np.array(
-            [_signed(r.read(bps), bps) for _ in range(n)], np.int64
+            [_signed(r.bits(bps), bps) for _ in range(n)], np.int64
         )
     if 8 <= t <= 12:  # FIXED order 0-4
         order = t - 8
-        warm = [_signed(r.read(bps), bps) for _ in range(order)]
+        warm = [_signed(r.bits(bps), bps) for _ in range(order)]
         res = _decode_residual(r, n, order)
         out = np.empty(n, np.int64)
         out[:order] = warm
@@ -757,14 +691,14 @@ def _decode_subframe_body(
         return out
     if t & 0x20:  # LPC, order 1-32
         order = (t & 0x1F) + 1
-        warm = [_signed(r.read(bps), bps) for _ in range(order)]
-        prec = r.read(4) + 1
+        warm = [_signed(r.bits(bps), bps) for _ in range(order)]
+        prec = r.bits(4) + 1
         if prec == 16:
             raise ValueError("invalid LPC precision code 1111")
-        shift = _signed(r.read(5), 5)
+        shift = _signed(r.bits(5), 5)
         if shift < 0:
             raise ValueError("negative LPC shift")
-        qc = [_signed(r.read(prec), prec) for _ in range(order)]
+        qc = [_signed(r.bits(prec), prec) for _ in range(order)]
         res = _decode_residual(r, n, order)
         out = np.empty(n, np.int64)
         out[:order] = warm
@@ -775,25 +709,25 @@ def _decode_subframe_body(
     raise NotImplementedError(f"reserved subframe type {t:06b}")
 
 
-def _decode_residual(r: "_BitReader", n: int, order: int) -> list[int]:
-    method = r.read(2)
+def _decode_residual(r: BitReader, n: int, order: int) -> list[int]:
+    method = r.bits(2)
     if method not in (0, 1):
         raise ValueError("reserved residual coding method")
     pbits = 4 if method == 0 else 5
     escape = (1 << pbits) - 1
-    porder = r.read(4)
+    porder = r.bits(4)
     res: list[int] = []
     nparts = 1 << porder
     for part in range(nparts):
         cnt = (n >> porder) - (order if part == 0 else 0)
-        k = r.read(pbits)
+        k = r.bits(pbits)
         if k == escape:
-            raw = r.read(5)
-            vals = [_signed(r.read(raw), raw) if raw else 0 for _ in range(cnt)]
+            raw = r.bits(5)
+            vals = [_signed(r.bits(raw), raw) if raw else 0 for _ in range(cnt)]
             res.extend(vals)
             continue
         for _ in range(cnt):
-            q = r.read_unary()
-            u = (q << k) | (r.read(k) if k else 0)
+            q = r.unary()
+            u = (q << k) | (r.bits(k) if k else 0)
             res.append((u >> 1) ^ -(u & 1))
     return res

@@ -144,7 +144,7 @@ def _lzw_decode(stream: bytes, min_code: int, expect: int) -> list[int]:
 
     table, width = reset()
     out: list[int] = []
-    acc = nbits = 0
+    acc = nbits = 0  # LSB-first, so not bitio's MSB-first reader
     prev: bytes | None = None
     for byte in stream:
         acc |= byte << nbits
@@ -192,7 +192,7 @@ def _lzw_encode(data: bytes, min_code: int = 8) -> bytes:
     (4096), per the spec."""
     clear = 1 << min_code
     end = clear + 1
-    acc = nbits = 0
+    acc = nbits = 0  # LSB-first, so not bitio's MSB-first writer
     out = bytearray()
 
     def put(code: int, width: int) -> None:

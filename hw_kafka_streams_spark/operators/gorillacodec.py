@@ -38,7 +38,7 @@ import struct
 
 import numpy as np
 
-from hw_kafka_streams_spark.operators.mcvideo import _BitReader, _BitWriter
+from hw_kafka_streams_spark.operators.bitio import BitWriter, CodecError
 
 _MAGIC = b"GOR1"
 
@@ -220,7 +220,7 @@ def _encode_gorilla_scalar(ts: np.ndarray, values: np.ndarray,
     (spans ≥ 2^62 can wrap int64 delta arithmetic) and the keeper of
     the zigzag-overflow guards. ``out`` already holds magic + count."""
     n = len(ts)
-    bw = _BitWriter()
+    bw = BitWriter()
     bits = values.view(np.uint64)
     # first point: raw
     bw.write(int(ts[0]) & ((1 << 64) - 1), 64)
@@ -297,17 +297,18 @@ def decode_gorilla(data: bytes) -> tuple[np.ndarray, np.ndarray]:
     Python loop — but a lean one: a local-variable accumulator refilled
     24 bytes at a time via ``int.from_bytes`` (the worst-case per-point
     consumption is 145 bits), control branches inlined, and outputs
-    appended to plain lists. ~4x faster per point than the previous
-    byte-at-a-time ``_BitReader`` object (round-12 measurement).
+    appended to plain lists. ~4x faster per point than a byte-at-a-time
+    reader object (round-12 measurement), which is why this loop does
+    not use ``bitio.BitReader``.
 
-    A block cut short anywhere raises ``ValueError('truncated Gorilla
+    A block cut short anywhere raises ``CodecError('truncated Gorilla
     block')``. The loop itself does no bounds checks (it is the hot
     path): a read past the end drives the bit count ``nb`` negative,
     the next shift fails, and that one failure is translated below."""
     if not _MAGIC.startswith(data[:4]):
         raise ValueError("not a Gorilla block")
     if len(data) < 8:
-        raise ValueError("truncated Gorilla block")
+        raise CodecError("truncated Gorilla block")
     (n,) = struct.unpack(">I", data[4:8])
     if n == 0:
         return np.empty(0, np.int64), np.empty(0, np.float64)
@@ -319,7 +320,7 @@ def decode_gorilla(data: bytes) -> tuple[np.ndarray, np.ndarray]:
     while nb < 128:
         chunk = data[pos:pos + 8]
         if not chunk:
-            raise ValueError("truncated Gorilla block")
+            raise CodecError("truncated Gorilla block")
         acc = (acc << (8 * len(chunk))) | int.from_bytes(chunk, "big")
         nb += 8 * len(chunk)
         pos += 8
@@ -388,7 +389,7 @@ def decode_gorilla(data: bytes) -> tuple[np.ndarray, np.ndarray]:
             acc &= (1 << nb) - 1
     except ValueError:
         if nb < 0:  # read past the end of the data
-            raise ValueError("truncated Gorilla block") from None
+            raise CodecError("truncated Gorilla block") from None
         raise
     ts = np.array(ts_out, np.int64)
     vals = np.array(v_out, dtype=np.uint64)

@@ -60,6 +60,8 @@ import struct
 
 import numpy as np
 
+from hw_kafka_streams_spark.operators.bitio import T87BitReader, T87BitWriter
+
 _J = [
     0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3,
     4, 4, 5, 5, 6, 6, 7, 7, 8, 9, 10, 11, 12, 13, 14, 15,
@@ -216,97 +218,22 @@ def _med_predict(a: int, b: int, c: int) -> int:
     return a + b - c
 
 
-class _StuffWriter:
-    """MSB-first bit writer with T.87 marker-avoidance stuffing: after
-    an emitted 0xFF byte the next byte carries only 7 payload bits."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self._acc = 0
-        self._n = 0  # bits in acc
-        self._cap = 8
-
-    def _cap_now(self) -> int:
-        return 7 if self.out and self.out[-1] == 0xFF else 8
-
-    def write(self, value: int, nbits: int) -> None:
-        for i in range(nbits - 1, -1, -1):
-            self._acc = (self._acc << 1) | ((value >> i) & 1)
-            self._n += 1
-            if self._n == self._cap:
-                self.out.append(self._acc)
-                self._acc = 0
-                self._n = 0
-                self._cap = self._cap_now()
-
-    def write_unary(self, n_zero: int) -> None:
-        """``n_zero`` 0-bits then a 1-bit (the T.87 unary prefix)."""
-        for _ in range(n_zero):
-            self.write(0, 1)
-        self.write(1, 1)
-
-    def flush(self) -> None:
-        if self._n:
-            self.out.append(self._acc << (self._cap - self._n))
-            self._acc = 0
-            self._n = 0
-            self._cap = self._cap_now()
-
-
-class _StuffReader:
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self._acc = 0
-        self._n = 0
-        self._prev_ff = False
-
-    def _fill(self) -> None:
-        b = self.data[self.pos]
-        self.pos += 1
-        if self._prev_ff:
-            self._acc = (self._acc << 7) | (b & 0x7F)
-            self._n += 7
-        else:
-            self._acc = (self._acc << 8) | b
-            self._n += 8
-        self._prev_ff = b == 0xFF
-
-    def bit(self) -> int:
-        if self._n == 0:
-            self._fill()
-        self._n -= 1
-        return (self._acc >> self._n) & 1
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-    def unary(self) -> int:
-        n = 0
-        while self.bit() == 0:
-            n += 1
-        return n
-
-
-def _lg_encode(bw: _StuffWriter, merr: int, k: int, limit: int, qbpp: int) -> None:
+def _lg_encode(bw: T87BitWriter, merr: int, k: int, limit: int, qbpp: int) -> None:
     """Limited-length Golomb LG(k, limit) (A.5.3)."""
     hi = merr >> k
     if hi < limit - qbpp - 1:
-        bw.write_unary(hi)
+        bw.unary(hi)
         if k:
             bw.write(merr & ((1 << k) - 1), k)
     else:
-        bw.write_unary(limit - qbpp - 1)
+        bw.unary(limit - qbpp - 1)
         bw.write(merr - 1, qbpp)
 
 
-def _lg_decode(br: _StuffReader, k: int, limit: int, qbpp: int) -> int:
+def _lg_decode(br: T87BitReader, k: int, limit: int, qbpp: int) -> int:
     hi = br.unary()
     if hi < limit - qbpp - 1:
-        return (hi << k) | (br.bits(k) if k else 0)
+        return (hi << k) | br.bits(k)
     return br.bits(qbpp) + 1
 
 
@@ -487,7 +414,7 @@ def _encode_plane(
     """One complete single-component scan (fresh coder state)."""
     h, w = px.shape
     st = _State(maxval, near, t1, t2, t3, reset)
-    bw = _StuffWriter()
+    bw = T87BitWriter()
     # context/prediction state reads the RECONSTRUCTED plane (== the
     # source when near == 0) so the decoder can replay it exactly
     rec = np.zeros((h, w), np.int64)
@@ -510,7 +437,7 @@ def _encode_interleaved(
         maxval, near, t1, t2, t3, reset,
         n_run_indexes=ncomp if ilv == 1 else 1,
     )
-    bw = _StuffWriter()
+    bw = T87BitWriter()
     recs = [np.zeros((h, w), np.int64) for _ in range(ncomp)]
     for r in range(h):
         if ilv == 1:
@@ -777,7 +704,7 @@ def _decode_scan(
     stp: dict | None = None,
 ):
     st = _State(maxval, near, **(stp or {}))
-    br = _StuffReader(data, pos)
+    br = T87BitReader(data, pos)
     px = np.zeros((h, w), np.int64)
     for r in range(h):
         _decode_line(br, st, px, r, w)
@@ -793,7 +720,7 @@ def _decode_interleaved(
         maxval, near, **(stp or {}),
         n_run_indexes=ncomp if ilv == 1 else 1,
     )
-    br = _StuffReader(data, pos)
+    br = T87BitReader(data, pos)
     recs = [np.zeros((h, w), np.int64) for _ in range(ncomp)]
     for r in range(h):
         if ilv == 1:

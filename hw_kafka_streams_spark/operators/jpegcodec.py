@@ -65,6 +65,12 @@ import struct
 
 import numpy as np
 
+from hw_kafka_streams_spark.operators.bitio import (
+    CodecError,
+    JpegBitReader,
+    JpegBitWriter,
+)
+
 # ----------------------------------------------------------------- tables
 # Annex K (informative) example tables of ITU T.81 — public spec text.
 
@@ -199,64 +205,25 @@ class _HuffDecoder:
                 self.maxcode[length] = code - 1
             code <<= 1
 
-    def decode(self, br: "_BitReader") -> int:
-        code = br.read_bit()
+    def decode(self, br: JpegBitReader) -> int:
+        code = br.bit()
         length = 1
         while code > self.maxcode[length]:
             length += 1
             if length > 16:
                 raise ValueError("corrupt JPEG: huffman code over 16 bits")
-            code = (code << 1) | br.read_bit()
+            code = (code << 1) | br.bit()
         return self.vals[self.valptr[length] + code - self.mincode[length]]
 
 
-class _BitReader:
-    """MSB-first bit reader over entropy-coded data with 0xFF00
-    unstuffing; marker bytes (0xFF followed by non-zero) end the scan."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.nbits = 0
-
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            if self.pos >= len(self.data):
-                raise ValueError("corrupt JPEG: ran out of entropy data")
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                nxt = self.data[self.pos] if self.pos < len(self.data) else 0xD9
-                if nxt == 0x00:
-                    self.pos += 1  # stuffed
-                else:
-                    raise ValueError("corrupt JPEG: marker inside scan")
-            self.acc = b
-            self.nbits = 8
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
-    def receive(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def sync_restart(self) -> int:
-        """Consume an RSTn marker at a restart boundary: discard the
-        current byte's remaining pad bits, then expect FFD0-FFD7.
-        Returns n (0-7) for interval-order validation."""
-        self.nbits = 0  # restart markers are byte-aligned
-        if (
-            self.pos + 1 >= len(self.data)
-            or self.data[self.pos] != 0xFF
-            or not (0xD0 <= self.data[self.pos + 1] <= 0xD7)
-        ):
-            raise ValueError("corrupt JPEG: expected restart marker")
-        n = self.data[self.pos + 1] - 0xD0
-        self.pos += 2
-        return n
+def _sync_restart(br: JpegBitReader) -> None:
+    """Consume an RSTn marker at a restart boundary: discard the
+    current byte's remaining pad bits, then expect FFD0-FFD7."""
+    br.align()  # restart markers are byte-aligned
+    d, p = br.data, br.pos
+    if p + 1 >= len(d) or d[p] != 0xFF or not 0xD0 <= d[p + 1] <= 0xD7:
+        raise CodecError("corrupt JPEG: expected restart marker")
+    br.pos = p + 2
 
 
 def _extend(v: int, s: int) -> int:
@@ -446,7 +413,7 @@ def _decode_block(br, dc_dec, ac_dec, qtab, pred):
     Returns (pixels, new_dc_pred)."""
     dct = np.zeros(64)
     s = dc_dec.decode(br)
-    pred += _extend(br.receive(s), s)
+    pred += _extend(br.bits(s), s)
     dct[0] = pred
     k = 1
     while k < 64:
@@ -460,7 +427,7 @@ def _decode_block(br, dc_dec, ac_dec, qtab, pred):
         k += r
         if k > 63:
             raise ValueError("corrupt JPEG: AC index overflow")
-        dct[k] = _extend(br.receive(size), size)
+        dct[k] = _extend(br.bits(size), size)
         k += 1
     blk = np.zeros((8, 8))
     blk[_ZZ_ROWS, _ZZ_COLS] = dct
@@ -484,7 +451,7 @@ def _decode_scan(data, pos, frame, comp_tables, qtables, huff_dc, huff_ac,
     vmax = max(c[2] for c in comps)
     mcux = (w + 8 * hmax - 1) // (8 * hmax)
     mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    br = _BitReader(data, pos)
+    br = JpegBitReader(data, pos)
     # per-component plane at ITS OWN resolution (subsampled chroma
     # stays small until the upsample step)
     planes = [
@@ -498,7 +465,7 @@ def _decode_scan(data, pos, frame, comp_tables, qtables, huff_dc, huff_ac,
                 # T.81 restart: byte-align, consume RSTn, reset DC
                 # predictions (each restart interval decodes
                 # independently — the error-resilience point of DRI)
-                br.sync_restart()
+                _sync_restart(br)
                 pred = [0] * len(comps)
             mcu_done += 1
             for ci, (cid, hs, vs, tq) in enumerate(comps):
@@ -552,31 +519,6 @@ def _planes_to_rgb(comps, planes, h, w, hmax, vmax, precision=8) -> np.ndarray:
 # ----------------------------------------------------------------- encode
 
 
-class _BitWriter:
-    def __init__(self):
-        self.bytes = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, size: int) -> None:
-        for i in range(size - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((code >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.bytes.append(self.acc)
-                if self.acc == 0xFF:
-                    self.bytes.append(0x00)  # byte stuffing
-                self.acc, self.nbits = 0, 0
-
-    def flush(self) -> None:
-        if self.nbits:
-            self.acc <<= 8 - self.nbits  # pad with 0s (1s also legal)
-            self.bytes.append(self.acc)
-            if self.acc == 0xFF:
-                self.bytes.append(0x00)
-            self.acc, self.nbits = 0, 0
-
-
 def _csize(v: int) -> int:
     """DC/AC category: bit length of |v| (0 for 0)."""
     return int(abs(v)).bit_length()
@@ -604,7 +546,7 @@ def rgb_to_ycbcr_int(rgb: np.ndarray) -> np.ndarray:
     ).astype(np.int32)
 
 
-def _write_seq_block(bw_: _BitWriter, zz: np.ndarray, pred: int,
+def _write_seq_block(bw_: JpegBitWriter, zz: np.ndarray, pred: int,
                      dc_codes, ac_codes) -> int:
     """Huffman-write one QUANTIZED zigzag block (T.81 F.1.2): DC DIFF
     against ``pred`` (pass 0 in differential frames — F.1.1.5.1 pins
@@ -638,7 +580,7 @@ def _write_seq_block(bw_: _BitWriter, zz: np.ndarray, pred: int,
     return int(zz[0])
 
 
-def _encode_block(bw_: _BitWriter, blk: np.ndarray, q: np.ndarray,
+def _encode_block(bw_: JpegBitWriter, blk: np.ndarray, q: np.ndarray,
                   pred: int, dc_codes, ac_codes,
                   level: float = 128.0) -> int:
     # _quantize_block_zz keeps the exact-DC separation (S00 = sum/8);
@@ -718,7 +660,7 @@ def encode_baseline_jpeg(
     ac_l = _build_codes(AC_LUM_BITS, AC_LUM_VALS)
     dc_c = _build_codes(DC_CHROM_BITS, DC_CHROM_VALS)
     ac_c = _build_codes(AC_CHROM_BITS, AC_CHROM_VALS)
-    bw_ = _BitWriter()
+    bw_ = JpegBitWriter()
     pred = [0, 0, 0]
     tabs = [(QUANT_LUM, dc_l, ac_l), (QUANT_CHROM, dc_c, ac_c),
             (QUANT_CHROM, dc_c, ac_c)]
@@ -727,7 +669,7 @@ def encode_baseline_jpeg(
         for mx in range(mcux):
             if restart_interval and mcu_done and mcu_done % restart_interval == 0:
                 bw_.flush()  # markers are byte-aligned, never stuffed
-                bw_.bytes.extend(bytes([0xFF, 0xD0 + rst_n % 8]))
+                bw_.out.extend(bytes([0xFF, 0xD0 + rst_n % 8]))
                 rst_n += 1
                 pred = [0, 0, 0]
             mcu_done += 1
@@ -742,7 +684,7 @@ def encode_baseline_jpeg(
                             bw_, blk, q, pred[ci], dcc, acc_
                         )
     bw_.flush()
-    out.extend(bw_.bytes)
+    out.extend(bw_.out)
     out.extend(b"\xff\xd9")  # EOI
     return bytes(out)
 
@@ -790,14 +732,14 @@ def encode_baseline_jpeg_gray(gray: np.ndarray) -> bytes:
     seg(0xDA, b"\x01" + bytes([1, 0x00]) + b"\x00\x3f\x00")
     dc_l = _build_codes(DC_LUM_BITS, DC_LUM_VALS)
     ac_l = _build_codes(AC_LUM_BITS, AC_LUM_VALS)
-    bw_ = _BitWriter()
+    bw_ = JpegBitWriter()
     pred = 0
     for by in range(bh):
         for bx in range(bw2):
             blk = plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
             pred = _encode_block(bw_, blk, QUANT_LUM, pred, dc_l, ac_l)
     bw_.flush()
-    out.extend(bw_.bytes)
+    out.extend(bw_.out)
     out.extend(b"\xff\xd9")
     return bytes(out)
 
@@ -864,7 +806,7 @@ def encode_extended_jpeg_gray12(gray: np.ndarray) -> bytes:
     seg(0xDA, b"\x01" + bytes([1, 0x00]) + b"\x00\x3f\x00")
     dc_c = _build_codes(DC_EXT12_BITS, DC_EXT12_VALS)
     ac_c = _build_codes(AC_EXT12_BITS, AC_EXT12_VALS)
-    bw_ = _BitWriter()
+    bw_ = JpegBitWriter()
     pred = 0
     for by in range(bh):
         for bx in range(bw2):
@@ -873,7 +815,7 @@ def encode_extended_jpeg_gray12(gray: np.ndarray) -> bytes:
                 bw_, blk, QUANT_LUM12, pred, dc_c, ac_c, level=2048.0
             )
     bw_.flush()
-    out.extend(bw_.bytes)
+    out.extend(bw_.out)
     out.extend(b"\xff\xd9")
     return bytes(out)
 
@@ -1004,14 +946,14 @@ def _prog_scan(data, pos, frame, geo, coefs, scomps, ss, se, ah, al,
     """Decode one progressive scan; returns the stream position of the
     next marker. Restart intervals reset DC predictions and the EOB
     run (each interval decodes independently)."""
-    br = _BitReader(data, pos)
+    br = JpegBitReader(data, pos)
     state = {"eobrun": 0}
     pred = {ci: 0 for ci, _, _ in scomps}
     h, w, comps = frame
 
     def maybe_restart(done):
         if dri and done and done % dri == 0:
-            br.sync_restart()
+            _sync_restart(br)
             state["eobrun"] = 0
             for k in pred:
                 pred[k] = 0
@@ -1068,10 +1010,10 @@ def _prog_scan(data, pos, frame, geo, coefs, scomps, ss, se, ah, al,
 def _dc_unit(br, coef, by, bx, ah, al, dc_dec, pred, ci):
     if ah == 0:  # first DC scan: diff-coded, shifted left by Al
         s = dc_dec.decode(br)
-        pred[ci] += _extend(br.receive(s), s)
+        pred[ci] += _extend(br.bits(s), s)
         coef[by, bx, 0] = pred[ci] << al
     else:  # refinement: one raw bit ORs in the Al-th magnitude bit
-        if br.read_bit():
+        if br.bit():
             coef[by, bx, 0] |= 1 << al
 
 
@@ -1089,12 +1031,12 @@ def _ac_first_block(br, blk, ss, se, al, ac, state):
                 continue
             state["eobrun"] = (1 << r) - 1
             if r:
-                state["eobrun"] += br.receive(r)
+                state["eobrun"] += br.bits(r)
             break
         k += r
         if k > se:
             raise ValueError("corrupt JPEG: AC index past Se")
-        blk[k] = _extend(br.receive(s), s) * (1 << al)
+        blk[k] = _extend(br.bits(s), s) * (1 << al)
         k += 1
 
 
@@ -1110,17 +1052,17 @@ def _ac_refine_block(br, blk, ss, se, al, ac, state):
                 if r != 15:
                     state["eobrun"] = 1 << r
                     if r:
-                        state["eobrun"] += br.receive(r)
+                        state["eobrun"] += br.bits(r)
                     break
                 val = 0  # ZRL: pass 16 zero-history positions
             else:
                 if s != 1:
                     raise ValueError("corrupt JPEG: refine size != 1")
-                val = p1 if br.read_bit() else m1
+                val = p1 if br.bit() else m1
             while k <= se:
                 if blk[k] != 0:
                     # correction bit for an already-nonzero coefficient
-                    if br.read_bit() and (blk[k] & p1) == 0:
+                    if br.bit() and (blk[k] & p1) == 0:
                         blk[k] += p1 if blk[k] >= 0 else m1
                 else:
                     if r == 0:
@@ -1132,7 +1074,7 @@ def _ac_refine_block(br, blk, ss, se, al, ac, state):
             k += 1
     if state["eobrun"] > 0:
         while k <= se:
-            if blk[k] != 0 and br.read_bit() and (blk[k] & p1) == 0:
+            if blk[k] != 0 and br.bit() and (blk[k] & p1) == 0:
                 blk[k] += p1 if blk[k] >= 0 else m1
             k += 1
         state["eobrun"] -= 1
@@ -1296,7 +1238,7 @@ def encode_progressive_jpeg(rgb: np.ndarray) -> bytes:
             hdr += bytes([ci + 1, tsel << 4])
         hdr += bytes([0, 0, (ah << 4) | al])
         seg(0xDA, hdr)
-        bw_ = _BitWriter()
+        bw_ = JpegBitWriter()
         pred = [0, 0, 0]
         for by in range(nby):
             for bx in range(nbx):
@@ -1309,19 +1251,19 @@ def encode_progressive_jpeg(rgb: np.ndarray) -> bytes:
                     else:
                         bw_.write((int(coefs[ci][by, bx, 0]) >> al) & 1, 1)
         bw_.flush()
-        out.extend(bw_.bytes)
+        out.extend(bw_.out)
 
     def ac_scan(ci, ss, se, ah, al):
         tsel = 0 if ci == 0 else 1
         hdr = b"\x01" + bytes([ci + 1, tsel]) + bytes([ss, se, (ah << 4) | al])
         seg(0xDA, hdr)
-        bw_ = _BitWriter()
+        bw_ = JpegBitWriter()
         enc = _enc_ac_first if ah == 0 else _enc_ac_refine
         for by in range(nby):
             for bx in range(nbx):
                 enc(bw_, coefs[ci][by, bx], ss, se, al, ac_codes[tsel])
         bw_.flush()
-        out.extend(bw_.bytes)
+        out.extend(bw_.out)
 
     dc_scan(0, 1)
     ac_scan(0, 1, 5, 0, 1)
@@ -1422,7 +1364,7 @@ def encode_lossless_jpeg(
     sos = bytes([1, 1, 0x00, predictor, 0, 0x00])
     out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
 
-    bw = _BitWriter()
+    bw = JpegBitWriter()
     for r in range(h):
         for cpos in range(w):
             pred = _ll_predict(r, cpos, px, predictor, default)
@@ -1439,7 +1381,7 @@ def encode_lossless_jpeg(
             if s:
                 bw.write(d if d >= 0 else d + (1 << s) - 1, s)
     bw.flush()
-    out += bw.bytes
+    out += bw.out
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
@@ -1507,7 +1449,7 @@ def decode_lossless_jpeg(data: bytes) -> tuple[np.ndarray, int]:
             precision, h, w = frame
             default = 1 << (precision - 1)
             dec = huff[table]
-            br = _BitReader(data, pos + seglen)
+            br = JpegBitReader(data, pos + seglen)
             px = np.zeros((h, w), np.int64)
             for r in range(h):
                 for cpos in range(w):
@@ -1515,7 +1457,7 @@ def decode_lossless_jpeg(data: bytes) -> tuple[np.ndarray, int]:
                     if s == 16:
                         d = 32768  # category 16 carries no extra bits
                     else:
-                        d = _extend(br.receive(s), s)
+                        d = _extend(br.bits(s), s)
                     pred = _ll_predict(r, cpos, px, predictor, default)
                     px[r, cpos] = (pred + d) & 0xFFFF
             if px.max() >= (1 << precision):
@@ -2609,7 +2551,7 @@ def _dct_code_plane(
         ((0, bh * 8 - h), (0, bw2 * 8 - w)),
         mode="edge",
     )
-    bw_ = _BitWriter()
+    bw_ = JpegBitWriter()
     rec = np.zeros((bh * 8, bw2 * 8))
     pred = 0
     for by in range(bh):
@@ -2630,7 +2572,7 @@ def _dct_code_plane(
         recp = _round_half_up(rec).astype(np.int64)
     else:
         recp = np.clip(_round_half_up(rec + 128.0), 0, 255).astype(np.int64)
-    return bytes(bw_.bytes), recp
+    return bytes(bw_.out), recp
 
 
 def _dct_decode_plane(
@@ -2643,14 +2585,14 @@ def _dct_decode_plane(
     frames run the DC prediction chain and return level-shifted,
     clamped samples. Returns (int plane, end position)."""
     bh, bw2 = (fh + 7) // 8, (fw + 7) // 8
-    br = _BitReader(data, pos)
+    br = JpegBitReader(data, pos)
     out = np.zeros((bh * 8, bw2 * 8))
     pred = 0
     for by in range(bh):
         for bx in range(bw2):
             zz = np.zeros(64, np.int64)
             s = dc_dec.decode(br)
-            d = _extend(br.receive(s), s)
+            d = _extend(br.bits(s), s)
             if differential:
                 zz[0] = d
             else:
@@ -2668,7 +2610,7 @@ def _dct_decode_plane(
                 k += r
                 if k > 63:
                     raise ValueError("corrupt JPEG: AC index overflow")
-                zz[k] = _extend(br.receive(size), size)
+                zz[k] = _extend(br.bits(size), size)
                 k += 1
             out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = _idct_block_zz(
                 zz, qtab
@@ -2859,13 +2801,13 @@ def encode_hierarchical_jpeg(
     if arith:
         out += _la_code_plane(base, precision, predictor, None)
     else:
-        bw = _BitWriter()
+        bw = JpegBitWriter()
         for r in range(base.shape[0]):
             for cpos in range(base.shape[1]):
                 pred = _ll_predict(r, cpos, base, predictor, default)
                 _write_ll_diff(bw, codes, (int(base[r, cpos]) - pred) & 0xFFFF)
         bw.flush()
-        out += bw.bytes
+        out += bw.out
 
     ref = base
     for lvl in range(1, levels):
@@ -2881,11 +2823,11 @@ def encode_hierarchical_jpeg(
         if arith:
             out += _la_code_plane(cur, precision, 0, ref)
         else:
-            bw = _BitWriter()
+            bw = JpegBitWriter()
             for d in ((cur - ref) & 0xFFFF).flatten():
                 _write_ll_diff(bw, codes, int(d))
             bw.flush()
-            out += bw.bytes
+            out += bw.out
         ref = cur
     out += b"\xff\xd9"  # EOI
     return bytes(out)
@@ -3174,11 +3116,11 @@ def decode_hierarchical_jpeg(data: bytes) -> tuple[np.ndarray, int]:
                     end = qdec.pos
             else:
                 dec = huff[table]
-                br = _BitReader(data, pos + seglen)
+                br = JpegBitReader(data, pos + seglen)
                 vals = np.zeros(fh * fw, np.int64)
                 for i in range(fh * fw):
                     s = dec.decode(br)
-                    vals[i] = 32768 if s == 16 else _extend(br.receive(s), s)
+                    vals[i] = 32768 if s == 16 else _extend(br.bits(s), s)
                 end = br.pos
             if differential:
                 if ref is None:

@@ -49,63 +49,9 @@ import struct
 
 import numpy as np
 
+from hw_kafka_streams_spark.operators.bitio import BitReader, BitWriter
+
 _MAGIC = b"MCLV"
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self._acc = 0
-        self._n = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        self._acc = (self._acc << nbits) | (value & ((1 << nbits) - 1))
-        self._n += nbits
-        while self._n >= 8:
-            self._n -= 8
-            self.out.append((self._acc >> self._n) & 0xFF)
-        self._acc &= (1 << self._n) - 1
-
-    def write_rice(self, m: int, k: int) -> None:
-        q = m >> k
-        self._acc = (self._acc << (q + 1)) | 1
-        self._n += q + 1
-        while self._n >= 8:
-            self._n -= 8
-            self.out.append((self._acc >> self._n) & 0xFF)
-        self._acc &= (1 << self._n) - 1
-        if k:
-            self.write(m, k)
-
-    def flush(self) -> None:
-        if self._n:
-            self.out.append((self._acc << (8 - self._n)) & 0xFF)
-            self._acc = 0
-            self._n = 0
-
-
-class _BitReader:
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self._acc = 0
-        self._n = 0
-
-    def bits(self, n: int) -> int:
-        while self._n < n:
-            self._acc = (self._acc << 8) | self.data[self.pos]
-            self.pos += 1
-            self._n += 8
-        self._n -= n
-        v = (self._acc >> self._n) & ((1 << n) - 1)
-        self._acc &= (1 << self._n) - 1
-        return v
-
-    def read_rice(self, k: int) -> int:
-        q = 0
-        while self.bits(1) == 0:
-            q += 1
-        return (q << k) | (self.bits(k) if k else 0)
 
 
 def _pad_to_blocks(frame: np.ndarray, block: int) -> np.ndarray:
@@ -154,7 +100,7 @@ def encode_mclv(frames: np.ndarray, block: int = 8, search: int = 4) -> bytes:
         for dy in range(-search, search + 1)
         for dx in range(-search, search + 1)
     ]
-    bw = _BitWriter()
+    bw = BitWriter()
     for ti in range(1, t):
         cur = padded[ti].astype(np.int32)
         prev = np.pad(padded[ti - 1], search, mode="edge").astype(np.int32)
@@ -183,8 +129,9 @@ def encode_mclv(frames: np.ndarray, block: int = 8, search: int = 4) -> bytes:
                 m = _zigzag(res.ravel())
                 k = _best_rice_k(m)
                 bw.write(k, 4)
-                for v in m:
-                    bw.write_rice(int(v), k)
+                for v in m.tolist():
+                    bw.unary(v >> k)
+                    bw.write(v, k)
     bw.flush()
     out += bw.out
     return bytes(out)
@@ -203,7 +150,7 @@ def decode_mclv(data: bytes) -> np.ndarray:
     first = np.frombuffer(data[pos : pos + ph * pw], np.uint8).reshape(ph, pw)
     pos += ph * pw
     frames = [first.astype(np.int32)]
-    br = _BitReader(data, pos)
+    br = BitReader(data, pos)
     nby, nbx = ph // block, pw // block
     for _ in range(1, t):
         prev = np.pad(frames[-1], search, mode="edge")
@@ -220,7 +167,8 @@ def decode_mclv(data: bytes) -> np.ndarray:
                     continue
                 k = br.bits(4)
                 m = np.array(
-                    [br.read_rice(k) for _ in range(block * block)], np.int32
+                    [(br.unary() << k) | br.bits(k) for _ in range(block * block)],
+                    np.int32,
                 )
                 res = np.where(m % 2 == 0, m // 2, -(m + 1) // 2)
                 cur[y0 : y0 + block, x0 : x0 + block] = ref + res.reshape(
@@ -243,7 +191,7 @@ def motion_field(data: bytes) -> list[list[tuple[int, int]]]:
     ver, w, h, t, block, search = struct.unpack(">BHHHBB", data[4:13])
     ph = h + ((-h) % block)
     pw = w + ((-w) % block)
-    br = _BitReader(data, 13 + ph * pw)
+    br = BitReader(data, 13 + ph * pw)
     nby, nbx = ph // block, pw // block
     fields = []
     for _ in range(1, t):
@@ -254,6 +202,7 @@ def motion_field(data: bytes) -> list[list[tuple[int, int]]]:
             if not br.bits(1):
                 k = br.bits(4)
                 for _ in range(block * block):
-                    br.read_rice(k)
+                    br.unary()
+                    br.bits(k)
         fields.append(mvs)
     return fields

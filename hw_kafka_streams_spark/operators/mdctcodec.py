@@ -48,7 +48,7 @@ import struct
 
 import numpy as np
 
-from hw_kafka_streams_spark.operators.mcvideo import _BitReader, _BitWriter
+from hw_kafka_streams_spark.operators.bitio import BitReader, BitWriter
 
 _MAGIC = b"MDA1"
 _N = 1024  # window length; _N // 2 = 512 spectral bins per frame
@@ -111,7 +111,7 @@ def encode_mdct_audio(samples: np.ndarray) -> bytes:
     coefs = mdct_frames(samples.astype(np.float64))
     out = bytearray(_MAGIC)
     out += struct.pack(">BIHB", 1, n, _N, len(_BAND_BITS))
-    bw = _BitWriter()
+    bw = BitWriter()
     for fr in coefs:
         for b, (lo, hi) in enumerate(zip(_BAND_EDGES, _BAND_EDGES[1:])):
             band = fr[lo:hi]
@@ -135,7 +135,8 @@ def encode_mdct_audio(samples: np.ndarray) -> bytes:
                     best_k, best_cost = k, cost
             bw.write(best_k, 4)
             for v in m.tolist():
-                bw.write_rice(int(v), best_k)
+                bw.unary(v >> best_k)
+                bw.write(v, best_k)
     bw.flush()
     out += bw.out
     return bytes(out)
@@ -153,7 +154,7 @@ def decode_mdct_audio(data: bytes) -> np.ndarray:
         raise ValueError("stream geometry differs from this build")
     pad_len = (-n) % _HOP
     n_frames = (n + pad_len + 2 * _HOP - _N) // _HOP + 1
-    br = _BitReader(data, 12)
+    br = BitReader(data, 12)
     coefs = np.zeros((n_frames, _HOP))
     for fi in range(n_frames):
         for b, (lo, hi) in enumerate(zip(_BAND_EDGES, _BAND_EDGES[1:])):
@@ -164,7 +165,9 @@ def decode_mdct_audio(data: bytes) -> np.ndarray:
                 e -= 256
             bits = _BAND_BITS[b]
             k = br.bits(4)
-            m = np.array([br.read_rice(k) for _ in range(hi - lo)], np.int64)
+            m = np.array(
+                [(br.unary() << k) | br.bits(k) for _ in range(hi - lo)], np.int64
+            )
             q = np.where(m % 2 == 0, m // 2, -(m + 1) // 2)
             coefs[fi, lo:hi] = q * (2.0 ** (e - bits + 1))
     pcm = imdct_overlap_add(coefs, n)

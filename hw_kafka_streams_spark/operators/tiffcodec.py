@@ -28,6 +28,8 @@ import struct
 
 import numpy as np
 
+from hw_kafka_streams_spark.operators.bitio import BitReader, BitWriter, CodecError
+
 
 def encode_tiff_rgb(
     rgb: np.ndarray,
@@ -231,69 +233,47 @@ def _lzw_compress(data: bytes) -> bytes:
     writer widens one code before the table actually overflows —
     TIFF's historical off-by-one, distinct from GIF's LZW in both bit
     order and change point)."""
-    out = bytearray()
-    acc = nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            nbits -= 8
-            out.append((acc >> nbits) & 0xFF)
-        acc &= (1 << nbits) - 1
-
+    bw = BitWriter()
     table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
     next_code = 258
     width = 9
-    emit(256, width)  # leading ClearCode
+    bw.write(256, width)  # leading ClearCode
     cur = b""
     for byte in data:
         cand = cur + bytes([byte])
         if cand in table:
             cur = cand
             continue
-        emit(table[cur], width)
+        bw.write(table[cur], width)
         table[cand] = next_code
         next_code += 1
         if next_code == (1 << width) - 1 and width < 12:  # early change
             width += 1
         if next_code >= 4094:  # table full: reset
-            emit(256, width)
+            bw.write(256, width)
             table = {bytes([i]): i for i in range(256)}
             next_code = 258
             width = 9
         cur = bytes([byte])
     if cur:
-        emit(table[cur], width)
-    emit(257, width)  # EOI
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
+        bw.write(table[cur], width)
+    bw.write(257, width)  # EOI
+    bw.flush()
+    return bytes(bw.out)
 
 
 def _lzw_decompress(data: bytes) -> bytes:
     """Inverse of :func:`_lzw_compress` (KwKwK handled)."""
     out = bytearray()
-    pos = acc = nbits = 0
+    br = BitReader(data)
     width = 9
     table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
     prev = b""
-
-    def read() -> int:
-        nonlocal pos, acc, nbits
-        while nbits < width:
-            if pos >= len(data):
-                return 257  # truncated: treat as EOI
-            acc = (acc << 8) | data[pos]
-            pos += 1
-            nbits += 8
-        nbits -= width
-        code = (acc >> nbits) & ((1 << width) - 1)
-        return code
-
     while True:
-        code = read()
+        try:
+            code = br.bits(width)
+        except CodecError:
+            code = 257  # truncated: treat as EOI
         if code == 257:
             break
         if code == 256:

@@ -2,7 +2,7 @@
 
 Each registered query carries an optional DuckDB-runnable oracle SQL so
 the driver can hash-compare results at sf0.01 (driver contract in
-/root/repo/__spark_entry__.py). Column names are aliased identically on
+``__spark_entry__.py`` at the repo root). Column names are aliased identically on
 both sides — the driver sorts columns by name before hashing.
 """
 

@@ -61,27 +61,6 @@ def running_counts(df: DataFrame, key_col: str = "user_id") -> DataFrame:
     )
 
 
-def _make_ttl_count_fn(ttl_ms: int):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # horizon passed with no arrivals: emit a tombstone row and
-            # drop the state — the unbounded-key safety valve
-            (n,) = state.get
-            state.remove()
-            yield pd.DataFrame({"key": [key[0]], "n_total": [n], "expired": [True]})
-            return
-        n = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame({"key": [key[0]], "n_total": [n], "expired": [False]})
-
-    return fn
-
-
 MG_OUTPUT_SCHEMA = "shard int, token string, est_count bigint, shard_rows bigint"
 MG_STATE_SCHEMA = "tokens array<string>, counts array<bigint>, n_rows bigint"
 

@@ -671,6 +671,27 @@ def test_ima_adpcm_roundtrip_and_container():
         decode_ima_adpcm_wav(make_fake_wav_pcm(8000, 100, 16))
 
 
+def test_adpcm_stats_data_chunk_without_a_block(spark):
+    """A data chunk shorter than one block decodes to no samples, so
+    its row is (doc_id, 0, NULL, 0) and the other rows are unaffected."""
+    import struct
+
+    from hw_kafka_streams_spark.operators.adpcmcodec import (
+        adpcm_stats,
+        decode_ima_adpcm_wav,
+        make_ima_adpcm_wav,
+    )
+
+    wav = make_ima_adpcm_wav(100, 10, [1, 9, 3, 12] * 8)
+    at = wav.index(b"data")
+    cut = wav[:at + 4] + struct.pack("<I", 2) + wav[at + 8 : at + 10]
+    assert decode_ima_adpcm_wav(cut) == []
+    full = decode_ima_adpcm_wav(wav)
+    df = spark.createDataFrame([(1, wav), (2, cut)], "doc_id long, payload binary")
+    got = sorted(tuple(r) for r in adpcm_stats(df).collect())
+    assert got == [(1, len(full), full[-1], sum(full)), (2, 0, None, 0)]
+
+
 def test_avi_mjpeg_container_roundtrip_and_validation():
     """RIFF AVI build→parse roundtrip preserves frame bytes exactly;
     parser rejects non-MJPG streams, non-JPEG 00dc chunks, and
@@ -874,13 +895,15 @@ def test_progressive_entropy_layer_coefficient_roundtrip():
     on the decode side."""
     import numpy as np
 
+    from hw_kafka_streams_spark.operators.bitio import (
+        JpegBitReader,
+        JpegBitWriter,
+    )
     from hw_kafka_streams_spark.operators.jpegcodec import (
         AC_LUM_BITS,
         AC_LUM_VALS,
         _ac_first_block,
         _ac_refine_block,
-        _BitReader,
-        _BitWriter,
         _build_codes,
         _enc_ac_first,
         _enc_ac_refine,
@@ -902,12 +925,12 @@ def test_progressive_entropy_layer_coefficient_roundtrip():
                 zz[k] = int(rng.integers(-9, 10))
             blocks.append(zz)
         ss, se, al = 1, 63, 1
-        bw = _BitWriter()
+        bw = JpegBitWriter()
         for zz in blocks:
             _enc_ac_first(bw, zz, ss, se, al, ac_codes)
         bw.flush()
         got = [np.zeros(64, dtype=np.int64) for _ in blocks]
-        br = _BitReader(bytes(bw.bytes) + b"\xff\xd9", 0)
+        br = JpegBitReader(bytes(bw.out) + b"\xff\xd9", 0)
         state = {"eobrun": 0}
         for g in got:
             _ac_first_block(br, g, ss, se, al, ac_dec, state)
@@ -917,11 +940,11 @@ def test_progressive_entropy_layer_coefficient_roundtrip():
             want[0] = 0
             assert np.array_equal(g, want), trial
         # refinement restores the exact values
-        bw2 = _BitWriter()
+        bw2 = JpegBitWriter()
         for zz in blocks:
             _enc_ac_refine(bw2, zz, ss, se, 0, ac_codes)
         bw2.flush()
-        br2 = _BitReader(bytes(bw2.bytes) + b"\xff\xd9", 0)
+        br2 = JpegBitReader(bytes(bw2.out) + b"\xff\xd9", 0)
         state2 = {"eobrun": 0}
         for g in got:
             _ac_refine_block(br2, g, ss, se, 0, ac_dec, state2)
@@ -937,13 +960,15 @@ def test_progressive_refine_zrl_hand_vector():
     by construction."""
     import numpy as np
 
+    from hw_kafka_streams_spark.operators.bitio import (
+        JpegBitReader,
+        JpegBitWriter,
+    )
     from hw_kafka_streams_spark.operators.jpegcodec import (
         AC_LUM_BITS,
         AC_LUM_VALS,
         _ac_first_block,
         _ac_refine_block,
-        _BitReader,
-        _BitWriter,
         _build_codes,
         _enc_ac_first,
         _enc_ac_refine,
@@ -958,18 +983,18 @@ def test_progressive_refine_zrl_hand_vector():
     zz[40] = -1  # invisible at Al=1, newly significant in refine (37 zeros)
     zz[63] = 7   # visible, correction bit
     for scan_al in [(1,)]:
-        bw = _BitWriter()
+        bw = JpegBitWriter()
         _enc_ac_first(bw, zz, 1, 63, 1, ac_codes)
         bw.flush()
         g = np.zeros(64, dtype=np.int64)
         st = {"eobrun": 0}
-        _ac_first_block(_BitReader(bytes(bw.bytes) + b"\xff\xd9", 0), g, 1, 63, 1, ac_dec, st)
+        _ac_first_block(JpegBitReader(bytes(bw.out) + b"\xff\xd9", 0), g, 1, 63, 1, ac_dec, st)
         assert g[2] == 4 and g[3] == -4 and g[40] == 0 and g[63] == 6
-        bw2 = _BitWriter()
+        bw2 = JpegBitWriter()
         _enc_ac_refine(bw2, zz, 1, 63, 0, ac_codes)
         bw2.flush()
         st2 = {"eobrun": 0}
-        _ac_refine_block(_BitReader(bytes(bw2.bytes) + b"\xff\xd9", 0), g, 1, 63, 0, ac_dec, st2)
+        _ac_refine_block(JpegBitReader(bytes(bw2.out) + b"\xff\xd9", 0), g, 1, 63, 0, ac_dec, st2)
         assert g[2] == 4 and g[3] == -5 and g[40] == -1 and g[63] == 7
         assert not np.any(g[[1, 4, 20, 39, 41, 62]])
 

@@ -7,11 +7,13 @@ the suite fast. ``tools/oracle_check.py`` runs the sf0.01 version.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+_REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(_REPO))
+sys.path.insert(0, str(_REPO / "tools"))
 
 from oracle_check import compare_query, duckdb_con  # noqa: E402
 

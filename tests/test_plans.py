@@ -243,8 +243,9 @@ def test_headline_plans_no_smj_no_unexpected_nlj(spark, sf_dir):
     pattern. A regression that flips a join strategy fails here, not in
     a slower bench three rounds later."""
     import sys as _sys
+    from pathlib import Path
 
-    _sys.path.insert(0, "/root/repo")
+    _sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     from bench import HEADLINE
 
     # Queries whose plan legitimately contains a broadcast NLJ: joining

@@ -611,20 +611,18 @@ def test_flac_encoder_emits_escape_partition():
     decoder's escape path."""
     import numpy as np
 
-    from hw_kafka_streams_spark.operators.flaccodec import (
-        _BitWriter,
-        _write_residual_partition,
-    )
+    from hw_kafka_streams_spark.operators.bitio import BitWriter
+    from hw_kafka_streams_spark.operators.flaccodec import _write_residual_partition
 
     res = np.array([30000, -30001, 29500, -29999] * 16, np.int64)
-    w = _BitWriter()
+    w = BitWriter()
     _write_residual_partition(w, res)
-    w.align()
-    assert (w.buf[0] >> 4) == 0b1111  # escape code chosen
-    raw = ((w.buf[0] & 0x0F) << 1) | (w.buf[1] >> 7)
+    w.flush()
+    assert (w.out[0] >> 4) == 0b1111  # escape code chosen
+    raw = ((w.out[0] & 0x0F) << 1) | (w.out[1] >> 7)
     assert raw == 16  # minimal signed width for +/-30001
     # and the emitted size is exactly 4 + 5 + 64*16 bits
-    assert len(w.buf) == (4 + 5 + 64 * 16 + 7) // 8 + 1 or len(w.buf) >= 129
+    assert len(w.out) == (4 + 5 + 64 * 16 + 7) // 8 + 1 or len(w.out) >= 129
 
 
 def test_flac_decoder_handles_hand_built_escape_frame():
@@ -635,8 +633,8 @@ def test_flac_decoder_handles_hand_built_escape_frame():
     docstring."""
     import numpy as np
 
+    from hw_kafka_streams_spark.operators.bitio import BitWriter
     from hw_kafka_streams_spark.operators.flaccodec import (
-        _BitWriter,
         _crc8,
         _crc16,
         _pcm_md5,
@@ -655,7 +653,7 @@ def test_flac_decoder_handles_hand_built_escape_frame():
 
     out = bytearray(b"fLaC")
     out += bytes([0x80, 0, 0, 34])
-    si = _BitWriter()
+    si = BitWriter()
     si.write(n, 16)
     si.write(n, 16)
     si.write(0, 24)
@@ -664,9 +662,9 @@ def test_flac_decoder_handles_hand_built_escape_frame():
     si.write(0, 3)   # mono
     si.write(15, 5)  # 16-bit
     si.write(n, 36)
-    out += si.bytes() + _pcm_md5(samples, 16)
+    out += si.out + _pcm_md5(samples, 16)
 
-    w = _BitWriter()
+    w = BitWriter()
     w.write(0x3FFE, 14)
     w.write(0, 2)
     w.write(0b0110, 4)   # 8-bit blocksize at end
@@ -674,13 +672,13 @@ def test_flac_decoder_handles_hand_built_escape_frame():
     w.write(0, 4)        # mono
     w.write(0b100, 3)    # 16 bps
     w.write(0, 1)
-    head = bytearray(w.buf)
+    head = bytearray(w.out)
     head += _utf8_code(0)
     head += bytes([n - 1])
     head.append(_crc8(bytes(head)))
 
-    body = _BitWriter()
-    body.buf = bytearray(head)
+    body = BitWriter()
+    body.out = bytearray(head)
     body.write(0, 1)
     body.write(0b001001, 6)  # FIXED order 1
     body.write(0, 1)
@@ -691,8 +689,8 @@ def test_flac_decoder_handles_hand_built_escape_frame():
     body.write(raw, 5)
     for v in res.tolist():
         body.write(int(v) & ((1 << raw) - 1), raw)
-    body.align()
-    frame = bytes(body.buf)
+    body.flush()
+    frame = bytes(body.out)
     out += frame + struct.pack(">H", _crc16(frame))
 
     dec, sr = decode_flac(bytes(out))

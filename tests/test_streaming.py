@@ -528,49 +528,6 @@ def test_streaming_session_window_finalization(spark, tmpdir):
     assert rows == {("u1", 2)}
 
 
-def test_stateful_ttl_count_fn_unit():
-    """Unit-test the TTL processor against a fake GroupState: counting,
-    timeout re-arm, and the expiry tombstone path. (Running it live
-    needs wall-clock TTL expiry — the recurring timers keep the
-    microbatch engine busy, so an end-to-end test never idles.)"""
-    import pandas as pd
-
-    from hw_kafka_streams_spark.streaming.stateful import _make_ttl_count_fn
-
-    class FakeState:
-        def __init__(self):
-            self._v, self.hasTimedOut, self.timeouts = None, False, []
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-        def remove(self):
-            self._v = None
-
-        def setTimeoutDuration(self, ms):
-            self.timeouts.append(ms)
-
-    fn = _make_ttl_count_fn(60_000)
-    st = FakeState()
-    [out] = list(fn(("u1",), iter([pd.DataFrame({"x": [1, 2]})]), st))
-    assert out.n_total.tolist() == [2] and out.expired.tolist() == [False]
-    [out] = list(fn(("u1",), iter([pd.DataFrame({"x": [3]})]), st))
-    assert out.n_total.tolist() == [3] and st.timeouts == [60_000, 60_000]
-
-    st.hasTimedOut = True
-    [out] = list(fn(("u1",), iter([]), st))
-    assert out.expired.tolist() == [True] and out.n_total.tolist() == [3]
-    assert not st.exists  # state evicted
-
-
 def test_streaming_heavy_hitters_misra_gries(spark, tmpdir):
     """Sharded MG summary: the one true heavy token (45% of the stream)
     must survive with est_count within shard_rows/k of truth, across

@@ -19,8 +19,9 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
-REPO = "/root/repo"
+REPO = str(Path(__file__).resolve().parent.parent)
 
 # Every round-1 driver error, plus q_math_funcs (hash-mismatch fix).
 R01_RED_QUERIES = [

@@ -23,10 +23,12 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file belongs to, so a copy checks its own package
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from hw_kafka_streams_spark.cache import release_managed_caches  # noqa: E402
 
