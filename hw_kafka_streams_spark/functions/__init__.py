@@ -13,10 +13,7 @@ point for composing the engine's scalar surface into your own queries::
 
 from __future__ import annotations
 
-from hw_kafka_streams_spark.operators.censor import (
-    censor_column,
-    censor_column_many_words,
-)
+from hw_kafka_streams_spark.operators.censor import censor_column
 from hw_kafka_streams_spark.operators.dedup import md5h, word_shingles
 from hw_kafka_streams_spark.operators.sampling import hash_bucket
 from hw_kafka_streams_spark.operators.similarity import (
@@ -42,7 +39,6 @@ from hw_kafka_streams_spark.operators.text import (
 __all__ = [
     "bpe_ish_token_count",
     "censor_column",
-    "censor_column_many_words",
     "cosine",
     "cosine_arrow",
     "dot",

@@ -10,7 +10,6 @@ decontamination), udfs (the pandas-UDF/UDTF surface).
 
 from hw_kafka_streams_spark.operators.censor import (
     censor_column,
-    censor_column_many_words,
     filter_pipeline,
     filtered_messages,
 )
@@ -48,7 +47,6 @@ __all__ = [
     "boilerplate_prune",
     "brute_force_topk",
     "censor_column",
-    "censor_column_many_words",
     "connected_components",
     "embedding_near_dup_pairs",
     "exact_dedup",

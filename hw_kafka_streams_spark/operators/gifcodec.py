@@ -24,15 +24,26 @@ import struct
 
 import numpy as np
 
+from hw_kafka_streams_spark.operators.bitio import CodecError
+
+
+def _need(data: bytes, end: int, what: str) -> None:
+    """Raise ``CodecError`` unless ``data`` holds ``end`` bytes."""
+    if end > len(data):
+        raise CodecError(f"truncated GIF: {what} runs past the end")
+
 
 def _parse_image_block(data: bytes, pos: int, gct):
     """One image descriptor at ``pos`` (the 0x2C byte) → (indices
-    (h, w) uint8, color table, (left, top), new pos)."""
+    (h, w) uint8, color table, (left, top), new pos). Raises
+    ``CodecError`` when ``data`` ends inside the block."""
+    _need(data, pos + 11, "image descriptor")
     left, top, w, h, ipack = struct.unpack("<HHHHB", data[pos + 1 : pos + 10])
     pos += 10
     ct = gct
     if ipack & 0x80:  # local color table
         n = 2 << (ipack & 0x07)
+        _need(data, pos + 3 * n + 1, "local color table")
         ct = np.frombuffer(
             data, dtype=np.uint8, count=3 * n, offset=pos
         ).reshape(n, 3)
@@ -42,8 +53,11 @@ def _parse_image_block(data: bytes, pos: int, gct):
     min_code = data[pos]
     pos += 1
     stream = bytearray()
-    while data[pos] != 0:
+    while True:
+        _need(data, pos + 1, "image data")
         ln = data[pos]
+        if ln == 0:
+            break
         stream.extend(data[pos + 1 : pos + 1 + ln])
         pos += 1 + ln
     pos += 1
@@ -68,14 +82,18 @@ def decode_gif_frames(data: bytes, max_frames: int | None = None) -> list[np.nda
     uint8 RGB frames — each frame is the full logical screen after
     drawing that image rectangle with its transparency, then disposal
     runs before the next frame (1/0 leave, 2 restore-to-background,
-    3 restore-to-previous). Raises ValueError for corrupt data."""
+    3 restore-to-previous). Raises ValueError for corrupt data, and
+    ``CodecError`` (a ValueError) when ``data`` ends before the trailer
+    (or, with ``max_frames``, before that many frames)."""
     if data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF")
+        raise CodecError("not a GIF")
+    _need(data, 13, "logical screen descriptor")
     sw, sh, packed, bg, _ar = struct.unpack("<HHBBB", data[6:13])
     pos = 13
     gct = None
     if packed & 0x80:
         n = 2 << (packed & 0x07)
+        _need(data, pos + 3 * n, "global color table")
         gct = np.frombuffer(
             data, dtype=np.uint8, count=3 * n, offset=pos
         ).reshape(n, 3)
@@ -87,19 +105,23 @@ def decode_gif_frames(data: bytes, max_frames: int | None = None) -> list[np.nda
     canvas = np.broadcast_to(bg_rgb, (sh, sw, 3)).copy()
     frames: list[np.ndarray] = []
     disposal, transparent = 0, None  # pending GCE state
-    while pos < len(data):
+    while True:
+        _need(data, pos + 1, "block sequence (no trailer)")
         b = data[pos]
         if b == 0x3B:  # trailer
             break
         if b == 0x21:  # extension
+            _need(data, pos + 3, "extension")
             label = data[pos + 1]
             p = pos + 2
             if label == 0xF9 and data[p] >= 4:  # Graphic Control
+                _need(data, p + 5, "graphic control extension")
                 gpack = data[p + 1]
                 disposal = (gpack >> 2) & 0x7
                 transparent = data[p + 4] if gpack & 0x01 else None
             while data[p] != 0:
                 p += 1 + data[p]
+                _need(data, p + 1, "extension sub-block")
             pos = p + 1
             continue
         if b != 0x2C:

@@ -26,6 +26,8 @@ import zlib
 
 import numpy as np
 
+from hw_kafka_streams_spark.operators.bitio import CodecError
+
 _SIG = b"\x89PNG\r\n\x1a\n"
 
 # Adam7 pass lattice (libpng's tables): origin and step per pass.
@@ -177,20 +179,29 @@ def decode_png(data: bytes) -> np.ndarray:
     """Decode a PNG to an (h, w, 3) uint8 RGB array (gray replicated,
     alpha dropped, palette resolved, sub-byte indices unpacked, 16-bit
     reduced by >>8, Adam7 de-interlaced). Raises ValueError for
-    corrupt data or spec-illegal (type, depth) combinations."""
+    corrupt data or spec-illegal (type, depth) combinations, and
+    ``CodecError`` (a ValueError) for a stream cut short anywhere: a bad
+    signature, a chunk whose length and CRC run past the end, or no
+    ``IEND``."""
     if data[:8] != _SIG:
-        raise ValueError("not a PNG (bad signature)")
+        raise CodecError("not a PNG (bad signature)")
     pos = 8
     w = h = None
     bit_depth = color_type = interlace = None
     palette = None
     idat = bytearray()
-    while pos + 8 <= len(data):
+    while True:
+        if pos + 8 > len(data):
+            raise CodecError("truncated PNG: no IEND chunk")
         (length,) = struct.unpack(">I", data[pos : pos + 4])
         tag = data[pos + 4 : pos + 8]
         payload = data[pos + 8 : pos + 8 + length]
         pos += 12 + length  # len + tag + payload + crc
+        if pos > len(data):
+            raise CodecError(f"truncated PNG: {tag!r} chunk runs past the end")
         if tag == b"IHDR":
+            if length != 13:
+                raise CodecError(f"corrupt PNG: IHDR length {length}, not 13")
             w, h, bit_depth, color_type, _comp, _filt, interlace = (
                 struct.unpack(">IIBBBBB", payload)
             )

@@ -6,12 +6,10 @@ custom logic is unavoidable it runs as an Arrow-batched pandas UDF
 hot path of a query a built-in can express.
 
 Two canonical shapes:
-- SCALAR pandas UDF: the censor for unbounded dictionaries — the
-  combined regex is precompiled once per executor (closure state), then
-  applied per Arrow batch via pandas .str.replace. This is the scale
-  path when the word list is too large to fold into regexp_replace
-  calls at plan-build time (reference semantics:
-  MessageFilterProcessor.java:31-44).
+- SCALAR pandas UDF: a censor whose regexes are precompiled once per
+  executor (closure state), then applied per Arrow batch via pandas
+  .str.replace (reference semantics: MessageFilterProcessor.java:31-44;
+  the exact, JVM-side censor is operators.censor.censor_column).
 - GROUPED_AGG pandas UDF: a custom aggregate (weighted mean) that
   Spark's built-ins don't provide directly; partial aggregation does
   NOT apply to grouped-agg UDFs (full shuffle of group rows), which is
@@ -37,8 +35,8 @@ def make_censor_udf(words: list[str]):
     Output matches operators.censor.censor_column (and the reference's
     MessageFilterProcessor) only when no word overlaps another: with
     ``["bc", "ab"]`` on ``"abc"`` the fold gives ``"a**"``, this
-    length-grouped alternation ``"**c"``. Use this variant only when the
-    dictionary is too large for plan-time regexp_replace folding.
+    length-grouped alternation ``"**c"``. ``censor_column`` schedules
+    its same-length alternations so that they stay exact.
     """
     by_len: dict[int, list[str]] = {}
     for w in words:
@@ -82,99 +80,6 @@ def weighted_mean(v, w):  # GROUPED_AGG
 
         _weighted_mean_udf = _wm
     return _weighted_mean_udf(v, w)
-
-
-def _length_safe_lower(text: str) -> str:
-    """Lowercase preserving length: rare expanding case folds
-    ('İ'.lower() is 2 chars) would shift mask offsets, so such
-    characters fold per-char (kept as-is when the fold expands)."""
-    low = text.lower()
-    if len(low) == len(text):
-        return low
-    return "".join(c.lower() if len(c.lower()) == 1 else c for c in text)
-
-
-class _AhoCorasick:
-    """Minimal Aho-Corasick automaton (lowercase matching) — linear scan
-    time in text length + matches, independent of dictionary size.
-    Pure-Python stdlib build (no external libs in this environment);
-    construction is O(total pattern chars)."""
-
-    def __init__(self, words: list[str]):
-        # trie as list of dicts; node 0 = root
-        self.next: list[dict[str, int]] = [{}]
-        self.fail: list[int] = [0]
-        self.out: list[list[int]] = [[]]  # word lengths ending here
-        for w in words:
-            lw = w.lower()
-            node = 0
-            for ch in lw:
-                if ch not in self.next[node]:
-                    self.next[node][ch] = len(self.next)
-                    self.next.append({})
-                    self.fail.append(0)
-                    self.out.append([])
-                node = self.next[node][ch]
-            self.out[node].append(len(lw))
-        # BFS failure links (root children keep fail=0)
-        from collections import deque
-
-        dq = deque(self.next[0].values())
-        while dq:
-            cur = dq.popleft()
-            for ch, nxt in self.next[cur].items():
-                dq.append(nxt)
-                f = self.fail[cur]
-                while f and ch not in self.next[f]:
-                    f = self.fail[f]
-                self.fail[nxt] = self.next[f].get(ch, 0)
-                self.out[nxt] = self.out[nxt] + self.out[self.fail[nxt]]
-
-    def mask(self, text: str) -> str:
-        """Replace every dictionary occurrence with '*' of equal length.
-        Case-insensitive via casefold of the probe character only — the
-        original text (and its length) is preserved outside matches."""
-        if not text:
-            return text
-        low = _length_safe_lower(text)
-        n = len(low)
-        masked = [False] * n
-        node = 0
-        for i, ch in enumerate(low):
-            while node and ch not in self.next[node]:
-                node = self.fail[node]
-            node = self.next[node].get(ch, 0)
-            for wlen in self.out[node]:
-                for j in range(i - wlen + 1, i + 1):
-                    masked[j] = True
-        if not any(masked):
-            return text
-        return "".join("*" if m else c for c, m in zip(text, masked))
-
-
-def make_aho_corasick_censor_udf(words: list[str]):
-    """Censor via Aho-Corasick — THE scale path for large dictionaries.
-
-    The regexp-fold censor is O(text × passes) and the combined
-    alternation regex degrades with dictionary size; the automaton
-    scans each text once regardless of |words| (Aho & Corasick '75 —
-    the reference's per-record store iteration, MessageFilterProcessor
-    .java:31-44, replaced by a single-pass matcher). Built once per
-    executor from the closure; applied per Arrow batch.
-
-    Semantic note vs censor_column: overlapping matches are BOTH
-    masked (regex replaces left-to-right non-overlapping). For
-    non-overlapping dictionaries the outputs are identical — asserted
-    in tests.
-    """
-    ac = _AhoCorasick([w for w in words if w])
-
-    @pandas_udf("string")
-    def censor(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            yield s.map(lambda t: ac.mask(t) if isinstance(t, str) else t)
-
-    return censor
 
 
 def make_sentence_split_udtf():

@@ -6,7 +6,8 @@ Spark-free. Three groups:
   a small seeded corpus, so a change to the shared writer that alters
   a single output bit fails here;
 - truncation: a payload cut at any byte from where its bit reader
-  starts raises ``CodecError``, never a bare ``IndexError``;
+  starts raises ``CodecError``, never a bare ``IndexError``; so does a
+  PNG or GIF cut anywhere;
 - the reader and writer classes directly.
 """
 
@@ -21,11 +22,13 @@ import pytest
 from hw_kafka_streams_spark.operators import (
     bitio,
     flaccodec,
+    gifcodec,
     gorillacodec,
     jlscodec,
     jpegcodec,
     mcvideo,
     mdctcodec,
+    pngcodec,
     tiffcodec,
 )
 
@@ -131,13 +134,21 @@ def _scan_start(payload: bytes) -> int:
 def _truncation_cases():
     """name -> (payload, first cut, end of cuts, decoder). Cuts run from
     the byte where the decoder's bit reader starts to the end of the
-    bit-coded data (a JPEG-LS scan ends before its 2-byte EOI)."""
+    bit-coded data (a JPEG-LS scan ends before its 2-byte EOI); a PNG or
+    GIF is cut anywhere (``decode_gif`` reads only up to the end of the
+    first image, so its trailer byte is left out)."""
     flac = flaccodec.encode_flac(_pcm(21, 450, channels=2), block_size=192)
     jls = jlscodec.encode_jls(_gray(22, h=12, w=20).astype(np.uint8))
     jls_ilv1 = jlscodec.encode_jls(_rgb(23, h=6, w=10), ilv=1)
     mclv = mcvideo.encode_mclv(_clip(24)[:3])
     iframe = 24 * 32  # the 20x28 clip padded to 8x8 blocks
     mdct = mdctcodec.encode_mdct_audio(_pcm(25, 600))
+    png = pngcodec.encode_png(_rgb(26))
+    gray = _gray(27, h=12, w=20).astype(np.uint8)
+    gif = gifcodec.encode_gif_gray(gray)
+    anim = gifcodec.encode_gif_gray_animation(
+        [(gray, 0, 0), (gray[:6, :8], 3, 2)], (20, 12), disposal=1
+    )
     return {
         "flac": (flac, 4 + 4 + 34, len(flac), flaccodec.decode_flac),
         "jls": (jls, _scan_start(jls), len(jls) - 2, jlscodec.decode_jls),
@@ -145,6 +156,9 @@ def _truncation_cases():
                      jlscodec.decode_jls),
         "mclv": (mclv, 13 + iframe, len(mclv), mcvideo.decode_mclv),
         "mdct": (mdct, 12, len(mdct), mdctcodec.decode_mdct_audio),
+        "png": (png, 0, len(png), pngcodec.decode_png),
+        "gif": (gif, 0, len(gif) - 1, gifcodec.decode_gif),
+        "gif_frames": (anim, 0, len(anim), gifcodec.decode_gif_frames),
     }
 
 
@@ -179,10 +193,13 @@ def test_encoder_bytes_are_pinned():
     assert got == GOLDEN
 
 
-@pytest.mark.parametrize("name", ["flac", "jls", "jls_ilv1", "mclv", "mdct"])
+@pytest.mark.parametrize(
+    "name", ["flac", "jls", "jls_ilv1", "mclv", "mdct", "png", "gif", "gif_frames"]
+)
 def test_every_truncation_raises_codec_error(name):
-    """Cut inside the bit-coded data at every byte: each cut raises
-    ``CodecError`` (a bare ``IndexError`` or ``struct.error`` before)."""
+    """Cut at every byte of the range: each cut raises ``CodecError`` (a
+    bare ``IndexError`` or ``struct.error`` before; a PNG cut in its
+    last 16 bytes decoded as whole)."""
     payload, first, end, decode = _truncation_cases()[name]
     decode(payload)  # the whole payload decodes
     for cut in range(first, end):

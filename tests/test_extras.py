@@ -70,59 +70,6 @@ def test_sentence_split_udtf(spark):
     ]
 
 
-def test_aho_corasick_mask_basic():
-    from hw_kafka_streams_spark.operators.udfs import _AhoCorasick
-
-    ac = _AhoCorasick(["Политика", "1C", "data"])
-    assert ac.mask("Политика React") == "******** React"
-    assert ac.mask("полиТИКА!") == "********!"
-    assert ac.mask("1С") == "1С"        # Cyrillic С untouched
-    assert ac.mask("my DATA set") == "my **** set"
-    assert ac.mask("") == ""
-    assert ac.mask("no hits here") == "no hits here"
-
-
-def test_aho_corasick_overlap_and_substring():
-    from hw_kafka_streams_spark.operators.udfs import _AhoCorasick
-
-    # substring pattern: both 'he' and 'she' end at the same scan point
-    ac = _AhoCorasick(["she", "he"])
-    assert ac.mask("she said") == "*** said"
-    assert ac.mask("the he") == "t** **"  # 'he' inside 'the' masked too
-
-
-def test_aho_corasick_udf_matches_regex_fold(spark):
-    from hw_kafka_streams_spark.operators.censor import censor_column
-    from hw_kafka_streams_spark.operators.udfs import make_aho_corasick_censor_udf
-
-    words = ["Политика", "1C", "data", "model"]
-    docs = spark.createDataFrame(
-        [("политика data MODEL x",), ("plain text",), (None,), ("1c 1С",)],
-        "text string",
-    )
-    out = docs.select(
-        censor_column("text", words).alias("rx"),
-        make_aho_corasick_censor_udf(words)(F.col("text")).alias("ac"),
-    ).collect()
-    for r in out:
-        assert r.rx == r.ac
-
-
-def test_aho_corasick_udf_on_documents(spark, sf_dir):
-    """Automaton vs regex fold over the real documents table."""
-    from hw_kafka_streams_spark.operators.censor import censor_column
-    from hw_kafka_streams_spark.operators.udfs import make_aho_corasick_censor_udf
-    from hw_kafka_streams_spark.sources.catalog import load_table
-
-    words = ["data", "training", "neural", "language"]
-    docs = load_table(spark, "documents", sf_dir)
-    diff = docs.select(
-        censor_column("text", words).alias("rx"),
-        make_aho_corasick_censor_udf(words)(F.col("text")).alias("ac"),
-    ).filter(F.col("rx") != F.col("ac"))
-    assert diff.count() == 0
-
-
 def test_hash_split_disjoint_stable_fractions(spark, sf_dir):
     from hw_kafka_streams_spark.operators.sampling import hash_split
     from hw_kafka_streams_spark.sources.catalog import load_table

@@ -12,13 +12,12 @@ Fixtures and expected output are the reference's own self-seeded run
 
 from __future__ import annotations
 
-from hw_kafka_streams_spark.operators.censor import (
-    censor_column,
-    censor_column_many_words,
-    filter_pipeline,
-)
+import re
 
-from pyspark.sql import functions as F
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+
+from hw_kafka_streams_spark.operators.censor import censor_column, filter_pipeline
 
 
 def _fixtures(spark):
@@ -74,26 +73,46 @@ def test_censor_literal_not_regex(spark):
     assert df2.select(censor_column("text", ["a.b"]).alias("t")).collect()[0].t == "axb"
 
 
-def test_censor_many_words_variant(spark):
-    df = spark.createDataFrame([("Политика spring SPRING ok",)], "text string")
-    out = df.select(
-        censor_column_many_words("text", ["Политика", "spring", "ok"]).alias("text")
-    )
-    assert out.collect()[0].text == "******** ****** ****** **"
-
-
 def test_censor_overlapping_words_fold_order(spark):
     """``censor_column`` folds one word at a time in list order, so an
-    earlier word's mask hides a later word it overlaps. The grouped
-    alternation takes the leftmost match instead: the two agree only
-    when no word overlaps another."""
+    earlier word's mask hides a later word it overlaps: ``"bc"`` masks
+    first, and ``"ab"`` no longer occurs."""
     df = spark.createDataFrame([("abc",)], "text string")
-    row = df.select(
-        censor_column("text", ["bc", "ab"]).alias("fold"),
-        censor_column_many_words("text", ["bc", "ab"]).alias("grouped"),
-    ).collect()[0]
-    assert row.fold == "a**"
-    assert row.grouped == "**c"
+    assert df.select(censor_column("text", ["bc", "ab"]).alias("t")).first().t == "a**"
+
+
+def _fold(text, words):
+    """The reference censor in Python: one case-insensitive literal
+    ``re.sub`` per word, in list order."""
+    for w in words:
+        if w:
+            text = re.sub(re.escape(w), "*" * len(w), text, flags=re.IGNORECASE)
+    return text
+
+
+# shared syllables so words overlap and contain each other; Title and
+# UPPER variants so matching must fold case, Cyrillic included
+_SYLLABLES = ["a", "aa", "ab", "ba", "ли", "по", "ил", "$9", "."]
+_piece = st.sampled_from(_SYLLABLES).flatmap(
+    lambda s: st.sampled_from([s, s.title(), s.upper()])
+)
+_word = st.lists(_piece, min_size=1, max_size=3).map("".join)
+_text = st.lists(st.one_of(_piece, st.just(" ")), max_size=12).map("".join)
+
+
+@settings(max_examples=25, deadline=None)
+@given(words=st.lists(_word, min_size=1, max_size=8), texts=st.lists(_text, max_size=6))
+@example(words=["aa"], texts=["aaa", "aaaa", "AaA"])
+@example(words=["$9.99", "a.b"], texts=["price is $9.99 yes a.b", "axb"])
+@example(words=["x", "*y", "y"], texts=["xy", "x*y", "*yy"])
+@example(words=["", "ab", "ba"], texts=["aba", "bab", ""])
+def test_censor_column_matches_fold(spark, words, texts):
+    """The scheduled passes give the word-by-word fold's output on the
+    JVM; null text stays null."""
+    rows = list(enumerate(texts + [None]))
+    df = spark.createDataFrame(rows, "i int, text string")
+    got = dict(df.select("i", censor_column("text", words).alias("t")).collect())
+    assert got == {i: None if t is None else _fold(t, words) for i, t in rows}
 
 
 def test_block_is_anti_join_plan(spark):

@@ -6,78 +6,102 @@ can explore aggressively.
 
 from __future__ import annotations
 
+import re
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from hw_kafka_streams_spark.operators.udfs import _AhoCorasick, _length_safe_lower
+from hw_kafka_streams_spark.operators.censor import censor_passes
 
-# words without '*' (masking introduces stars; a star-free dictionary
-# can't gain new occurrences from masking)
-word = st.text(
-    alphabet=st.characters(blacklist_characters="*", blacklist_categories=("Cs",)),
-    min_size=1,
-    max_size=8,
-).filter(lambda w: w.lower() != w.upper() or not w.isspace())
-text = st.text(
-    alphabet=st.characters(blacklist_categories=("Cs",)), max_size=200
+
+# --- censor schedule (operators/censor.py) -----------------------------------
+
+
+def _fold(text: str, words: list[str]) -> str:
+    """The reference censor: one case-insensitive literal ``re.sub`` per
+    word, in list order, each match → '*' × len(word)."""
+    for w in words:
+        if w:
+            text = re.sub(re.escape(w), "*" * len(w), text, flags=re.IGNORECASE)
+    return text
+
+
+def _censor(text: str, words: list[str]) -> str:
+    """``censor_passes``'s passes run with Python ``re``."""
+    for pattern, mask in censor_passes(words):
+        text = re.sub(pattern, mask, text)
+    return text
+
+
+# tiny alphabets make overlaps, containment and case variants common;
+# "iIİıſsS" are the characters whose case maps change length or merge
+# classes, "*" the character masks are made of
+_alphabets = st.sampled_from(["abcA", "abAB*", "iIİıſsS", "aлЛ.$"])
+dictionary = _alphabets.flatmap(
+    lambda a: st.tuples(
+        st.lists(st.text(alphabet=a, max_size=4), max_size=6),
+        st.lists(st.text(alphabet=a, max_size=16), min_size=1, max_size=4),
+    )
 )
 
 
-@settings(max_examples=300, deadline=None)
-@given(text, st.lists(word, max_size=5))
-def test_mask_preserves_length(t, words):
-    ac = _AhoCorasick(words)
-    assert len(ac.mask(t)) == len(t)
+@settings(max_examples=1000, deadline=None)
+@given(dictionary)
+def test_mask_agrees_with_regex_reference(case):
+    words, texts = case
+    for t in texts:
+        assert _censor(t, words) == _fold(t, words), (words, t, censor_passes(words))
 
 
 @settings(max_examples=300, deadline=None)
-@given(text, st.lists(word, min_size=1, max_size=5))
-def test_no_banned_word_survives(t, words):
-    ac = _AhoCorasick(words)
-    masked = ac.mask(t)
-    low = masked.lower()
-    for w in words:
-        lw = w.lower()
-        # every original occurrence was masked; '*' can't recreate a
-        # star-free word, so none may remain
-        assert lw not in low or "*" in lw or lw != lw.replace("*", ""), (
-            t,
-            words,
-            masked,
-        )
-        if "*" not in lw:
-            assert lw not in low
+@given(dictionary)
+def test_mask_preserves_length(case):
+    words, texts = case
+    for t in texts:
+        assert len(_censor(t, words)) == len(t)
 
 
 @settings(max_examples=300, deadline=None)
-@given(text, st.lists(word, max_size=5))
-def test_mask_is_idempotent(t, words):
-    ac = _AhoCorasick(words)
-    once = ac.mask(t)
-    assert ac.mask(once) == once
+@given(dictionary)
+def test_no_banned_word_survives(case):
+    """Masks add only '*', so a star-free word censored once never
+    reappears."""
+    words, texts = case
+    words = [w for w in words if "*" not in w]
+    for t in texts:
+        out = _censor(t, words)
+        for w in words:
+            if w:
+                assert re.search(re.escape(w), out, re.IGNORECASE) is None, (words, t, out)
 
 
-@settings(max_examples=200, deadline=None)
-@given(text, st.lists(word, min_size=1, max_size=4))
-def test_mask_agrees_with_regex_reference(t, words):
-    """Cross-check vs an independent regex implementation that marks
-    every (case-insensitive, overlapping) occurrence position."""
-    ac = _AhoCorasick(words)
-    n = len(t)
-    masked_ref = [False] * n
-    low = _length_safe_lower(t)
-    for w in words:
-        lw = w.lower()
-        start = 0
-        while True:
-            i = low.find(lw, start)
-            if i < 0:
-                break
-            for j in range(i, i + len(lw)):
-                masked_ref[j] = True
-            start = i + 1  # overlapping occurrences too
-    expect = "".join("*" if m else c for c, m in zip(t, masked_ref))
-    assert ac.mask(t) == expect, (t, words)
+@settings(max_examples=300, deadline=None)
+@given(dictionary)
+def test_mask_is_idempotent(case):
+    words, texts = case
+    words = [w for w in words if "*" not in w]
+    for t in texts:
+        once = _censor(t, words)
+        assert _censor(once, words) == once
+
+
+def test_censor_pass_rules():
+    def groups(words):
+        return [p for p, _ in censor_passes(words)]
+
+    # no touch: one pass per length
+    assert groups(["ab", "cd", "xyz", "ef"]) == ["(?iu)ab|cd|ef", "(?iu)xyz"]
+    # an earlier word overlapping the start of a later one may share
+    assert groups(["ab", "bc"]) == ["(?iu)ab|bc"]
+    # a later word starting before an earlier one may not
+    assert groups(["bc", "ab"]) == ["(?iu)bc", "(?iu)ab"]
+    # containment across lengths, case-insensitively: "B" inside "ab"
+    assert groups(["ab", "B"]) == ["(?iu)ab", "(?iu)B"]
+    # a word with '*' is a barrier; empty words are skipped
+    assert groups(["x", "", "*y", "z"]) == ["(?iu)x", "(?iu)\\*y", "(?iu)z"]
+    # masks count characters, never lowered whole words ("İ".lower() is 2)
+    assert censor_passes(["İx"]) == [("(?iu)İx", "**")]
+    assert censor_passes([]) == []
 
 
 # --- embedding quantization kernel (pure numpy, Spark-free) -----------------
