@@ -27,7 +27,6 @@ from hw_kafka_streams_spark.operators.dedup import (
 from hw_kafka_streams_spark.operators.sampling import (
     hash_split,
     reservoir_per_key,
-    stratified_sample,
 )
 from hw_kafka_streams_spark.operators.similarity import (
     brute_force_topk,
@@ -65,7 +64,6 @@ __all__ = [
     "salted_join",
     "sequence_pack_stats",
     "simhash_candidate_pairs",
-    "stratified_sample",
     "token_distribution_drift",
     "unigram_logprob_scores",
 ]

@@ -28,9 +28,7 @@ instead of a literal array; the build side is unchanged.
 
 Spark's own runtime bloom pruning (InjectRuntimeFilter, asserted in
 tests/test_plans.py) does this transparently *within* one query; this
-operator makes the bitmap a first-class, persistable artifact that can
-be built once and probed by later jobs — the cross-job reuse Spark's
-optimizer cannot do.
+operator makes the bitmap an explicit, collected value.
 
 Reference parity: the reference app's only "membership" structure is
 the blocked-users GlobalKTable (KafkaStreamApp.java:140-145) probed
@@ -126,7 +124,6 @@ def bloom_anti_join(
     key_col: str = "fp",
     num_bits: int = 1 << 17,
     k: int = 3,
-    bitmap: list[int] | None = None,
 ) -> DataFrame:
     """Exact ``candidates LEFT ANTI JOIN reference ON key`` with the
     candidate side pre-pruned by a Bloom filter on the reference keys.
@@ -135,14 +132,8 @@ def bloom_anti_join(
     hits are re-checked by a real anti join), but the join's streamed
     side carries only bloom hits. Reference keys are projected and
     de-duplicated before the join so its build side is minimal.
-
-    Pass a pre-built ``bitmap`` (load_bitmap of a persisted one) to
-    skip the reference scan the build would cost — the incremental-
-    dedup path, where the bitmap is the cross-job artifact and the
-    reference table is only touched for maybe-hits.
     """
-    if bitmap is None:
-        bitmap = bloom_bitmap(reference, key_col, num_bits, k)
+    bitmap = bloom_bitmap(reference, key_col, num_bits, k)
     # persist: both output branches read the probed table; without it
     # the candidate scan AND the literal-bitmap probe expression (a
     # num_bits/64-element array getbit fold — the costly part to
@@ -157,32 +148,3 @@ def bloom_anti_join(
     ref_keys = reference.select(key_col).distinct()
     survivors = maybe.join(ref_keys, on=key_col, how="left_anti")
     return definitely_new.unionByName(survivors)
-
-
-def save_bitmap(spark, bitmap: list[int], path: str) -> None:
-    """Persist a bloom bitmap as a (word, bits) parquet table — the
-    cross-job artifact: build once over the historical corpus, probe
-    from every future increment job without rescanning history."""
-    rows = [(i, w) for i, w in enumerate(bitmap) if w != 0]
-    spark.createDataFrame(rows or [(0, 0)], "word int, bits long").write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def load_bitmap(spark, path: str, num_bits: int = 1 << 17) -> list[int]:
-    """Load a persisted bloom bitmap back into its dense-list form."""
-    bitmap = [0] * (num_bits // 64)
-    for row in spark.read.parquet(path).collect():
-        bitmap[row["word"]] |= row["bits"]
-    return bitmap
-
-
-def merge_bitmaps(a: list[int], b: list[int]) -> list[int]:
-    """Union two bloom filters built with the SAME (num_bits, k):
-    elementwise OR. Exactly equals the bitmap built over the union of
-    the two key sets (positions depend only on the key), which is what
-    makes daily-increment blooms fold into the historical one without
-    ever rescanning history."""
-    if len(a) != len(b):
-        raise ValueError("bitmaps differ in num_bits")
-    return [x | y for x, y in zip(a, b)]

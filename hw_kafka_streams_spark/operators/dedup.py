@@ -621,34 +621,6 @@ def keep_cluster_representatives(
     )
 
 
-def simhash64(text: Column | str) -> Column:
-    """64-bit SimHash over word tokens (unit weights).
-
-    bit i of the signature = sign of Σ_tokens (2·bit_i(xxhash64(tok))−1).
-    Hash once per token, then fold 64 bit-sums — all array expressions.
-    """
-    toks = word_tokens(text)
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def _bitsum(i: int) -> Column:
-        return F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc + (F.shiftright(h, i).bitwiseAND(F.lit(1)) * 2 - 1),
-        )
-
-    sig = F.lit(0).cast("long")
-    for i in range(64):
-        # bit 63 of a signed long is the sign bit: 1<<63 as a literal
-        bit_val = (1 << i) if i < 63 else -(1 << 63)
-        sig = sig.bitwiseOR(
-            F.when(_bitsum(i) > 0, F.lit(bit_val).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return sig
-
-
 def simhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -658,10 +630,11 @@ def simhash_signatures(
 ) -> DataFrame:
     """Per-document 64-bit SimHash signatures: (id, sig: long).
 
-    Same math as :func:`simhash64`, but shaped for scale: explode
-    tokens → hash each token ONCE → groupBy(id) with 64 narrow `sum`
-    aggregates (one per bit), then assemble the signature from the 64
-    sums post-aggregation. Partial aggregation keeps the shuffle at
+    bit i of the signature = sign of Σ_tokens (2·bit_i(hash(tok))−1)
+    with unit weights, shaped for scale: explode tokens → hash each
+    token ONCE → groupBy(id) with 64 narrow `sum` aggregates (one per
+    bit), then assemble the signature from the 64 sums
+    post-aggregation. Partial aggregation keeps the shuffle at
     one 64-long row per doc per partition; token-less docs get no row.
 
     ``hash_mode='md5'`` uses the DuckDB-twin :func:`md5h` token hash

@@ -50,22 +50,6 @@ def quantize_np(A: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.n
     return Q.astype(np.int8), norm, max_abs, mse
 
 
-def l2_normalize_arrow(vec: Column) -> Column:
-    """Unit-L2 vectors (array<double>); zero vectors pass through."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<double>")
-    def _norm(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="object")
-        A = _stack(v)
-        n = np.sqrt(np.einsum("ij,ij->i", A, A))
-        n[n == 0] = 1.0
-        return pd.Series(list(A / n[:, None]))
-
-    return _norm(vec)
-
-
 def quantize_stats_arrow(vec: Column) -> Column:
     """Per-vector int8-quantization stats as a struct column:
 
@@ -74,8 +58,7 @@ def quantize_stats_arrow(vec: Column) -> Column:
     - ``mse_ppm`` — mean squared reconstruction error × 1e6
 
     One batched numpy pass: quantize, dequantize, compare. The full
-    int8 arrays stay inside the kernel — callers that want the
-    quantized vectors use :func:`quantize_int8_arrow`.
+    int8 arrays stay inside the kernel.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -89,21 +72,6 @@ def quantize_stats_arrow(vec: Column) -> Column:
         )
 
     return _stats(vec)
-
-
-def quantize_int8_arrow(vec: Column) -> Column:
-    """int8-quantized vectors (array<tinyint>), same contract as
-    :func:`quantize_stats_arrow`."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<tinyint>")
-    def _q(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="object")
-        Q, _, _, _ = quantize_np(_stack(v))
-        return pd.Series(list(Q))
-
-    return _q(vec)
 
 
 def covariance_partials(df, vec_col: str = "embedding", dim: int = 64):
@@ -163,18 +131,3 @@ def pca_fit(df, vec_col: str = "embedding", dim: int = 64, k: int = 8):
         if comps[i][j] < 0:
             comps[i] = -comps[i]
     return comps, vals[order], float(vals.sum()), mean
-
-
-def pca_project_arrow(vec: Column, comps: np.ndarray, mean: np.ndarray) -> Column:
-    """Project embeddings onto fitted components (Arrow numpy batches)."""
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(comps, dtype=np.float64)
-    m = np.asarray(mean, dtype=np.float64)
-
-    @pandas_udf("array<double>")
-    def _proj(v: pd.Series) -> pd.Series:
-        A = _stack(v) - m
-        return pd.Series(list((A @ C.T)))
-
-    return _proj(vec)

@@ -580,11 +580,6 @@ _BS_TABLE = {
     **{c: 576 << (c - 2) for c in range(0b0010, 0b0110)},
     **{c: 256 << (c - 8) for c in range(0b1000, 0b10000)},
 }
-_SR_TABLE = {
-    0b0001: 88200, 0b0010: 176400, 0b0011: 192000, 0b0100: 8000,
-    0b0101: 16000, 0b0110: 22050, 0b0111: 24000, 0b1000: 32000,
-    0b1001: 44100, 0b1010: 48000, 0b1011: 96000,
-}
 
 
 def _decode_frame(

@@ -50,65 +50,6 @@ def z_value(x: Column | str, y: Column | str) -> Column:
     return spread_bits(xc).bitwiseOR(F.shiftleft(spread_bits(yc), 1))
 
 
-def zorder_repartition(
-    df: DataFrame, x: str, y: str, num_partitions: int = 32
-) -> DataFrame:
-    """Cluster ``df`` for 2-D data skipping on (x, y).
-
-    Range-partition on the Z-value then sort within partitions — the
-    write-side layout pass before ``.write.parquet``. Each output file
-    then covers a compact Z-range ⇒ tight per-file min/max on BOTH
-    columns. One range-exchange (sampled boundaries), one local sort —
-    the same cost as a global sort, amortized over every future
-    selective read.
-    """
-    zed = df.withColumn("_z", z_value(x, y))
-    return (
-        zed.repartitionByRange(num_partitions, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-
-
-def compact_files(
-    spark, path: str, target_mb: int = 128, sort_within: str | None = None
-) -> int:
-    """Bin-pack a directory of small parquet files into ~``target_mb``
-    outputs (the lakehouse OPTIMIZE / compaction pass).
-
-    Streaming ingest and fine-grained partitioned writes leave thousands
-    of KB-scale files; at 100 TB that murders scan planning (one task +
-    one footer read per file) and the shuffle that follows. Rewrite:
-    size-derived partition count → coalesce-by-repartition → staged
-    atomic swap (same pattern as sources/files.merge_upsert, crash-safe:
-    readers see old or new, never half).
-
-    Returns the output file count. ``sort_within`` optionally sorts rows
-    within each output file so parquet min/max stay tight after the
-    rewrite (pair with zorder_repartition for 2-D keys).
-    """
-    import glob
-    import os
-    import shutil
-
-    files = glob.glob(os.path.join(path, "*.parquet")) + glob.glob(
-        os.path.join(path, "part-*")
-    )
-    total_bytes = sum(os.path.getsize(f) for f in set(files))
-    n_out = max(1, -(-total_bytes // (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    out = df.repartition(n_out)
-    if sort_within:
-        out = out.sortWithinPartitions(sort_within)
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    out.write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".__compact_old__"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return len(glob.glob(os.path.join(path, "part-*.parquet")))
-
-
 def balanced_token_shards(
     df: DataFrame,
     text_col: str = "text",

@@ -12,8 +12,7 @@ The container has no image/audio codec LIBRARIES, so exotic
 compressed-format decode is STUBBED (``NotImplementedError`` at
 clearly-marked points: T.81 QM-arithmetic JPEG modes, interoperable
 MP3/H.264 bitstreams — though the CORES of both families are real
-now: block-matching motion compensation in operators/mcvideo.py and
-the MDCT/scalefactor transform-audio path in operators/mdctcodec.py).
+now: block-matching motion compensation in operators/mcvideo.py).
 But a large real surface is implemented from public specs:
 PNG/JPEG/GIF/BMP/TIFF/WebP header parsing, **baseline + progressive +
 lossless(SOF3) JPEG pixel decode via the pure-numpy ITU T.81 codec in
@@ -54,10 +53,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
-
-MULTIMODAL_META_SCHEMA = (
-    "doc_id long, modality string, n_bytes long, content_sha256 string, mime string"
-)
 
 
 def payload_stage(
@@ -429,20 +424,6 @@ def make_fake_jpeg(width: int, height: int) -> bytes:
     return b"\xff\xd8" + app0 + sof0 + body
 
 
-def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic fake-PNG payload per row (test/bench stand-in for a
-    real binary column, which the driver tables don't carry).
-
-    width = id % 640 + 16, height = id % 480 + 16 — pure arithmetic so
-    an SQL oracle can verify the decode roundtrip. Runs as an
-    Arrow-batched mapInPandas stage, the same shape a real
-    payload-bearing scan would feed downstream.
-    """
-    return synth_stage(
-        df.select(id_col), lambda i: make_fake_png(i % 640 + 16, i % 480 + 16)
-    )
-
-
 def make_fake_gif(width: int, height: int) -> bytes:
     """Deterministic minimal GIF (signature + logical screen descriptor
     + filler) for plumbing tests."""
@@ -507,27 +488,13 @@ _FAKE_IMAGE_MAKERS = (
 
 
 def synthesize_image_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Mixed-format twin of :func:`synthesize_png_payloads`: ``id % 6``
-    cycles PNG / JPEG / GIF / BMP / TIFF / WebP — same ``id %``
-    dimension arithmetic, so an SQL oracle can still verify the decode
-    roundtrip per format."""
+    """Mixed-format payloads: ``id % 6`` cycles PNG / JPEG / GIF / BMP /
+    TIFF / WebP at ``(id % 640 + 16) x (id % 480 + 16)``, so an SQL
+    oracle can verify the decode roundtrip per format."""
     return synth_stage(
         df.select(id_col),
         lambda i: _FAKE_IMAGE_MAKERS[i % 6](i % 640 + 16, i % 480 + 16),
     )
-
-
-def frame_sample_stub(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling stage — STUB (no ffmpeg in container).
-
-    The Spark-side contract is defined (one row per sampled frame,
-    payload carried through), the decode call raises.
-    """
-
-    def row(doc_id, raw: bytes):
-        raise NotImplementedError("video decode requires ffmpeg; plumbing stub only")
-
-    return payload_stage(df, row, "doc_id long, frame_idx int, payload binary")
 
 
 # ------------------------------------------------------------- real pixels
@@ -651,8 +618,7 @@ def sample_video_frames(
     and emit per-frame features (exact integer mean luma). One input
     row fans out to its sampled frames — the mapInPandas row-expanding
     shape that a ffmpeg-backed sampler would use identically;
-    compressed containers still raise at the stub
-    (:func:`frame_sample_stub`).
+    compressed containers raise ``NotImplementedError``.
     """
 
     def frames(doc_id, raw: bytes):

@@ -92,9 +92,6 @@ def _paeth(a: int, b: int, c: int) -> int:
     return b if pb <= pc else c
 
 
-_PAETH_VEC = np.vectorize(_paeth, otypes=[np.int32])
-
-
 def _unfilter(
     raw: bytes, offset: int, h: int, w: int, channels: int, bit_depth: int
 ) -> tuple[np.ndarray, int]:
@@ -180,9 +177,10 @@ def decode_png(data: bytes) -> np.ndarray:
     alpha dropped, palette resolved, sub-byte indices unpacked, 16-bit
     reduced by >>8, Adam7 de-interlaced). Raises ValueError for
     corrupt data or spec-illegal (type, depth) combinations, and
-    ``CodecError`` (a ValueError) for a stream cut short anywhere: a bad
-    signature, a chunk whose length and CRC run past the end, or no
-    ``IEND``."""
+    ``CodecError`` (a ValueError) for a stream cut short or damaged
+    anywhere: a bad signature, a chunk whose length and CRC run past
+    the end, a chunk whose CRC-32 does not match, no ``IEND``, or an
+    IDAT stream zlib cannot inflate."""
     if data[:8] != _SIG:
         raise CodecError("not a PNG (bad signature)")
     pos = 8
@@ -199,6 +197,9 @@ def decode_png(data: bytes) -> np.ndarray:
         pos += 12 + length  # len + tag + payload + crc
         if pos > len(data):
             raise CodecError(f"truncated PNG: {tag!r} chunk runs past the end")
+        (crc,) = struct.unpack(">I", data[pos - 4 : pos])
+        if crc != zlib.crc32(tag + payload):
+            raise CodecError(f"corrupt PNG: {tag!r} chunk CRC mismatch")
         if tag == b"IHDR":
             if length != 13:
                 raise CodecError(f"corrupt PNG: IHDR length {length}, not 13")
@@ -246,7 +247,10 @@ def decode_png(data: bytes) -> np.ndarray:
         if color_type == 0 and bit_depth < 8
         else 1
     )
-    raw = zlib.decompress(bytes(idat))
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as exc:
+        raise CodecError(f"corrupt PNG: {exc}") from exc
     if not interlace:
         flat, used = _unfilter(raw, 0, h, w, channels, bit_depth)
         if used != len(raw):

@@ -63,14 +63,6 @@ def hash_split(
     return out
 
 
-def stratified_sample(
-    df: DataFrame, strata_col: str, fractions: dict, seed: int = 42
-) -> DataFrame:
-    """Per-stratum Bernoulli sampling (`sampleBy`): cheap class
-    rebalancing, e.g. downsampling an over-represented language."""
-    return df.sampleBy(strata_col, fractions, seed)
-
-
 def stratified_hash_sample(
     df: DataFrame,
     strata_col: str,

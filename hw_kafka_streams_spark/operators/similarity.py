@@ -607,124 +607,6 @@ def ivf_topk_det(
     )
 
 
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int | None = None,
-    seed: int = 13,
-) -> None:
-    """Persist an IVF index: corpus partitioned on disk by nearest
-    centroid (`partitionBy(cid)`), centroid table alongside.
-
-    This is the at-rest layout that makes probes cheap: a query that
-    probes 4 of 64 centroids READS 1/16 of the corpus — partition
-    pruning at the parquet scan, visible as PartitionFilters in the
-    plan. Build cost is one k-means fit + one shuffle-free write.
-    ``n_centroids=None`` auto-scales via :func:`ivf_geometry_for`.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    if n_centroids is None:
-        n_centroids = ivf_geometry_for(corpus.count())[0]
-    feat = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    model = KMeans(k=n_centroids, seed=seed, maxIter=10).fit(feat)
-    indexed = model.transform(feat).select(
-        "neighbor_id", "cvec", F.col("prediction").alias("cid")
-    )
-    indexed.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/lists")
-    spark = corpus.sparkSession
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    spark.createDataFrame(cent_rows, "cid int, centroid array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probe: int | None = None,
-) -> DataFrame:
-    """Search a persisted IVF index (see :func:`build_ivf_index`).
-
-    The union of probed centroid ids across the query batch becomes a
-    STATIC ``cid IN (...)`` predicate — partition pruning skips every
-    unprobed inverted list at the scan. Per-query restriction then
-    happens in the (broadcast) candidate join. Centroids and the probe
-    set are driver-side literals: both are tiny by construction
-    (n_centroids entries). ``n_probe=None`` derives from the stored
-    centroid count (4 up to 64 lists, then lists/16 — the same pinned
-    ~6% scan fraction as :func:`ivf_geometry_for`).
-    """
-    centroids = {
-        r.cid: r.centroid for r in spark.read.parquet(f"{path}/centroids").collect()
-    }
-    if n_probe is None:
-        n_probe = max(4, len(centroids) // 16)
-    qbase = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    if len(centroids) <= 32:
-        qv = F.col("qvec").cast("array<double>")
-        scored = F.array(
-            *[
-                F.struct(
-                    (-cosine(qv, F.array(*[F.lit(x) for x in c]))).alias("negsim"),
-                    F.lit(cid).alias("cid"),
-                )
-                for cid, c in sorted(centroids.items())
-            ]
-        )
-        probes = F.slice(F.array_sort(scored), 1, n_probe)
-        q = qbase.select(
-            "query_id", "qvec", F.explode(probes).alias("p")
-        ).select("query_id", "qvec", F.col("p.cid").alias("cid"))
-    else:
-        # dense cid order (build_ivf_index writes 0..k-1); the Arrow
-        # kernel indexes by position, so map position -> stored cid
-        cid_order = sorted(centroids)
-        cents = [centroids[c] for c in cid_order]
-        pos2cid = F.array(*[F.lit(int(c)) for c in cid_order])
-        q = qbase.select(
-            "query_id",
-            "qvec",
-            F.explode(
-                topk_centroids_arrow(F.col("qvec"), cents, n_probe)
-            ).alias("pos"),
-        ).select(
-            "query_id",
-            "qvec",
-            F.element_at(pos2cid, F.col("pos") + 1).alias("cid"),
-        )
-    probe_cids = sorted({r.cid for r in q.select("cid").distinct().collect()})
-    lists = spark.read.parquet(f"{path}/lists").filter(F.col("cid").isin(probe_cids))
-    cand = (
-        lists.join(F.broadcast(q), "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_arrow(F.col("qvec"), F.col("cvec")), 4).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
-
-
 def quantize_vec_arrow(vec: Column) -> Column:
     """Per-vector symmetric int8 quantization: struct(ma, q) where
     ``ma`` is the max-abs scale and ``q_i = floor(x_i·127/ma + 0.5)``
@@ -1227,8 +1109,8 @@ def ivfpq_topk(
     shortlist pay exact fp32 cosine. Both trainers are the
     deterministic-Lloyd recipe. This composition is what a 100 TB
     embedding store actually deploys: with the corpus partitioned by
-    cid on disk (build_ivf_index), the probe is partition pruning at
-    the parquet scan and the scan itself is 32× lighter.
+    cid on disk, the probe is partition pruning at the parquet scan
+    and the scan itself is 32× lighter.
 
     This variant quantizes raw (normalized) vectors, not
     list-residuals; residual encoding is the classic refinement
@@ -1282,144 +1164,6 @@ def ivfpq_topk(
         F.col("crnk") <= shortlist
     )
     rer = short.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine_arrow(F.col("qvec"), F.col("cvec")), 4).alias("cos_sim"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        rer.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
-
-
-def build_ivfpq_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    m: int = 8,
-    ks: int = 16,
-    seed: int = 13,
-) -> None:
-    """Persist an IVF-PQ index: CODES-ONLY inverted lists partitioned
-    by coarse centroid (`partitionBy(cid)`), centroid + codebook
-    tables alongside.
-
-    The hot artifact stores (id, m-byte codes) and nothing else — the
-    32× compression is ON DISK, not just in flight; full vectors stay
-    in the primary store and are fetched only for shortlist re-rank.
-    Probing 4 of 16 lists reads 25% of an already-32×-smaller table:
-    the scan cost at 100 TB drops ~128× vs brute-force fp32.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    model = KMeans(k=n_centroids, seed=seed, maxIter=10).fit(feat)
-    cb = pq_codebooks(corpus, id_col, vec_col, m, ks)
-    indexed = model.transform(feat).select(
-        "neighbor_id",
-        F.col("prediction").alias("cid"),
-        pq_encode_arrow(F.col("cvec"), cb).alias("codes"),
-    )
-    indexed.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/lists")
-    spark = corpus.sparkSession
-    cent_rows = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    spark.createDataFrame(cent_rows, "cid int, centroid array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    cb_rows = [
-        (s, c, list(map(float, vec)))
-        for s, book in enumerate(cb)
-        for c, vec in enumerate(book)
-    ]
-    spark.createDataFrame(
-        cb_rows, "sub int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-
-
-def ivfpq_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probe: int = 4,
-) -> DataFrame:
-    """Search a persisted IVF-PQ index (:func:`build_ivfpq_index`).
-
-    The probe set becomes a static ``cid IN (...)`` predicate —
-    partition pruning skips unprobed lists at the parquet scan, and
-    the scan itself reads only (id, codes). ADC scores the pruned
-    codes; the per-query shortlist (tiny) broadcast-joins back to the
-    PRIMARY store for exact fp32 re-rank — the index never stores full
-    vectors.
-    """
-    centroids = {
-        r.cid: r.centroid
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    }
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    n_sub = max(r.sub for r in cb_rows) + 1
-    n_code = max(r.code for r in cb_rows) + 1
-    cb = [[None] * n_code for _ in range(n_sub)]
-    for r in cb_rows:
-        cb[r.sub][r.code] = list(r.centroid)
-    qv = F.col("qvec").cast("array<double>")
-    scored = F.array(
-        *[
-            F.struct(
-                (-cosine(qv, F.array(*[F.lit(x) for x in c]))).alias("negsim"),
-                F.lit(cid).alias("cid"),
-            )
-            for cid, c in sorted(centroids.items())
-        ]
-    )
-    probes = F.slice(F.array_sort(scored), 1, n_probe)
-    q = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-        .select("query_id", "qvec", F.explode(probes).alias("p"))
-        .select("query_id", "qvec", F.col("p.cid").alias("cid"))
-    )
-    probe_cids = sorted({r.cid for r in q.select("cid").distinct().collect()})
-    lists = spark.read.parquet(f"{path}/lists").filter(
-        F.col("cid").isin(probe_cids)
-    )
-    coarse = (
-        lists.join(F.broadcast(q), "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "qvec",
-            pq_adc_score_arrow(F.col("codes"), F.col("qvec"), cb).alias("adc"),
-        )
-    )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    short = coarse.withColumn("crnk", F.row_number().over(w1)).filter(
-        F.col("crnk") <= shortlist
-    )
-    primary = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
-    rer = primary.join(
-        F.broadcast(short.select("query_id", "neighbor_id", "qvec")),
-        "neighbor_id",
-    ).select(
         "query_id",
         "neighbor_id",
         F.round(cosine_arrow(F.col("qvec"), F.col("cvec")), 4).alias("cos_sim"),

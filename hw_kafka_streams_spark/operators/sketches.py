@@ -42,24 +42,6 @@ def _bucket(depth_col: Column, key_col: Column, width: int) -> Column:
     ) % F.lit(width)
 
 
-def cms_build(
-    df: DataFrame, key_col: Column | str, depth: int = 4, width: int = 1024
-) -> DataFrame:
-    """Build the CMS: (cms_row, cms_bucket, cnt), ≤ depth·width rows.
-
-    Two-stage: first a map-side-combinable per-KEY count (the shuffle
-    carries distinct keys, vocabulary-sized), then the d hashes run
-    once per DISTINCT key and the bucket counter sums the key counts —
-    identical counters to hashing every occurrence, but the md5 work
-    drops from d·|rows| to d·|vocab| (measured 2.3 s → ~1 s on the
-    sf0.1 corpus build, where hashing dominated)."""
-    key = F.col(key_col) if isinstance(key_col, str) else key_col
-    wc = df.select(key.alias("_k")).groupBy("_k").agg(
-        F.count(F.lit(1)).alias("_c")
-    )
-    return cms_build_counted(wc, "_k", "_c", depth, width)
-
-
 def cms_build_counted(
     wc: DataFrame,
     key_col: str,

@@ -16,6 +16,7 @@ salting entirely).
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Sequence
 
@@ -104,10 +105,6 @@ def spread_small(
     return df.repartition(n, *[F.col(c) for c in cols])
 
 
-#: (path, st_size, st_mtime_ns) → parquet row-group count; a file
-#: rewritten in place gets a new stamp and is probed again.
-_WIDTH_MEMO: dict[tuple[str, int, int], int] = {}
-
 #: At or above this many source files the scan is wide by construction
 #: (each file is >= 1 split) and footers are not worth reading.
 _MANY_FILES = 64
@@ -137,12 +134,15 @@ def _probed_scan_width(df: DataFrame) -> int:
             st = os.stat(path)
         except OSError:
             return 1 << 30
-        memo_key = (path, st.st_size, st.st_mtime_ns)
-        groups = _WIDTH_MEMO.get(memo_key)
-        if groups is None:
-            import pyarrow.parquet as pq
-
-            groups = pq.ParquetFile(path).metadata.num_row_groups
-            _WIDTH_MEMO[memo_key] = groups
-        total += groups
+        total += _row_groups(path, st.st_size, st.st_mtime_ns)
     return total
+
+
+@functools.lru_cache(maxsize=1024)
+def _row_groups(path: str, size: int, mtime_ns: int) -> int:
+    """Parquet row-group count of ``path``, cached on the file's
+    (path, size, mtime) stamp: a file rewritten in place gets a new
+    stamp and is probed again, and the cache stays bounded."""
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_row_groups

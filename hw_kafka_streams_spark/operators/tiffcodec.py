@@ -117,13 +117,20 @@ def _assemble_tiff(
     return head + pixels + struct.pack(e + "HHH", bits, bits, bits) + ifd
 
 
+def _need(data: bytes, end: int, what: str) -> None:
+    """Raise ``CodecError`` unless ``data`` holds ``end`` bytes."""
+    if end > len(data):
+        raise CodecError(f"truncated TIFF: {what} runs past the end")
+
+
 def decode_tiff_pixels(data: bytes) -> np.ndarray:
     """Decode a baseline TIFF to an (h, w, 3) RGB array — uint8 for
     8-bit samples, uint16 for 16-bit (gray replicated). Raises
     NotImplementedError for unsupported layouts, ValueError for
-    corrupt data."""
-    if len(data) < 8:
-        raise ValueError("not a TIFF (truncated header)")
+    corrupt data, and ``CodecError`` (a ValueError) when the header,
+    the IFD (through its next-IFD offset), an out-of-line value array
+    or a strip runs past the end."""
+    _need(data, 8, "header")
     if data[:4] == b"II*\x00":
         e = "<"
     elif data[:4] == b"MM\x00*":
@@ -131,7 +138,9 @@ def decode_tiff_pixels(data: bytes) -> np.ndarray:
     else:
         raise ValueError("not a TIFF (bad magic)")
     (ifd_off,) = struct.unpack(e + "I", data[4:8])
+    _need(data, ifd_off + 2, "IFD entry count")
     (n_entries,) = struct.unpack(e + "H", data[ifd_off : ifd_off + 2])
+    _need(data, ifd_off + 2 + 12 * n_entries + 4, "IFD")
     tags: dict[int, tuple[int, int, bytes]] = {}
     for i in range(n_entries):
         base = ifd_off + 2 + 12 * i
@@ -152,6 +161,7 @@ def decode_tiff_pixels(data: bytes) -> np.ndarray:
                 for k in range(cnt)
             ]
         (off,) = struct.unpack(e + "I", raw)
+        _need(data, off + size * cnt, f"tag {tag} values")
         return [
             struct.unpack(fmt, data[off + k * size : off + (k + 1) * size])[0]
             for k in range(cnt)
@@ -186,6 +196,8 @@ def decode_tiff_pixels(data: bytes) -> np.ndarray:
     counts = values(279)
     if not offsets or not counts or len(offsets) != len(counts):
         raise ValueError("corrupt TIFF: bad strip tables")
+    for o, c in zip(offsets, counts):
+        _need(data, o + c, "strip")
     strips = [data[o : o + c] for o, c in zip(offsets, counts)]
     if comp == 7:
         # "new-style" JPEG-in-TIFF: each strip is a complete JPEG

@@ -1,7 +1,6 @@
 """Physical-plan introspection: the 100 TB design-review toolkit."""
 
 from hw_kafka_streams_spark.plans.inspect import (
-    count_shuffles,
     formatted_plan,
     global_window_count,
     physical_plan,
@@ -11,7 +10,6 @@ from hw_kafka_streams_spark.plans.inspect import (
 )
 
 __all__ = [
-    "count_shuffles",
     "formatted_plan",
     "global_window_count",
     "physical_plan",

@@ -26,24 +26,11 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def count_shuffles(df: DataFrame) -> int:
-    """Number of DISTINCT shuffle-exchange nodes in the physical plan.
-
-    Counted by walking the JVM plan tree and deduplicating on SparkPlan
-    node ids, NOT by counting `Exchange` substrings in the plan string:
-    `toString` prints a persisted subtree once per InMemoryTableScan
-    consumer and a reused exchange once per reference, so the textual
-    count reports work that executes once as if it ran k times (the
-    r4 report showed 78 for q_prefix_filter_dups; the physical count
-    is an order of magnitude lower). ReusedExchangeExec resolves to its
-    original exchange's id, so reuse never double-counts.
-    """
-    return exchange_counts(df)[0]
-
-
 def exchange_counts(df: DataFrame) -> tuple[int, int]:
     """(distinct shuffle exchanges, distinct broadcast exchanges) by
-    JVM plan walk with node-id dedup — see :func:`count_shuffles`.
+    JVM plan walk with node-id dedup, not by counting ``Exchange`` in
+    the plan string, which prints a persisted subtree once per consumer
+    and a reused exchange once per reference.
 
     Descends through AQE wrappers, materialized query stages,
     ReusedExchangeExec (to the original exchange's id), and into each
@@ -271,7 +258,7 @@ def plan_report(df: DataFrame, execute: bool = False) -> dict:
     plan = _collapse_cached_repeats(raw)
     # broadcasts from the SAME node-id-deduped JVM walk as shuffles —
     # string-counting BroadcastHashJoin repeats a reused/cached subtree
-    # once per consumer (the exact inflation count_shuffles documents;
+    # once per consumer (the exact inflation _node_counts documents;
     # the r9 PLANS.md showed a nonsense 312 for q_bleu_pairs)
     n_shuffles, n_broadcasts, n_smj, n_nlj = _node_counts(df)
     return {

@@ -1156,9 +1156,9 @@ def q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(operators/layout.z_value): bit-interleave of two 10-bit key "
     "projections, bucketed to show the space-filling-curve "
     "distribution. Pure codegen'd bit arithmetic — the oracle replays "
-    "the identical magic-number spread in SQL. The write-side layout "
-    "pass (zorder_repartition: range-partition + sort on z) is what a "
-    "lakehouse ZORDER BY does before a 100 TB parquet write.",
+    "the identical magic-number spread in SQL. Range-partitioning and "
+    "sorting on z before a parquet write is what a lakehouse ZORDER BY "
+    "does.",
 )
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hw_kafka_streams_spark.operators.layout import z_value

@@ -6681,10 +6681,7 @@ def q_log_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact trajectory; everything else is integer prefix sums. "
     "Scale shape: all windows run over the domain-bounded hour grid "
     "(~720 rows at any SF), the event scan is one partial-agged "
-    "hour bucketing; the REAL streaming twin is "
-    "streaming/stateful.streaming_page_hinkley "
-    "(applyInPandasWithState, O(1) state per key, cross-batch "
-    "state-carry tests in tests/test_streaming.py).",
+    "hour bucketing.",
 )
 def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W

@@ -1,9 +1,8 @@
 """Snapshot-versioned parquet tables: time travel, optimistic commits,
 retention — the missing piece of the MERGE/DELETE/OPTIMIZE story.
 
-``sources/files.merge_upsert`` / ``delete_rows`` and
-``operators/layout.compact_files`` each rewrite-and-swap atomically but
-keep NO history: a bad upsert is unrecoverable and concurrent writers
+A plain parquet directory rewritten in place (MERGE, DELETE, compact)
+keeps NO history: a bad upsert is unrecoverable and concurrent writers
 race on the directory rename. This module is the public
 lakehouse-table-format design (Iceberg/Delta-style, re-implemented from
 first principles — no external table format ships in this container)
@@ -253,9 +252,8 @@ def merge_upsert_snapshot(
     target_files: int | None = None,
 ) -> int:
     """Versioned MERGE: rows matching ``updates``' keys are replaced,
-    new keys appended — same logical plan as sources/files.merge_upsert
-    (LEFT ANTI ⊎ updates) but the result lands as a NEW snapshot, so
-    the pre-merge table remains readable at version N−1."""
+    new keys appended (LEFT ANTI ⊎ updates); the result lands as a NEW
+    snapshot, so the pre-merge table remains readable at version N−1."""
     base = read_snapshot(spark, table)
     keep = base.join(updates.select(*keys).distinct(), keys, "left_anti")
     parent = current_version(table)
@@ -277,45 +275,6 @@ def delete_rows_snapshot(
     parent = current_version(table)
     files = _write_data_files(keep, table, parent + 1, target_files)
     return _commit(table, parent, files, "delete", keep.schema.jsonValue())
-
-
-def compact_snapshot(
-    spark: SparkSession, table: str, target_mb: int = 128,
-    sort_within: str | None = None,
-) -> int:
-    """OPTIMIZE as a commit: bin-pack the head's files into
-    ~``target_mb`` outputs and publish as a new version. Readers pinned
-    to older versions are untouched; no directory swap, no reader ever
-    sees a half-compacted state."""
-    parent = current_version(table)
-    m = _read_manifest(table, parent)
-    total = sum(
-        os.path.getsize(os.path.join(table, f)) for f in m["files"]
-    )
-    n_out = max(1, -(-total // (target_mb * 1024 * 1024)))
-    df = read_snapshot(spark, table, parent).repartition(n_out)
-    if sort_within:
-        df = df.sortWithinPartitions(sort_within)
-    files = _write_data_files(df, table, parent + 1)
-    return _commit(table, parent, files, "compact", df.schema.jsonValue())
-
-
-def history(table: str) -> list[dict]:
-    """All retained versions, oldest first: (version, parent,
-    operation, n_files, committed_at)."""
-    out = []
-    for v in _list_versions(table):
-        m = _read_manifest(table, v)
-        out.append(
-            {
-                "version": m["version"],
-                "parent": m["parent"],
-                "operation": m["operation"],
-                "n_files": len(m["files"]),
-                "committed_at": m["committed_at"],
-            }
-        )
-    return out
 
 
 def vacuum(table: str, keep_last: int = 2) -> dict:

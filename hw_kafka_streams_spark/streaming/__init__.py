@@ -1,10 +1,7 @@
 """Structured Streaming layer.
 
 Submodules: serde (Message JSON + changelog compaction), pipeline (the
-reference topology + per-batch GlobalKTable refresh), windows
-(watermarked tumbling/sliding/session + streaming dedup), stateful
-(applyInPandasWithState TTL counts / Misra-Gries +
-transformWithStateInPandas timer sessions), neardup (incremental
-MinHash-LSH dedup over a persistent band-partitioned index), prep
-(streaming LLM data prep).
+reference topology + per-batch GlobalKTable refresh), topics (the
+broker-free topic admin), windows (watermarked tumbling/sliding/session
+counts).
 """

@@ -2,25 +2,15 @@
 usage: topic creation with partition counts in KafkaStreamApp
 createTopics, and the delete-everything reset in RemoveAll.removeAll).
 
-Two transports behind one interface:
-
-* :class:`FileTopicAdmin` — the broker-free twin used by the file
-  topology (`run_file_topology*`). A topic is a directory under the
-  admin root carrying a ``_topic_meta.json`` manifest (partitions +
-  config, like Kafka's topic metadata); producers append parquet files;
-  ``delete_all`` resets the whole namespace exactly like the
-  reference's startup wipe. ``partition_for`` reproduces Kafka's
-  default partitioner shape (hash(key) % partitions) so a keyed
-  producer can lay files out per-partition — at 100 TB/day the
-  partition count is the parallelism dial, same as a real topic.
-
-* :class:`KafkaTopicAdmin` — the real-broker path. The sandbox ships
-  no Kafka client library and no broker, so construction raises a
-  clear ImportError-derived message instead of pretending; the method
-  surface mirrors FileTopicAdmin so swapping transports is one line,
-  and the call mapping to AdminClient (create_topics / delete_topics /
-  list_topics) is documented inline for a deployment that has the
-  client wheel.
+:class:`FileTopicAdmin` is the broker-free twin used by the file
+topology (`run_file_topology*`). A topic is a directory under the
+admin root carrying a ``_topic_meta.json`` manifest (partitions +
+config, like Kafka's topic metadata); producers append parquet files;
+``delete_all`` resets the whole namespace exactly like the
+reference's startup wipe. ``partition_for`` reproduces Kafka's
+default partitioner shape (hash(key) % partitions) so a keyed
+producer can lay files out per-partition — at 100 TB/day the
+partition count is the parallelism dial, same as a real topic.
 """
 
 from __future__ import annotations
@@ -132,26 +122,3 @@ class FileTopicAdmin:
         d = os.path.join(self._dir(name), f"partition={p}")
         os.makedirs(d, exist_ok=True)
         return d
-
-
-class KafkaTopicAdmin:
-    """Real-broker admin: requires a Kafka client wheel (confluent-kafka
-    or kafka-python), neither shipped in this sandbox. Mapping for a
-    real deployment: create_topic -> AdminClient.create_topics([
-    NewTopic(name, num_partitions=partitions)]), delete_all ->
-    delete_topics(list_topics().topics), list_topics ->
-    list_topics().topics. Same verbs as FileTopicAdmin."""
-
-    def __init__(self, bootstrap: str) -> None:
-        try:
-            from confluent_kafka.admin import AdminClient  # noqa: F401
-        except ImportError:
-            try:
-                from kafka.admin import KafkaAdminClient  # noqa: F401
-            except ImportError as exc:
-                raise ImportError(
-                    "KafkaTopicAdmin needs confluent-kafka or kafka-python; "
-                    "neither is installed in this environment. Use "
-                    "FileTopicAdmin for the broker-free file topology."
-                ) from exc
-        self.bootstrap = bootstrap  # pragma: no cover - needs a broker

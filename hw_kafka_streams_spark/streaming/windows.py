@@ -1,9 +1,9 @@
-"""Event-time windowing, watermarks, and streaming dedup.
+"""Event-time windowing and watermarks.
 
 The reference has NO event-time semantics (SURVEY.md §1.3) — these are
 engine extensions on the north-star surface, built entirely on
 Structured Streaming built-ins: ``withWatermark`` + ``F.window`` /
-``F.session_window`` / ``dropDuplicatesWithinWatermark``. All are
+``F.session_window``. All are
 source-agnostic (batch DataFrames run the same plan, minus state).
 
 State sizing at scale: each open window holds one aggregate row per
@@ -82,61 +82,4 @@ def session_windows(
             key_col,
             "n_events",
         )
-    )
-
-
-def dedup_stream(
-    df: DataFrame,
-    id_cols: list[str],
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup with bounded state.
-
-    ``dropDuplicatesWithinWatermark``: duplicate ids arriving within
-    the watermark window are dropped; state for an id is evicted once
-    the watermark passes it — so state is O(arrival-rate × watermark),
-    not O(stream length). Batch fallback: plain dropDuplicates.
-    """
-    if not df.isStreaming:
-        return df.dropDuplicates(id_cols)
-    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(id_cols)
-
-
-def stream_stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str = "user_id",
-    left_ts: str = "ts",
-    right_ts: str = "ts_r",
-    watermark: str = "10 minutes",
-    interval_s: int = 300,
-    how: str = "inner",
-) -> DataFrame:
-    """Watermarked stream-stream join: equi-key + event-time interval.
-
-    Matches right rows within ``interval_s`` seconds AFTER the left row
-    (left.ts <= right.ts <= left.ts + interval). Both sides buffer in
-    the state store; the watermark + time bound let Spark evict state —
-    without the interval condition a stream-stream join would hold
-    state forever. The reference has nothing like this (its only join
-    is stream⋈static); this is the engine-extension surface for
-    correlating two live streams (e.g. impressions⋈clicks).
-
-    Batch DataFrames run the identical condition (no watermark needed).
-    """
-    from pyspark.sql import functions as F
-
-    lw = left.withWatermark(left_ts, watermark) if left.isStreaming else left
-    rw = right.withWatermark(right_ts, watermark) if right.isStreaming else right
-    cond = (
-        (F.col(f"l.{key_col}") == F.col(f"r.{key_col}_r"))
-        & (F.col(f"r.{right_ts}") >= F.col(f"l.{left_ts}"))
-        & (
-            F.col(f"r.{right_ts}")
-            <= F.col(f"l.{left_ts}") + F.expr(f"INTERVAL {interval_s} SECONDS")
-        )
-    )
-    return lw.alias("l").join(
-        rw.withColumnRenamed(key_col, f"{key_col}_r").alias("r"), cond, how
     )

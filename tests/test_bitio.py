@@ -7,7 +7,7 @@ Spark-free. Three groups:
   a single output bit fails here;
 - truncation: a payload cut at any byte from where its bit reader
   starts raises ``CodecError``, never a bare ``IndexError``; so does a
-  PNG or GIF cut anywhere;
+  PNG, GIF or TIFF cut anywhere, and a PNG with any single bit flipped;
 - the reader and writer classes directly.
 """
 
@@ -27,7 +27,6 @@ from hw_kafka_streams_spark.operators import (
     jlscodec,
     jpegcodec,
     mcvideo,
-    mdctcodec,
     pngcodec,
     tiffcodec,
 )
@@ -116,7 +115,6 @@ def _corpus() -> dict[str, bytes]:
             _gray(16, hi=65536).astype(np.uint16)
         ),
         "mclv": mcvideo.encode_mclv(_clip(17)),
-        "mdct": mdctcodec.encode_mdct_audio(_pcm(18, 3000)),
         "gorilla_scalar": _gorilla_scalar(19),
         "tiff_lzw": tiffcodec._lzw_compress(
             bytes(np.random.default_rng(20).integers(0, 6, 6000, np.uint8))
@@ -136,14 +134,15 @@ def _truncation_cases():
     the byte where the decoder's bit reader starts to the end of the
     bit-coded data (a JPEG-LS scan ends before its 2-byte EOI); a PNG or
     GIF is cut anywhere (``decode_gif`` reads only up to the end of the
-    first image, so its trailer byte is left out)."""
+    first image, so its trailer byte is left out; a TIFF is cut anywhere
+    too)."""
     flac = flaccodec.encode_flac(_pcm(21, 450, channels=2), block_size=192)
     jls = jlscodec.encode_jls(_gray(22, h=12, w=20).astype(np.uint8))
     jls_ilv1 = jlscodec.encode_jls(_rgb(23, h=6, w=10), ilv=1)
     mclv = mcvideo.encode_mclv(_clip(24)[:3])
     iframe = 24 * 32  # the 20x28 clip padded to 8x8 blocks
-    mdct = mdctcodec.encode_mdct_audio(_pcm(25, 600))
     png = pngcodec.encode_png(_rgb(26))
+    tiff = tiffcodec.encode_tiff_rgb(_rgb(28, h=12, w=20), compression=5)
     gray = _gray(27, h=12, w=20).astype(np.uint8)
     gif = gifcodec.encode_gif_gray(gray)
     anim = gifcodec.encode_gif_gray_animation(
@@ -155,10 +154,10 @@ def _truncation_cases():
         "jls_ilv1": (jls_ilv1, _scan_start(jls_ilv1), len(jls_ilv1) - 2,
                      jlscodec.decode_jls),
         "mclv": (mclv, 13 + iframe, len(mclv), mcvideo.decode_mclv),
-        "mdct": (mdct, 12, len(mdct), mdctcodec.decode_mdct_audio),
         "png": (png, 0, len(png), pngcodec.decode_png),
         "gif": (gif, 0, len(gif) - 1, gifcodec.decode_gif),
         "gif_frames": (anim, 0, len(anim), gifcodec.decode_gif_frames),
+        "tiff": (tiff, 0, len(tiff), tiffcodec.decode_tiff_pixels),
     }
 
 
@@ -180,7 +179,6 @@ GOLDEN = {
     "jls_rgb_ilv2": "fb560f3211444faee2a659a17eb3d403482d4240e856482428fc0e58b5c6aff8",
     "jls_gray16": "fe8c63bc74ef23dac3c7070b8710fe858cccea158a1658e3d70be4b11392bc41",
     "mclv": "553c6433013b6cd341413c2588e455963e0d5b4c0ea6c473797f7fe0c915fe43",
-    "mdct": "0fcd0bc23351dc508cefec0ffe17c769f32e5e85d6ee87fec45fec146a64c508",
     "gorilla_scalar": "91f5217b655ce95f467c65cff10dde750887737f455f8960394f3b8ed2b9dc3b",
     "tiff_lzw": "dc57f752db3dd40ec3181ec069827352176737c7adfb1135aad717cd2cb6c508",
 }
@@ -194,7 +192,7 @@ def test_encoder_bytes_are_pinned():
 
 
 @pytest.mark.parametrize(
-    "name", ["flac", "jls", "jls_ilv1", "mclv", "mdct", "png", "gif", "gif_frames"]
+    "name", ["flac", "jls", "jls_ilv1", "mclv", "png", "gif", "gif_frames", "tiff"]
 )
 def test_every_truncation_raises_codec_error(name):
     """Cut at every byte of the range: each cut raises ``CodecError`` (a
@@ -205,6 +203,27 @@ def test_every_truncation_raises_codec_error(name):
     for cut in range(first, end):
         with pytest.raises(bitio.CodecError):
             decode(payload[:cut])
+
+
+def test_every_png_bit_flip_raises_codec_error():
+    """Flip each bit past the signature: the chunk CRC-32 catches it
+    (a bare ``zlib.error`` escaped before, and a flip inside a CRC
+    field decoded silently). An IDAT with a good CRC that zlib cannot
+    inflate raises ``CodecError`` too."""
+    png = bytearray(pngcodec.encode_png(_rgb(26)))
+    for bit in range(8 * 8, 8 * len(png)):
+        png[bit // 8] ^= 1 << (bit % 8)
+        with pytest.raises(bitio.CodecError):
+            pngcodec.decode_png(bytes(png))
+        png[bit // 8] ^= 1 << (bit % 8)
+    ihdr_end = 8 + 12 + 13
+    bad_idat = (
+        bytes(png[:ihdr_end])
+        + pngcodec._chunk(b"IDAT", b"not zlib")
+        + pngcodec._chunk(b"IEND", b"")
+    )
+    with pytest.raises(bitio.CodecError):
+        pngcodec.decode_png(bad_idat)
 
 
 @pytest.mark.parametrize(

@@ -91,7 +91,7 @@ def test_minhash_signature_is_similarity_estimate(spark):
 
 
 def test_simhash_hamming(spark):
-    from hw_kafka_streams_spark.operators.dedup import simhash64
+    from hw_kafka_streams_spark.operators.dedup import simhash_signatures
 
     base = " ".join(f"tok{i}" for i in range(200))
     near = base.replace("tok199", "tokX")
@@ -100,10 +100,7 @@ def test_simhash_hamming(spark):
         [(1, base), (2, base), (3, near), (4, "unrelated content words only four")],
     )
     # signature property: near docs are few bits apart, unrelated ~32
-    sigs = {
-        r.doc_id: r.sig
-        for r in df.select("doc_id", simhash64(F.col("text")).alias("sig")).collect()
-    }
+    sigs = {r.id: r.sig for r in simhash_signatures(df).collect()}
     ham = lambda a, b: bin((a ^ b) & (2**64 - 1)).count("1")
     assert ham(sigs[1], sigs[2]) == 0
     assert ham(sigs[1], sigs[3]) < 16 < ham(sigs[1], sigs[4])

@@ -1,14 +1,14 @@
-"""Unit tests for embedding maintenance kernels (normalize/quantize)."""
+"""Unit tests for embedding maintenance kernels (int8 quantization, PCA)."""
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from hw_kafka_streams_spark.operators.embeddings import (
-    l2_normalize_arrow,
-    quantize_int8_arrow,
+    quantize_np,
     quantize_stats_arrow,
 )
 
@@ -17,14 +17,6 @@ def _df(spark, vecs):
     return spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)], "vec_id int, embedding array<double>"
     )
-
-
-def test_l2_normalize_unit_norm_and_zero_passthrough(spark):
-    df = _df(spark, [[3.0, 4.0], [0.0, 0.0]])
-    rows = df.select("vec_id", l2_normalize_arrow(F.col("embedding")).alias("n")).collect()
-    by_id = {r["vec_id"]: r["n"] for r in rows}
-    assert abs(by_id[0][0] - 0.6) < 1e-12 and abs(by_id[0][1] - 0.8) < 1e-12
-    assert by_id[1] == [0.0, 0.0]
 
 
 def test_quantize_roundtrip_error_small_and_range_exact(spark):
@@ -36,15 +28,14 @@ def test_quantize_roundtrip_error_small_and_range_exact(spark):
     assert r["mse_ppm"] < (0.5 / 127) ** 2 * 1e6
 
 
-def test_quantize_int8_values(spark):
-    df = _df(spark, [[1.0, -1.0, 0.5, 0.0]])
-    q = df.select(quantize_int8_arrow(F.col("embedding")).alias("q")).head()["q"]
-    assert q == [127, -127, 64, 0]  # 0.5*127+0.5 = 64.0 -> floor 64
+def test_quantize_int8_values():
+    q = quantize_np(np.array([[1.0, -1.0, 0.5, 0.0]]))[0]
+    assert q[0].tolist() == [127, -127, 64, 0]  # 0.5*127+0.5 = 64.0 -> floor 64
 
 
 def test_quantize_zero_vector_is_zero(spark):
     df = _df(spark, [[0.0, 0.0, 0.0]])
-    q = df.select(quantize_int8_arrow(F.col("embedding")).alias("q")).head()["q"]
+    q = quantize_np(np.zeros((1, 3)))[0][0].tolist()
     r = df.select(quantize_stats_arrow(F.col("embedding")).alias("s")).head()["s"]
     assert q == [0, 0, 0]
     assert r["mse_ppm"] == 0.0 and r["norm"] == 0.0
@@ -54,12 +45,7 @@ def test_pca_partials_match_numpy_and_project(spark, sf_dir):
     """Distributed covariance partials must reproduce single-machine
     numpy PCA exactly (same moments → same eigh), and projection
     variance must equal the explained variance."""
-    import numpy as np
-
-    from hw_kafka_streams_spark.operators.embeddings import (
-        pca_fit,
-        pca_project_arrow,
-    )
+    from hw_kafka_streams_spark.operators.embeddings import pca_fit
     from hw_kafka_streams_spark.sources.catalog import load_table
 
     emb = load_table(spark, "embeddings", sf_dir)
@@ -76,8 +62,7 @@ def test_pca_partials_match_numpy_and_project(spark, sf_dir):
     assert ev[0] >= ev[-1] >= 0
     assert ev.sum() <= total_var + 1e-9
 
-    proj = emb.select(pca_project_arrow("embedding", comps, mean).alias("p"))
-    P = np.array([r[0] for r in proj.collect()])
+    P = (A - mean) @ np.asarray(comps).T
     # per-axis variance of the projection == the eigenvalue
     assert np.allclose(P.var(axis=0), ev, rtol=1e-6)
     # components are orthonormal

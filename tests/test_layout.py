@@ -1,5 +1,4 @@
-"""Z-order layout operator: correctness of the bit interleave and the
-actual data-skipping benefit of the write-side pass.
+"""Z-order (Morton) clustering key: correctness of the bit interleave.
 
 The reference has no storage layout surface (1-partition Kafka sink,
 KafkaStreamApp.java:169); this is 100 TB-engine territory: parquet
@@ -10,11 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hw_kafka_streams_spark.operators.layout import (
-    spread_bits,
-    z_value,
-    zorder_repartition,
-)
+from hw_kafka_streams_spark.operators.layout import spread_bits, z_value
 
 
 def _py_spread(v: int) -> int:
@@ -45,78 +40,3 @@ def test_z_value_interleaves(spark):
     assert rows[1]["z"] == 0
     # full 10-bit interleave: all 20 low bits set
     assert rows[2]["z"] == (1 << 20) - 1
-
-
-def test_zorder_tightens_partition_boxes(spark):
-    """After zorder_repartition, each partition's (x, y) bounding box must
-    be far smaller than the full domain — that tightness is exactly what
-    parquet per-file min/max pruning consumes. A hash/random layout gives
-    every partition the full domain (normalized box area ~1.0)."""
-    n = 1 << 14
-    pts = spark.range(n).select(
-        (F.xxhash64("id").bitwiseAND(F.lit(1023))).alias("x"),
-        (F.xxhash64("id", F.lit(7)).bitwiseAND(F.lit(1023))).alias("y"),
-    )
-
-    def mean_box_area(df) -> float:
-        stats = (
-            df.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid")
-            .agg(
-                F.min("x").alias("x0"),
-                F.max("x").alias("x1"),
-                F.min("y").alias("y0"),
-                F.max("y").alias("y1"),
-            )
-            .select(
-                (
-                    ((F.col("x1") - F.col("x0")) / F.lit(1024.0))
-                    * ((F.col("y1") - F.col("y0")) / F.lit(1024.0))
-                ).alias("area")
-            )
-            .agg(F.avg("area"))
-            .first()[0]
-        )
-        return float(stats)
-
-    random_area = mean_box_area(pts.repartition(16))
-    z_area = mean_box_area(zorder_repartition(pts, "x", "y", num_partitions=16))
-    assert random_area > 0.9  # hash layout: every partition spans the domain
-    # 16 partitions on a Z-curve -> each covers ~1/16 of the curve; boxes
-    # are small. 4x headroom on the asymptotic bound.
-    assert z_area < 0.25, (random_area, z_area)
-
-
-def test_zorder_preserves_rows(spark):
-    df = spark.range(1000).select(
-        (F.col("id") % 31).alias("x"), (F.col("id") % 17).alias("y")
-    )
-    out = zorder_repartition(df, "x", "y", num_partitions=4)
-    assert out.columns == ["x", "y"]
-    assert out.count() == 1000
-    assert out.groupBy().agg(F.sum("x"), F.sum("y")).first() == df.groupBy().agg(
-        F.sum("x"), F.sum("y")
-    ).first()
-
-
-def test_compact_files_binpacks_and_preserves_data(spark, tmp_path):
-    src = str(tmp_path / "frag")
-    # fragment: 40 tiny files
-    spark.range(20_000).select(
-        F.col("id"), (F.col("id") % 97).alias("k")
-    ).repartition(40).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 40
-    before = spark.read.parquet(src).groupBy().agg(
-        F.count(F.lit(1)), F.sum("id"), F.sum("k")
-    ).first()
-
-    from hw_kafka_streams_spark.operators.layout import compact_files
-
-    n_out = compact_files(spark, src, target_mb=128, sort_within="k")
-    assert n_out <= 2  # ~200 KB of data packs into one target_mb bin
-    after = spark.read.parquet(src).groupBy().agg(
-        F.count(F.lit(1)), F.sum("id"), F.sum("k")
-    ).first()
-    assert before == after

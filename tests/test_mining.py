@@ -307,27 +307,6 @@ def test_compression_ratio_separates_repetitive_text(spark):
     assert out[3] is None and out[4] is None
 
 
-def test_bloom_save_load_merge_roundtrip(spark, tmp_path):
-    from hw_kafka_streams_spark.operators.bloom import (
-        load_bitmap,
-        merge_bitmaps,
-        save_bitmap,
-    )
-
-    a = bloom_bitmap(_kv(spark, [f"a{i}" for i in range(50)]), "fp")
-    b = bloom_bitmap(_kv(spark, [f"b{i}" for i in range(50)]), "fp")
-    # OR-merge equals the bloom of the union (positions depend only on key)
-    both = bloom_bitmap(
-        _kv(spark, [f"a{i}" for i in range(50)] + [f"b{i}" for i in range(50)]),
-        "fp",
-    )
-    merged = merge_bitmaps(a, b)
-    assert merged == both
-    p = str(tmp_path / "bloom_idx")
-    save_bitmap(spark, merged, p)
-    assert load_bitmap(spark, p) == merged
-
-
 def test_bpe_train_merges_hand_computed(spark):
     """Tiny corpus with a known dominant pair sequence: 'low' x5 and
     'lower' x2 — classic Sennrich example shape."""

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from hw_kafka_streams_spark.operators.multimodal import (
     attach_payload_metadata,
     decode_image_meta,
-    frame_sample_stub,
     make_fake_png,
 )
 
@@ -47,12 +46,6 @@ def test_decode_non_png_hits_stub(spark):
     df = _payloads(spark).filter(F.col("doc_id") == 4)
     with pytest.raises(Exception, match="NotImplementedError|codec"):
         decode_image_meta(df).collect()
-
-
-def test_frame_sample_is_stub(spark):
-    df = _payloads(spark)
-    with pytest.raises(Exception, match="NotImplementedError|ffmpeg"):
-        frame_sample_stub(df).collect()
 
 
 def test_payload_stage_shapes(spark):

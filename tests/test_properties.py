@@ -1550,90 +1550,6 @@ def test_flac_variable_blocksize_header_layout():
 # contracts live here instead.
 
 
-@settings(max_examples=15, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=6000),
-    st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_mdct_filterbank_perfect_reconstruction(n, seed):
-    """Princen-Bradley TDAC: analysis -> synthesis WITHOUT
-    quantization must reconstruct any signal to float precision."""
-    import numpy as np
-
-    from hw_kafka_streams_spark.operators.mdctcodec import (
-        imdct_overlap_add,
-        mdct_frames,
-    )
-
-    x = np.random.RandomState(seed).uniform(-30000, 30000, n)
-    rec = imdct_overlap_add(mdct_frames(x), n)
-    assert np.abs(rec - x).max() < 1e-6
-
-
-def test_mdct_codec_snr_and_compression_on_tonal_signal():
-    """A tonal mix (the favorable case for transform coding) must
-    compress below half the raw size at > 35 dB SNR — and the encode
-    must be bit-deterministic."""
-    import numpy as np
-
-    from hw_kafka_streams_spark.operators.mdctcodec import (
-        decode_mdct_audio,
-        encode_mdct_audio,
-    )
-
-    t = np.arange(16000)
-    sig = (
-        8000 * np.sin(2 * np.pi * t * 220 / 8000)
-        + 3000 * np.sin(2 * np.pi * t * 440 / 8000)
-        + 500 * np.sin(2 * np.pi * t * 3000 / 8000)
-    )
-    pcm = np.clip(np.round(sig), -32768, 32767).astype(np.int16)
-    enc = encode_mdct_audio(pcm)
-    assert len(enc) * 2 < 2 * len(pcm)
-    dec = decode_mdct_audio(enc)
-    err = dec.astype(np.float64) - pcm.astype(np.float64)
-    snr = 10 * np.log10(
-        (pcm.astype(np.float64) ** 2).sum() / max((err**2).sum(), 1e-12)
-    )
-    assert snr > 35.0
-    assert encode_mdct_audio(pcm) == enc  # bit-deterministic
-
-
-def test_mdct_codec_silence_and_edge_lengths():
-    import numpy as np
-
-    from hw_kafka_streams_spark.operators.mdctcodec import (
-        decode_mdct_audio,
-        encode_mdct_audio,
-    )
-
-    silent = np.zeros(3000, np.int16)
-    enc = encode_mdct_audio(silent)
-    assert len(enc) < 600  # silent bands are 1 byte each
-    assert np.array_equal(decode_mdct_audio(enc), silent)
-    for n in (1, 511, 512, 513, 1024):
-        pcm = (np.sin(np.arange(n) * 0.1) * 10000).astype(np.int16)
-        dec = decode_mdct_audio(encode_mdct_audio(pcm))
-        assert dec.shape == (n,)
-
-
-def test_mdct_codec_rejects_bad_input():
-    import numpy as np
-    import pytest
-
-    from hw_kafka_streams_spark.operators.mdctcodec import (
-        decode_mdct_audio,
-        encode_mdct_audio,
-    )
-
-    with pytest.raises(ValueError):
-        encode_mdct_audio(np.zeros((2, 5), np.int16))
-    with pytest.raises(ValueError):
-        encode_mdct_audio(np.zeros(5, np.float64))
-    with pytest.raises(ValueError):
-        decode_mdct_audio(b"nope" + b"\x00" * 16)
-
-
 @settings(max_examples=30, deadline=None)
 @given(
     st.integers(min_value=1, max_value=30),

@@ -1,5 +1,5 @@
-"""Scale levers: bucketed co-located joins (no exchange) and salted
-skew joins (correctness parity with the plain join)."""
+"""Scale levers: salted skew joins (correctness parity with the plain
+join), dynamic partition pruning, the small-scan parallelism floor."""
 
 from __future__ import annotations
 
@@ -8,33 +8,7 @@ from pyspark.sql import functions as F
 
 from hw_kafka_streams_spark.operators.skew import salted_join
 from hw_kafka_streams_spark.plans import physical_plan
-from hw_kafka_streams_spark.sources.bucketing import read_table, write_bucketed
 from hw_kafka_streams_spark.sources.catalog import load_table
-
-
-def test_bucketed_join_is_shuffle_free(spark, sf_dir):
-    o = load_table(spark, "orders", sf_dir)
-    li = load_table(spark, "lineitem", sf_dir)
-    write_bucketed(o, "orders_b", ["o_orderkey"], n_buckets=8)
-    write_bucketed(li, "lineitem_b", ["l_orderkey"], n_buckets=8)
-
-    ob, lb = read_table(spark, "orders_b"), read_table(spark, "lineitem_b")
-    joined = ob.join(lb, ob.o_orderkey == lb.l_orderkey).filter(
-        F.col("o_totalprice") > 0
-    )
-    plan = physical_plan(joined)
-    assert "Exchange hashpartitioning" not in plan, plan
-    # sanity: same rowcount as the unbucketed join
-    n_plain = o.join(li, o.o_orderkey == li.l_orderkey).filter(
-        F.col("o_totalprice") > 0
-    ).count()
-    assert joined.count() == n_plain
-
-
-def test_bucketed_agg_is_shuffle_free(spark):
-    lb = read_table(spark, "lineitem_b")
-    agg = lb.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("q"))
-    assert "Exchange hashpartitioning" not in physical_plan(agg)
 
 
 @pytest.mark.parametrize("how", ["inner", "left"])
@@ -121,7 +95,7 @@ def test_spread_small_noop_on_non_file_source(spark):
 
 
 def test_width_probe_reprobes_file_rewritten_in_place(spark, tmp_path, monkeypatch):
-    """The width memo is keyed on each file's (path, size, mtime): a
+    """The row-group cache is keyed on each file's (path, size, mtime): a
     parquet file rewritten in place under the same name with a different
     row-group count is probed again, not served its stale width."""
     import pyarrow as pa
@@ -129,7 +103,7 @@ def test_width_probe_reprobes_file_rewritten_in_place(spark, tmp_path, monkeypat
 
     from hw_kafka_streams_spark.operators import skew
 
-    monkeypatch.setattr(skew, "_WIDTH_MEMO", {})
+    skew._row_groups.cache_clear()
     path = tmp_path / "t" / "part-0.parquet"
     path.parent.mkdir()
     table = pa.table({"doc_id": list(range(60))})
@@ -143,7 +117,7 @@ def test_width_probe_reprobes_file_rewritten_in_place(spark, tmp_path, monkeypat
         pq, "ParquetFile", lambda p: probes.append(p) or real_parquet_file(p)
     )
     assert skew._probed_scan_width(df) == 2
-    assert probes == []  # unchanged file: memo hit
+    assert probes == []  # unchanged file: cache hit
 
     pq.write_table(table, path, row_group_size=10)
     assert skew._probed_scan_width(spark.read.parquet(str(path.parent))) == 6

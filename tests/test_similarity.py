@@ -160,39 +160,6 @@ def test_banded_lsh_near_dup_recall(spark):
     assert len(lsh & exact) / len(exact) >= 0.6, (len(lsh), len(exact))
 
 
-@pytest.mark.slowgate
-def test_ivf_indexed_partition_pruning_and_recall(spark, tmpdir=None):
-    import shutil
-    import tempfile
-
-    from hw_kafka_streams_spark.operators.similarity import (
-        brute_force_topk,
-        build_ivf_index,
-        ivf_topk_indexed,
-    )
-    from hw_kafka_streams_spark.plans import formatted_plan
-    from hw_kafka_streams_spark.sources.catalog import load_table
-
-    d = tempfile.mkdtemp(prefix="ivf_")
-    try:
-        emb = load_table(spark, "embeddings", "/root/testdata/sf0.01")
-        build_ivf_index(emb, d, n_centroids=16)
-        queries = emb.filter(F.col("vec_id") < 10)
-        res = ivf_topk_indexed(spark, d, queries, k=5, n_probe=4)
-
-        plan = formatted_plan(res)
-        assert "PartitionFilters" in plan and "cid" in plan.split("PartitionFilters")[1][:200]
-
-        truth = {
-            (r.query_id, r.neighbor_id)
-            for r in brute_force_topk(queries, emb, k=5).collect()
-        }
-        got = {(r.query_id, r.neighbor_id) for r in res.collect()}
-        assert len(truth & got) / len(truth) >= 0.5
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_semantic_dedup_labels_fixture(spark):
     """Two tight groups far apart + a singleton: within-group members
     label as dups of the min id; cross-group never pairs (different
@@ -264,36 +231,6 @@ def test_quantize_vec_arrow_roundtrip(spark):
         "vec_id", quantize_vec_arrow(F.col("embedding")).alias("z")).collect()}
     assert out[1].ma == 1.0 and out[1].q == [64, -127, 32]
     assert out[2].ma == 0.0 and out[2].q == [0, 0, 0]
-
-
-@pytest.mark.slowgate
-def test_ivfpq_persisted_index_prunes_and_recalls(spark, sf_dir, tmp_path):
-    from hw_kafka_streams_spark.operators.similarity import (
-        brute_force_topk,
-        build_ivfpq_index,
-        ivfpq_topk_indexed,
-    )
-    from hw_kafka_streams_spark.sources.catalog import load_table
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    d = str(tmp_path / "ivfpq")
-    build_ivfpq_index(emb, d, n_centroids=16)
-    # index artifact stores only (neighbor_id, codes) + cid partitions
-    lists = spark.read.parquet(f"{d}/lists")
-    assert set(lists.columns) == {"neighbor_id", "codes", "cid"}
-    queries = emb.filter(F.col("vec_id") < 5)
-    res = ivfpq_topk_indexed(spark, d, queries, emb, k=5, n_probe=4)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan  # probes prune unread lists
-    rows = res.collect()
-    assert all(r["neighbor_id"] != r["query_id"] for r in rows)
-    bf = brute_force_topk(queries, emb, k=5).select("query_id", "neighbor_id")
-    hits = (
-        res.select("query_id", "neighbor_id")
-        .join(bf, ["query_id", "neighbor_id"])
-        .count()
-    )
-    assert hits >= 0.4 * bf.count()
 
 
 def test_hard_negatives_excludes_same_label(spark):

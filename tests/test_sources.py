@@ -1,89 +1,13 @@
-"""File-source battery (csv/json/parquet round trips, partitioned layout)
-and the stream-stream interval join."""
+"""Sources: the custom message data source (batch, stream, filter
+pushdown), parquet schema evolution, and the canonical column types
+of the test tables."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
-
-from hw_kafka_streams_spark.sources.files import read_file_stream, read_files, write_files
-from hw_kafka_streams_spark.streaming.windows import stream_stream_interval_join
-
-
-@pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="sgsrc_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def _sample(spark):
-    return spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", 2.5), (3, "a", 3.5)], "id long, k string, v double"
-    )
-
-
-@pytest.mark.parametrize("fmt", ["parquet", "csv", "json", "orc"])
-def test_roundtrip(spark, tmpdir, fmt):
-    df = _sample(spark)
-    write_files(df, f"{tmpdir}/{fmt}", fmt=fmt)
-    back = read_files(spark, f"{tmpdir}/{fmt}", fmt=fmt, schema="id long, k string, v double")
-    assert {tuple(r) for r in back.collect()} == {tuple(r) for r in df.collect()}
-
-
-def test_partitioned_layout_prunes(spark, tmpdir):
-    write_files(_sample(spark), f"{tmpdir}/p", fmt="parquet", partition_by=["k"])
-    from hw_kafka_streams_spark.plans import physical_plan
-
-    df = read_files(spark, f"{tmpdir}/p").filter(F.col("k") == "a")
-    assert df.count() == 2
-    # partition filter must prune at planning, not post-scan
-    assert "PartitionFilters: [isnotnull(k" in physical_plan(df)
-
-
-def test_unsupported_format_rejected(spark):
-    with pytest.raises(ValueError):
-        read_files(spark, "/tmp/x", fmt="avroish")
-
-
-@pytest.mark.slowgate
-def test_stream_stream_interval_join(spark, tmpdir):
-    left = spark.createDataFrame(
-        [(1, "2026-01-01 00:00:00"), (2, "2026-01-01 01:00:00")],
-        "user_id long, ts_s string",
-    ).select("user_id", F.col("ts_s").cast("timestamp").alias("ts"))
-    right = spark.createDataFrame(
-        [
-            (1, "2026-01-01 00:02:00"),   # within 5 min of left(1) → match
-            (1, "2026-01-01 00:30:00"),   # outside interval → no match
-            (2, "2026-01-01 00:59:00"),   # before left(2) → no match
-        ],
-        "user_id long, ts_s string",
-    ).select("user_id", F.col("ts_s").cast("timestamp").alias("ts_r"))
-    left.coalesce(1).write.parquet(f"{tmpdir}/l")
-    right.coalesce(1).write.parquet(f"{tmpdir}/r")
-
-    ls = read_file_stream(spark, f"{tmpdir}/l", schema="user_id long, ts timestamp")
-    rs = read_file_stream(spark, f"{tmpdir}/r", schema="user_id long, ts_r timestamp")
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_stream_interval_join(ls, rs, interval_s=300)
-        .select("l.user_id", "l.ts", "r.ts_r")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql(f"select user_id from {name}").collect()
-    finally:
-        q.stop()
-    assert [r.user_id for r in rows] == [1]
 
 
 def test_custom_datasource_batch(spark):
@@ -146,23 +70,6 @@ def test_custom_datasource_filter_pushdown(spark):
     assert len(rows) == 100  # 700 seqs, 7 senders round-robin
 
 
-def test_merge_upsert_replaces_and_appends(spark, tmp_path):
-    from hw_kafka_streams_spark.sources.files import merge_upsert
-
-    path = str(tmp_path / "target")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k int, v string"
-    ).write.parquet(path)
-    updates = spark.createDataFrame([(2, "B"), (4, "d")], "k int, v string")
-    merge_upsert(spark, path, updates, ["k"])
-    got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}
-    # idempotent: re-applying the same updates converges to the same state
-    merge_upsert(spark, path, updates, ["k"])
-    got2 = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
-    assert got2 == got
-
-
 def test_schema_evolution_merge_schema(spark, tmp_path):
     path = str(tmp_path / "evolving")
     spark.createDataFrame([(1, "a")], "k int, v string").write.parquet(path)
@@ -173,21 +80,6 @@ def test_schema_evolution_merge_schema(spark, tmp_path):
     assert set(df.columns) == {"k", "v", "score"}
     rows = {r.k: (r.v, r.score) for r in df.collect()}
     assert rows[1] == ("a", None) and rows[2] == ("b", 9.5)
-
-
-def test_delete_rows_removes_keys_idempotently(spark, tmp_path):
-    from hw_kafka_streams_spark.sources.files import delete_rows
-
-    path = str(tmp_path / "target_del")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k int, v string"
-    ).write.parquet(path)
-    doomed = spark.createDataFrame([(2,), (9,)], "k int")
-    delete_rows(spark, path, doomed, ["k"])
-    got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, "a"), (3, "c")}
-    delete_rows(spark, path, doomed, ["k"])
-    assert {(r.k, r.v) for r in spark.read.parquet(path).collect()} == got
 
 
 # ---------------------------------------------------------------------------

@@ -454,16 +454,22 @@ def test_cms_overestimates_and_merges(spark):
     """CMS invariants: estimate >= exact for every key; summing two
     shard sketches equals the whole-corpus sketch (mergeability is
     the property that makes it a 100 TB artifact)."""
+    from collections import Counter
+
     from pyspark.sql import functions as F
 
     from hw_kafka_streams_spark.operators.sketches import (
-        cms_build,
+        cms_build_counted,
         cms_estimate,
     )
 
-    rows = [(w,) for w in ["a"] * 50 + ["b"] * 20 + ["c"] * 5 + ["d"]]
-    df = spark.createDataFrame(rows, "w string")
-    cms = cms_build(df, "w", depth=3, width=16)
+    words = ["a"] * 50 + ["b"] * 20 + ["c"] * 5 + ["d"]
+
+    def sketch(ws):
+        wc = spark.createDataFrame(list(Counter(ws).items()), "w string, c long")
+        return cms_build_counted(wc, "w", "c", depth=3, width=16)
+
+    cms = sketch(words)
     keys = spark.createDataFrame([("a",), ("b",), ("c",), ("d",), ("zz",)], "w string")
     est = {
         r.w: r.cms_estimate
@@ -474,12 +480,8 @@ def test_cms_overestimates_and_merges(spark):
         assert est[k] >= v, (k, est[k], v)
     assert est["a"] >= 50  # heavy key never underestimated
     # mergeability: shard sketches sum to the corpus sketch
-    rows_id = [(i, w) for i, w in enumerate(["a"] * 50 + ["b"] * 20 + ["c"] * 5 + ["d"])]
-    dfi = spark.createDataFrame(rows_id, "i long, w string")
-    s1 = cms_build(dfi.filter("i % 2 = 0"), "w", depth=3, width=16)
-    s2 = cms_build(dfi.filter("i % 2 = 1"), "w", depth=3, width=16)
     merged = (
-        s1.unionByName(s2)
+        sketch(words[0::2]).unionByName(sketch(words[1::2]))
         .groupBy("cms_row", "cms_bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )

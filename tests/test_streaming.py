@@ -1,6 +1,6 @@
 """Streaming-layer tests: serde roundtrip, changelog compaction, the
 reference topology run as a real StreamingQuery (file source → memory
-sink), watermarked windows, streaming dedup, custom stateful counts.
+sink), watermarked windows, observed metrics.
 
 These are the SURVEY §5.3 "streaming semantics" tests — not
 SQL-expressible, so no DuckDB oracle; correctness is asserted against
@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from hw_kafka_streams_spark.streaming import serde, windows
 from hw_kafka_streams_spark.streaming.pipeline import filtered_messages, run_file_topology
-from hw_kafka_streams_spark.streaming.stateful import running_counts
 
 
 @pytest.fixture()
@@ -162,58 +161,6 @@ def test_streaming_windowed_counts(spark, tmpdir):
     finally:
         q.stop()
     assert n == len(EVENTS)
-
-
-@pytest.mark.slowgate
-def test_streaming_dedup(spark, tmpdir):
-    dup_events = EVENTS + [("u1", "2026-01-01 00:01:00")]  # exact dup
-    df = spark.createDataFrame(dup_events, "user_id string, ts_s string").select(
-        "user_id", F.col("ts_s").cast("timestamp").alias("ts")
-    )
-    df.coalesce(1).write.parquet(f"{tmpdir}/events")
-    stream = spark.readStream.schema("user_id string, ts timestamp").parquet(
-        f"{tmpdir}/events"
-    )
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        windows.dedup_stream(stream, ["user_id", "ts"])
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        n = spark.sql(f"select count(*) n from {name}").collect()[0].n
-    finally:
-        q.stop()
-    assert n == len(EVENTS)  # the duplicate row was dropped
-
-
-def test_stateful_running_counts(spark, tmpdir):
-    _events_df(spark).coalesce(1).write.parquet(f"{tmpdir}/events")
-    stream = spark.readStream.schema("user_id string, ts timestamp").parquet(
-        f"{tmpdir}/events"
-    )
-    name = f"state_{uuid.uuid4().hex[:8]}"
-    q = (
-        running_counts(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r.key, r.n_total)
-            for r in spark.sql(
-                f"select key, max(n_total) n_total from {name} group by key"
-            ).collect()
-        }
-    finally:
-        q.stop()
-    assert got == {("u1", 3), ("u2", 2)}
 
 
 def test_peek_observe_metrics(spark, tmpdir):
@@ -444,52 +391,6 @@ def test_append_mode_watermark_finalization(spark, tmpdir):
 
 
 @pytest.mark.slowgate
-def test_streaming_prep_cross_batch_dedup(spark, tmpdir):
-    """The prep pipeline drops a duplicate document that arrives in a
-    LATER batch (dedup state spans microbatches)."""
-    from hw_kafka_streams_spark.streaming.prep import streaming_prep
-
-    schema = "doc_id long, text string, lang string, n_chars long, source string"
-    doc = "the quick brown fox jumps over the lazy dog " * 5  # ~220 chars
-
-    def write(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(
-            f"{tmpdir}/docs"
-        )
-
-    write([(1, doc, "en", len(doc), "web"), (2, "short", "en", 5, "web")])
-    stream = spark.readStream.schema(schema).parquet(f"{tmpdir}/docs")
-    name = f"prep_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_prep(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # batch 2: same content under a new doc_id + one genuinely new doc
-        write(
-            [
-                (3, doc, "en", len(doc), "web"),            # cross-batch dup
-                (4, doc + " unique tail", "en", len(doc) + 12, "web"),
-            ]
-        )
-        q.processAllAvailable()
-        [r] = (
-            spark.sql(
-                f"select n_docs, n_tokens from {name} "
-                "order by n_docs desc limit 1"
-            ).collect()
-        )
-    finally:
-        q.stop()
-    # doc_id 2 fails the length filter; 3 is deduped; 1 and 4 survive
-    assert r.n_docs == 2
-
-
-@pytest.mark.slowgate
 def test_streaming_session_window_finalization(spark, tmpdir):
     """Session windows close (and emit, append mode) once the watermark
     passes session end + gap."""
@@ -526,115 +427,6 @@ def test_streaming_session_window_finalization(spark, tmpdir):
     # u1's two events merged into ONE session (within gap), now closed;
     # u2's session still open
     assert rows == {("u1", 2)}
-
-
-def test_streaming_heavy_hitters_misra_gries(spark, tmpdir):
-    """Sharded MG summary: the one true heavy token (45% of the stream)
-    must survive with est_count within shard_rows/k of truth, across
-    multiple microbatches, with bounded per-shard state."""
-    import pandas as pd
-
-    from hw_kafka_streams_spark.streaming.stateful import streaming_heavy_hitters
-
-    rows = []
-    # 2 batches x 400 rows: 'hot' = 45%, a long tail of 60 cold tokens
-    for b in range(2):
-        for i in range(400):
-            tok = "hot" if i % 20 < 9 else f"cold_{(b * 400 + i) % 60}"
-            rows.append((b, tok))
-    pdf = pd.DataFrame(rows, columns=["b", "token"])
-    for b in (0, 1):
-        spark.createDataFrame(pdf[pdf.b == b][["token"]]).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{tmpdir}/toks")
-    stream = spark.readStream.schema("token string").parquet(f"{tmpdir}/toks")
-    name = f"mg_{uuid.uuid4().hex[:8]}"
-    k = 16
-    q = (
-        streaming_heavy_hitters(stream, token_col="token", k=k, n_shards=4)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        final = spark.sql(
-            f"""select token, max_by(est_count, shard_rows) est,
-                       max(shard_rows) shard_rows
-                from {name} group by token"""
-        ).collect()
-    finally:
-        q.stop()
-    by_tok = {r.token: r for r in final}
-    assert "hot" in by_tok
-    true_hot = 2 * 400 * 9 // 20
-    r = by_tok["hot"]
-    assert true_hot - r.shard_rows / k <= r.est <= true_hot, (r.est, true_hot)
-    # bounded state: never more than k tokens per shard in any emission
-    per_shard = spark.sql(
-        f"select shard, count(distinct token) n from {name} group by shard"
-    ).collect()
-    assert all(row.n <= k + 1 for row in per_shard)
-
-
-@pytest.mark.slowgate
-def test_stream_stream_left_outer_null_emission(spark, tmpdir):
-    """LEFT OUTER stream-stream join: an unmatched left row must emit
-    with NULL right columns once the watermark passes its join window —
-    the state-eviction semantics that make outer stream joins bounded."""
-    from datetime import datetime
-
-    from hw_kafka_streams_spark.streaming.windows import stream_stream_interval_join
-
-    ldir, rdir = f"{tmpdir}/left", f"{tmpdir}/right"
-    lschema = "user_id string, ts timestamp"
-    rschema = "user_id string, ts_r timestamp"
-    spark.createDataFrame(
-        [("u1", datetime(2024, 1, 1, 10, 0, 0)), ("u2", datetime(2024, 1, 1, 10, 0, 0))],
-        lschema,
-    ).coalesce(1).write.parquet(ldir)
-    spark.createDataFrame(
-        [("u1", datetime(2024, 1, 1, 10, 1, 0))], rschema
-    ).coalesce(1).write.parquet(rdir)
-
-    left = spark.readStream.schema(lschema).parquet(ldir)
-    right = spark.readStream.schema(rschema).parquet(rdir)
-    joined = stream_stream_interval_join(
-        left, right, watermark="2 minutes", interval_s=300, how="left_outer"
-    ).select("l.user_id", "l.ts", "r.ts_r")
-    name = f"ssoj_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # u1 matches inside the interval; u2 is still pending (watermark
-        # hasn't passed its window)
-        got = {(r.user_id, r.ts_r is None) for r in spark.sql(f"select * from {name}").collect()}
-        assert ("u1", False) in got
-        assert not any(u == "u2" for u, _ in got)
-        # advance event time far past u2's window on BOTH streams
-        late = datetime(2024, 1, 1, 11, 0, 0)
-        spark.createDataFrame([("u9", late)], lschema).coalesce(1).write.mode(
-            "append"
-        ).parquet(ldir)
-        spark.createDataFrame([("u9", late)], rschema).coalesce(1).write.mode(
-            "append"
-        ).parquet(rdir)
-        q.processAllAvailable()
-        # one more microbatch so the advanced watermark evicts + emits
-        spark.createDataFrame(
-            [("u9b", datetime(2024, 1, 1, 11, 1, 0))], lschema
-        ).coalesce(1).write.mode("append").parquet(ldir)
-        q.processAllAvailable()
-        got = {(r.user_id, r.ts_r is None) for r in spark.sql(f"select * from {name}").collect()}
-        assert ("u2", True) in got, got  # null-emitted after watermark passed
-    finally:
-        q.stop()
 
 
 @pytest.mark.slowgate
@@ -691,261 +483,6 @@ def test_globalktable_snapshot_refresh_through_topology(spark, tmpdir):
     assert sorted(out) == [("login2", "back again"), ("login4", "******** now")]
 
 
-@pytest.mark.slowgate
-def test_streaming_neardup_index_across_batches(spark, tmpdir):
-    """Incremental MinHash-LSH dedup: batch 2 must detect near-dups of
-    batch-1 docs via the persisted band index (not Spark state), label
-    intra-batch dups, and append only survivors to the index."""
-    from hw_kafka_streams_spark.streaming.neardup import run_streaming_neardup
-
-    base = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    )
-    uniq = "one two three four five six seven eight nine ten"
-    schema = "doc_id long, text string"
-    labels: dict[int, tuple] = {}
-
-    def sink(df, batch_id):
-        for r in df.collect():
-            labels[r.doc_id] = (r.is_dup, r.dup_of)
-
-    spark.createDataFrame(
-        [(1, base), (2, uniq)], schema
-    ).coalesce(1).write.mode("append").parquet(f"{tmpdir}/in")
-
-    stream = spark.readStream.schema(schema).parquet(f"{tmpdir}/in")
-    q = run_streaming_neardup(
-        spark, stream, f"{tmpdir}/index", f"{tmpdir}/ckpt", sink, threshold=0.5
-    )
-    try:
-        q.processAllAvailable()
-        assert labels[1] == (False, None) and labels[2] == (False, None)
-
-        # batch 2: 3 = near-dup of 1 (one token changed), 4 unique,
-        # 5 = exact intra-batch dup of 4
-        near = base.replace("omicron", "OMEGA")
-        fresh = "red orange yellow green blue indigo violet umber cyan teal"
-        spark.createDataFrame(
-            [(3, near), (4, fresh), (5, fresh)], schema
-        ).coalesce(1).write.mode("append").parquet(f"{tmpdir}/in")
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    assert labels[3] == (True, 1)  # caught via the persisted index
-    assert labels[4] == (False, None)
-    assert labels[5] == (True, 4)  # intra-batch rep
-    # index holds only survivors: docs 1, 2, 4 (16 band rows each)
-    ix = spark.read.parquet(f"{tmpdir}/index")
-    assert sorted(r.id for r in ix.select("id").distinct().collect()) == [1, 2, 4]
-    assert ix.count() == 3 * 16
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (absent in this "
-    "container; the state-server protocol is protobuf-encoded). The operator "
-    "is still exercised for plan construction in "
-    "test_sessions_with_timeout_plan_builds.",
-)
-def test_sessions_with_timeout_timer_emits_closed_session(spark, tmpdir):
-    """transformWithStateInPandas: the inactivity TIMER must emit the
-    closed session without any later event touching the key."""
-    import time as _time
-
-    from hw_kafka_streams_spark.streaming.stateful import sessions_with_timeout
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    schema = "user_id long, value double"
-    out: list = []
-    try:
-        spark.createDataFrame(
-            [(1, 10.0), (1, 5.0), (2, 1.0)], schema
-        ).coalesce(1).write.mode("append").parquet(f"{tmpdir}/in")
-        stream = spark.readStream.schema(schema).parquet(f"{tmpdir}/in")
-        q = (
-            sessions_with_timeout(stream, gap_ms=1_500)
-            .writeStream.foreachBatch(
-                lambda df, bid: out.extend(df.collect())
-            )
-            .option("checkpointLocation", f"{tmpdir}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            assert out == []  # sessions still open
-            _time.sleep(2.5)  # let both keys' timers expire
-            # a batch from an unrelated key drives the clock; expired
-            # timers fire even though users 1/2 get no new events
-            spark.createDataFrame([(99, 0.5)], schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(f"{tmpdir}/in")
-            q.processAllAvailable()
-            deadline = _time.time() + 20
-            while len(out) < 2 and _time.time() < deadline:
-                _time.sleep(1.0)
-                spark.createDataFrame([(99, 0.5)], schema).coalesce(1).write.mode(
-                    "append"
-                ).parquet(f"{tmpdir}/in")
-                q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    got = {r.user_id: r for r in out if r.user_id in (1, 2)}
-    assert got[1].n_events == 2 and abs(got[1].total - 15.0) < 1e-9
-    assert got[2].n_events == 1 and abs(got[2].total - 1.0) < 1e-9
-
-
-def test_sessions_with_timeout_plan_builds(spark, tmpdir):
-    """Environment-independent part of the transformWithStateInPandas
-    surface: the streaming plan must construct and analyze (operator
-    wiring, output schema, time mode) even where the protobuf dependency
-    blocks execution."""
-    from hw_kafka_streams_spark.streaming.stateful import sessions_with_timeout
-
-    schema = "user_id long, value double"
-    spark.createDataFrame([(1, 1.0)], schema).coalesce(1).write.parquet(
-        f"{tmpdir}/in"
-    )
-    stream = spark.readStream.schema(schema).parquet(f"{tmpdir}/in")
-    out = sessions_with_timeout(stream, gap_ms=1_000)
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == [
-        "user_id", "n_events", "total", "duration_ms",
-    ]
-
-
-@pytest.mark.slowgate
-def test_neardup_replay_is_stable_and_idempotent(spark, tmpdir):
-    """foreachBatch at-least-once: redelivering a batch must (a) produce
-    identical labels — the probe's `ix.id != new.id` guard keeps docs
-    from matching the rows their first delivery appended — and (b) not
-    duplicate index rows (per-batch commit marker skips the re-append)."""
-    from hw_kafka_streams_spark.streaming.neardup import neardup_batch_step
-
-    base = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    )
-    near = base.replace("omicron", "OMEGA")
-    batch = spark.createDataFrame(
-        [(1, base), (2, near)], "doc_id long, text string"
-    )
-    ix_dir = f"{tmpdir}/index"
-
-    first = {
-        r.doc_id: (r.is_dup, r.dup_of)
-        for r in neardup_batch_step(spark, batch, ix_dir, batch_id=7).collect()
-    }
-    assert first == {1: (False, None), 2: (True, 1)}
-    n_rows = spark.read.parquet(ix_dir).count()
-
-    # replay the same batch id (crash before checkpoint commit)
-    replay = {
-        r.doc_id: (r.is_dup, r.dup_of)
-        for r in neardup_batch_step(spark, batch, ix_dir, batch_id=7).collect()
-    }
-    assert replay == first
-    assert spark.read.parquet(ix_dir).count() == n_rows  # no re-append
-
-
-@pytest.mark.slowgate
-def test_neardup_short_docs_still_labeled(spark, tmpdir):
-    """Docs too short to signature (< n tokens, NULL text) must come
-    back labeled (is_dup=false) instead of silently vanishing."""
-    from hw_kafka_streams_spark.streaming.neardup import neardup_batch_step
-
-    base = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    )
-    batch = spark.createDataFrame(
-        [(1, base), (2, "hi"), (3, None)], "doc_id long, text string"
-    )
-    out = {
-        r.doc_id: (r.is_dup, r.dup_of)
-        for r in neardup_batch_step(spark, batch, f"{tmpdir}/index").collect()
-    }
-    assert out == {1: (False, None), 2: (False, None), 3: (False, None)}
-    # unsignatured docs are not indexed
-    ids = {r.id for r in spark.read.parquet(f"{tmpdir}/index").select("id").collect()}
-    assert ids == {1}
-
-
-@pytest.mark.slowgate
-def test_neardup_index_compaction_preserves_labels(spark, tmpdir):
-    """compact_neardup_index: file count collapses to ~1/band, replay
-    duplicates are dropped, and a post-compaction probe labels exactly
-    as before."""
-    import glob
-
-    from hw_kafka_streams_spark.streaming.neardup import (
-        compact_neardup_index,
-        neardup_batch_step,
-    )
-
-    words = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    ).split()
-    ix_dir = f"{tmpdir}/index"
-    # several appends -> several files per band partition
-    for b in range(3):
-        doc = " ".join(words[:10] + [f"uniq{b}a", f"uniq{b}b"] + words[10:])
-        batch = spark.createDataFrame(
-            [(100 + b, doc)], "doc_id long, text string"
-        )
-        neardup_batch_step(spark, batch, ix_dir, batch_id=b, threshold=0.9)
-    before = spark.read.parquet(ix_dir)
-    rows_before = {(r.id, r.band, r.bucket) for r in before.collect()}
-    files_before = len(glob.glob(f"{ix_dir}/band=*/part-*.parquet"))
-
-    # crash-window artifact: duplicate one batch's rows by hand
-    dup = before.filter(F.col("id") == 100)
-    dup.write.mode("append").partitionBy("band").parquet(ix_dir)
-    assert spark.read.parquet(ix_dir).count() == len(rows_before) + dup.count()
-
-    compact_neardup_index(spark, ix_dir)
-    after = spark.read.parquet(ix_dir)
-    assert {(r.id, r.band, r.bucket) for r in after.collect()} == rows_before
-    files_after = len(glob.glob(f"{ix_dir}/band=*/part-*.parquet"))
-    assert files_after < files_before
-    n_bands = after.select("band").distinct().count()
-    assert files_after <= n_bands
-
-    # post-compaction probe: near-dup of doc 100 still caught
-    near = " ".join(words[:10] + ["uniq0a", "CHANGED"] + words[10:])
-    out = {
-        r.doc_id: (r.is_dup, r.dup_of)
-        for r in neardup_batch_step(
-            spark,
-            spark.createDataFrame([(900, near)], "doc_id long, text string"),
-            ix_dir,
-            batch_id=99,
-            threshold=0.5,
-        ).collect()
-    }
-    assert out == {900: (True, 100)}
-
-
 def test_observed_funnel_streaming_metrics(spark, tmp_path):
     """The funnel's per-stage survivor counts surface in
     StreamingQueryProgress.observedMetrics while the stream itself
@@ -988,309 +525,6 @@ def test_observed_funnel_streaming_metrics(spark, tmp_path):
     assert metrics is not None
     assert metrics["n_in"] == 100
     assert metrics["pass_ge10"] == 90 and metrics["pass_even"] == 45
-
-
-@pytest.mark.slowgate
-def test_streaming_bloom_dedup_unbounded_horizon(spark, tmpdir):
-    """Cross-batch exact dedup with O(num_bits) state: batch-2 repeats
-    of batch-1 content are dropped via the persisted bitmap, new docs
-    pass, intra-batch dups keep the min id."""
-    from hw_kafka_streams_spark.streaming.bloomdedup import (
-        run_streaming_bloom_dedup,
-    )
-
-    schema = "doc_id long, text string"
-    emitted: list[tuple] = []
-
-    def sink(df, batch_id):
-        for r in df.collect():
-            emitted.append((r.doc_id, r.text))
-
-    spark.createDataFrame(
-        [(1, "first doc"), (2, "second doc"), (3, "second doc")], schema
-    ).coalesce(1).write.mode("append").parquet(f"{tmpdir}/in")
-    stream = spark.readStream.schema(schema).parquet(f"{tmpdir}/in")
-    q = run_streaming_bloom_dedup(
-        spark, stream, f"{tmpdir}/bloom", f"{tmpdir}/ckpt", sink
-    )
-    try:
-        q.processAllAvailable()
-        # intra-batch dup (3) dropped, min id (2) kept
-        assert sorted(emitted) == [(1, "first doc"), (2, "second doc")]
-
-        spark.createDataFrame(
-            [(10, "first doc"), (11, "  FIRST   doc "), (12, "brand new")],
-            schema,
-        ).coalesce(1).write.mode("append").parquet(f"{tmpdir}/in")
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # 10 = exact dup of 1; 11 = dup after normalization (case+whitespace)
-    assert sorted(emitted) == [
-        (1, "first doc"),
-        (2, "second doc"),
-        (12, "brand new"),
-    ]
-
-
-@pytest.mark.slowgate
-def test_streaming_bloom_dedup_replay_is_stable(spark, tmpdir):
-    """A replayed batch (at-least-once, crash between sink and fold)
-    re-evaluates against the pre-batch bitmap and emits the same rows;
-    folding twice is a no-op."""
-    from hw_kafka_streams_spark.operators.bloom import load_bitmap
-    from hw_kafka_streams_spark.streaming.bloomdedup import (
-        bloom_dedup_batch_step,
-        fold_batch_into_bloom,
-    )
-
-    bloom_dir = f"{tmpdir}/bloom"
-    batch = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "doc_id long, text string"
-    )
-    kept1 = bloom_dedup_batch_step(spark, batch, bloom_dir)
-    rows1 = sorted(r.doc_id for r in kept1.collect())
-    fold_batch_into_bloom(spark, kept1, bloom_dir)
-    bm1 = load_bitmap(spark, bloom_dir)
-
-    # replay the same batch: before the fold the step must drop all
-    # (already folded); fold again: bitmap unchanged
-    kept2 = bloom_dedup_batch_step(spark, batch, bloom_dir)
-    assert kept2.count() == 0
-    fold_batch_into_bloom(spark, kept2, bloom_dir)
-    assert load_bitmap(spark, bloom_dir) == bm1
-    assert rows1 == [1, 2]
-
-
-def test_streaming_reservoir_equals_batch_twin(spark, tmpdir):
-    """Bottom-k-by-hash reservoir over two micro-batches must equal the
-    batch reservoir_per_key over the union — the mergeable/replayable
-    sampling contract (state bounded at k pairs per key)."""
-    import json
-    import time
-
-    import pyspark.sql.functions as F
-
-    from hw_kafka_streams_spark.operators.sampling import reservoir_per_key
-    from hw_kafka_streams_spark.streaming.stateful import (
-        streaming_reservoir_sample,
-    )
-
-    import os
-
-    src = f"{tmpdir}/resv_in"
-    os.makedirs(src)
-    rows1 = [(i, "a" if i % 2 == 0 else "b") for i in range(40)]
-    rows2 = [(i, "a" if i % 2 == 0 else "b") for i in range(40, 80)]
-    with open(f"{src}/b1.json", "w") as f:
-        for i, g in rows1:
-            f.write(json.dumps({"item_id": i, "grp": g}) + "\n")
-
-    stream = (
-        spark.readStream.schema("item_id long, grp string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    out = streaming_reservoir_sample(stream, "grp", "item_id", k=5)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("resv")
-        .outputMode("update")
-        .option("checkpointLocation", f"{tmpdir}/resv_chk")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.sql("select * from resv").count() >= 10:
-                break
-            time.sleep(0.5)
-        with open(f"{src}/b2.json", "w") as f:
-            for i, g in rows2:
-                f.write(json.dumps({"item_id": i, "grp": g}) + "\n")
-        deadline = time.time() + 90
-        while time.time() < deadline:
-            n = spark.sql(
-                "select max(n_seen) as m from resv"
-            ).collect()[0].m
-            if n == 40:  # 40 per key after both batches
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-
-    # latest emission per key = the final reservoir
-    rows = spark.sql("select * from resv").collect()
-    latest = {}
-    for r in rows:
-        latest[r.key] = max(latest.get(r.key, 0), r.n_seen)
-    got = {
-        (r.key, r.sample_id)
-        for r in rows
-        if r.n_seen == latest[r.key]
-    }
-
-    batch = spark.createDataFrame(
-        rows1 + rows2, "item_id long, grp string"
-    )
-    expected = {
-        (r.grp, r.item_id)
-        for r in reservoir_per_key(
-            batch, "grp", 5, order_hint="item_id"
-        ).collect()
-    }
-    assert got == expected
-    assert len(got) == 10  # 5 per key
-
-
-def test_streaming_cms_heavy_hitter_monitor(spark, tmp_path):
-    """Two micro-batches fold into the partitioned CMS state; the
-    merged estimate covers BOTH batches (>= exact count across the
-    whole history), replaying a batch's fold is idempotent (partition
-    overwrite, no double count), and compaction preserves the grid."""
-    import json
-    import time
-
-    from hw_kafka_streams_spark.streaming.cmsmonitor import (
-        cms_state,
-        cms_state_estimate,
-        compact_cms_state,
-        fold_batch_cms,
-        run_streaming_cms,
-    )
-
-    src = tmp_path / "in"
-    src.mkdir()
-    state = str(tmp_path / "cms_state")
-    chk = str(tmp_path / "chk")
-    with open(src / "b1.json", "w") as f:
-        f.write(json.dumps({"doc_id": 1, "text": "spark spark spark flink"}) + "\n")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = run_streaming_cms(spark, stream, state, chk, depth=3, width=64)
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            try:
-                if spark.read.parquet(state).count() > 0:
-                    break
-            except Exception:
-                pass
-            time.sleep(0.5)
-        with open(src / "b2.json", "w") as f:
-            f.write(json.dumps({"doc_id": 2, "text": "spark beam beam"}) + "\n")
-        deadline = time.time() + 90
-        while time.time() < deadline:
-            try:
-                if spark.read.parquet(state).select("batch_id").distinct().count() >= 2:
-                    break
-            except Exception:
-                pass
-            time.sleep(0.5)
-    finally:
-        q.stop()
-
-    keys = spark.createDataFrame([("spark",), ("beam",), ("never",)], "w string")
-    est = {
-        r.w: r.cms_estimate
-        for r in cms_state_estimate(spark, state, keys, depth=3, width=64).collect()
-    }
-    assert est["spark"] >= 4  # 3 in batch 1 + 1 in batch 2
-    assert est["beam"] >= 2
-    grid_before = {
-        (r.cms_row, r.cms_bucket): r.cnt for r in cms_state(spark, state).collect()
-    }
-    # replay batch 1's fold: partition overwrite -> identical grid
-    b1 = spark.read.schema("doc_id long, text string").json(str(src / "b1.json"))
-    fold_batch_cms(b1, state, 0, depth=3, width=64)
-    grid_replay = {
-        (r.cms_row, r.cms_bucket): r.cnt for r in cms_state(spark, state).collect()
-    }
-    assert grid_replay == grid_before
-    # compaction preserves the merged grid in one partition
-    compact_cms_state(spark, state)
-    grid_after = {
-        (r.cms_row, r.cms_bucket): r.cnt for r in cms_state(spark, state).collect()
-    }
-    assert grid_after == grid_before
-    assert (
-        spark.read.parquet(state).select("batch_id").distinct().count() == 1
-    )
-
-
-@pytest.mark.slowgate
-def test_streaming_decayed_counts_matches_batch_twin(spark, tmpdir):
-    """Two micro-batches through the stateful event-time-decayed
-    counter must end at exactly the state the batch fold computes over
-    the union — the cross-batch decay carries through GroupState."""
-    import math
-
-    from hw_kafka_streams_spark.streaming.stateful import (
-        streaming_decayed_counts,
-    )
-
-    rows1 = [
-        ("u1", "2024-01-01 00:00:00", 1),
-        ("u1", "2024-01-08 00:00:00", 2),  # one half-life later
-        ("u2", "2024-01-01 00:00:00", 3),
-    ]
-    rows2 = [
-        ("u1", "2024-01-15 00:00:00", 4),  # another half-life
-        ("u2", "2024-01-01 12:00:00", 5),
-    ]
-    schema = "user_id string, ts string, event_id long"
-
-    def as_df(rows):
-        return (
-            spark.createDataFrame(rows, schema)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
-
-    as_df(rows1).coalesce(1).write.parquet(f"{tmpdir}/decay/b1")
-    stream = spark.readStream.schema(
-        "user_id string, ts timestamp, event_id long"
-    ).parquet(f"{tmpdir}/decay/*")
-    name = f"decay_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_decayed_counts(stream, "user_id", "ts", "event_id")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        as_df(rows2).coalesce(1).write.parquet(f"{tmpdir}/decay/b2")
-        q.processAllAvailable()
-        got = {
-            r.key: (r.decayed_score, r.n_total)
-            for r in spark.sql(
-                f"""select key, decayed_score, n_total from (
-                      select *, row_number() over (
-                        partition by key order by n_total desc) rn
-                      from {name}) where rn = 1"""
-            ).collect()
-        }
-    finally:
-        q.stop()
-    # u1: 1 @t0; *0.5 +1 @t0+1w = 1.5; *0.5 +1 @t0+2w = 1.75
-    assert math.isclose(got["u1"][0], 1.75, rel_tol=1e-12)
-    assert got["u1"][1] == 3
-    # u2: 1 @t0; half a day later: *2^(-0.5/7)+1
-    assert math.isclose(
-        got["u2"][0], 1.0 * 2 ** (-0.5 / 7) + 1.0, rel_tol=1e-12
-    )
-    # batch twin over the union gives identical finals
-    batch = {
-        r.key: (r.decayed_score, r.n_total)
-        for r in streaming_decayed_counts(
-            as_df(rows1 + rows2), "user_id", "ts", "event_id"
-        ).collect()
-    }
-    assert batch == got
 
 
 # ------------------------------------------------------- topic admin
@@ -1342,388 +576,3 @@ def test_topic_dir_readable_by_spark_despite_manifest(spark, tmp_path):
     df.write.mode("append").parquet(d)
     # the leading-underscore manifest must be invisible to the reader
     assert spark.read.parquet(d).count() == 1
-
-
-def test_kafka_admin_raises_without_client():
-    import pytest
-
-    from hw_kafka_streams_spark.streaming.topics import KafkaTopicAdmin
-
-    with pytest.raises(ImportError):
-        KafkaTopicAdmin("localhost:9092")
-
-
-@pytest.mark.slowgate
-def test_keyed_quota_across_batches(spark, tmpdir):
-    """Cross-batch per-key quota: admissions must carry over micro-
-    batch boundaries (quota=4: batch1 admits 3, batch2 admits only 1
-    of 3 more and throttles 2)."""
-    from hw_kafka_streams_spark.streaming.stateful import keyed_quota
-
-    rows1 = [("u1",)] * 3 + [("u2",)] * 1
-    rows2 = [("u1",)] * 3 + [("u2",)] * 1
-    spark.createDataFrame(rows1, "user_id string").coalesce(1).write.parquet(
-        f"{tmpdir}/in", mode="append"
-    )
-    stream = spark.readStream.schema("user_id string").option(
-        "maxFilesPerTrigger", 1
-    ).parquet(f"{tmpdir}/in")
-    name = f"quota_{uuid.uuid4().hex[:8]}"
-    q = (
-        keyed_quota(stream, quota=4)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(rows2, "user_id string").coalesce(
-            1
-        ).write.parquet(f"{tmpdir}/in", mode="append")
-        q.processAllAvailable()
-        got = [
-            (r.key, r.admitted, r.throttled, r.quota_left)
-            for r in spark.sql(
-                f"select * from {name} order by key, quota_left desc"
-            ).collect()
-        ]
-    finally:
-        q.stop()
-    # u1: 3 admitted then 1 admitted + 2 throttled; u2: 1 then 1
-    assert ("u1", 3, 0, 1) in got and ("u1", 1, 2, 0) in got
-    assert ("u2", 1, 0, 3) in got and ("u2", 1, 0, 2) in got
-
-
-def test_keyed_quota_batch_degradation(spark):
-    from hw_kafka_streams_spark.streaming.stateful import keyed_quota
-
-    df = spark.createDataFrame([("a",)] * 5 + [("b",)] * 2, "user_id string")
-    got = {
-        (r.key, r.admitted, r.throttled, r.quota_left)
-        for r in keyed_quota(df, quota=3).collect()
-    }
-    assert got == {("a", 3, 2, 0), ("b", 2, 0, 1)}
-
-
-def test_streaming_ewma_anomaly_spike_alerts_across_batches(spark, tmpdir):
-    """State carries across microbatches: batch 1 establishes a stable
-    baseline (no alerts), batch 2's spike must alert against the
-    CARRIED moments; a steady key never alerts."""
-    import pandas as pd
-
-    from hw_kafka_streams_spark.streaming.stateful import (
-        streaming_ewma_anomaly,
-    )
-
-    rows = []
-    # batch 0: both keys stable around 10 (+-1 alternating), 20 points
-    for i in range(20):
-        v = 10.0 + (1.0 if i % 2 else -1.0)
-        rows.append((0, "spiky", i, 1_700_000_000_000_000 + i * 1000, v))
-        rows.append((0, "steady", 100 + i, 1_700_000_000_000_000 + i * 1000, v))
-    # batch 1: spiky jumps to 100 once then returns; steady stays put
-    for i in range(20, 30):
-        v = 100.0 if i == 24 else (10.0 + (1.0 if i % 2 else -1.0))
-        rows.append((1, "spiky", i, 1_700_000_000_000_000 + i * 1000, v))
-        w = 10.0 + (1.0 if i % 2 else -1.0)
-        rows.append((1, "steady", 100 + i, 1_700_000_000_000_000 + i * 1000, w))
-    # batch 2: both keys quiet — last_alert_value must CARRY from the
-    # batch-1 spike (state-tuple member, not per-batch local; ADVICE r9)
-    for i in range(30, 36):
-        v = 10.0 + (1.0 if i % 2 else -1.0)
-        rows.append((2, "spiky", i, 1_700_000_000_000_000 + i * 1000, v))
-        rows.append((2, "steady", 100 + i, 1_700_000_000_000_000 + i * 1000, v))
-    pdf = pd.DataFrame(rows, columns=["b", "key", "id", "ts_us", "v"])
-    for b in (0, 1, 2):
-        spark.createDataFrame(
-            pdf[pdf.b == b][["key", "id", "ts_us", "v"]]
-        ).coalesce(1).write.mode("append").parquet(f"{tmpdir}/ewma")
-    stream = (
-        spark.readStream.schema("key string, id long, ts_us long, v double")
-        .parquet(f"{tmpdir}/ewma")
-        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-    )
-    name = f"ewma_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_ewma_anomaly(stream, "key", "ts", "id", "v", alpha=0.2)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        final = spark.sql(
-            f"select key, max(n_total) n, max(n_alerts) a,"
-            f" max(last_alert_value) lav from {name} group by key"
-        ).collect()
-        last_emit = spark.sql(
-            f"select last_alert_value from {name}"
-            f" where key = 'spiky' order by n_total desc limit 1"
-        ).collect()
-    finally:
-        q.stop()
-    by_key = {r.key: r for r in final}
-    assert by_key["spiky"].n == 36
-    assert by_key["spiky"].a >= 1 and by_key["spiky"].lav == 100.0
-    assert by_key["steady"].a == 0
-    # the alert-free batch 2 must still report the carried value
-    assert last_emit[0].last_alert_value == 100.0
-
-
-def test_ewma_batch_twin_matches_streaming_fold(spark):
-    """The batch degrade (applyInPandas) runs the identical fold: same
-    alert count and final moments as a hand-rolled replay."""
-    from hw_kafka_streams_spark.streaming.stateful import (
-        streaming_ewma_anomaly,
-    )
-
-    vals = [10.0, 10.5, 9.5, 10.2, 9.8, 10.1, 9.9, 10.0, 10.3, 50.0, 10.0]
-    df = spark.createDataFrame(
-        [("k", i, 1_700_000_000_000_000 + i * 1000, v) for i, v in enumerate(vals)],
-        "key string, id long, ts_us long, v double",
-    ).withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-    row = streaming_ewma_anomaly(
-        df, "key", "ts", "id", "v", alpha=0.2, k_sigma=4.0, warmup=8
-    ).collect()[0]
-    # hand replay
-    mean, var, n, alerts = 0.0, 0.0, 0, 0
-    for v in vals:
-        if n == 0:
-            mean, var = v, 0.0
-        else:
-            diff = v - mean
-            if n >= 8 and diff * diff > 16.0 * max(var, 1e-12):
-                alerts += 1
-            incr = 0.2 * diff
-            mean += incr
-            var = 0.8 * (var + diff * incr)
-        n += 1
-    assert row.n_total == 11 and row.n_alerts == alerts == 1
-    assert abs(row.ewma - mean) < 1e-12
-    assert abs(row.ewm_std - var**0.5) < 1e-12
-
-
-def test_streaming_percolator_matches_batch_query(spark, tmpdir):
-    """The stateless streaming percolator over a 2-batch doc stream
-    emits exactly the alerts the batch shape produces on the union,
-    and replays idempotently (same rows per restart-from-scratch)."""
-    import pandas as pd
-
-    from hw_kafka_streams_spark.streaming.percolate import (
-        streaming_percolator,
-    )
-
-    stored = spark.createDataFrame(
-        [(1, ["hash", "join"]), (2, ["merge", "sort"]), (3, ["absent_zz"])],
-        "qid int, terms array<string>",
-    )
-    docs = [
-        (0, 1, "hash join fast table"),
-        (0, 2, "sort then merge the runs"),
-        (1, 3, "hash only no second term"),
-        (1, 4, "join hash reversed order still matches"),
-    ]
-    pdf = pd.DataFrame(docs, columns=["b", "doc_id", "text"])
-    for b in (0, 1):
-        spark.createDataFrame(pdf[pdf.b == b][["doc_id", "text"]]).coalesce(
-            1
-        ).write.mode("append").parquet(f"{tmpdir}/percdocs")
-    stream = spark.readStream.schema("doc_id long, text string").parquet(
-        f"{tmpdir}/percdocs"
-    )
-    name = f"perc_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_percolator(stream, stored)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r.doc_id, r.qid)
-            for r in spark.sql(f"select * from {name}").collect()
-        }
-    finally:
-        q.stop()
-    batch = {
-        (r.doc_id, r.qid)
-        for r in streaming_percolator(
-            spark.createDataFrame(pdf[["doc_id", "text"]]), stored
-        ).collect()
-    }
-    assert got == batch == {(1, 1), (2, 2), (4, 1)}
-
-
-def test_streaming_sprt_latches_across_batches(spark, tmpdir):
-    """Batch 1 leaves the biased key undecided; batch 2's continued
-    successes must cross +ln19 against CARRIED counts and latch H1
-    with the crossing sample number; a fair key keeps running."""
-    import math
-
-    import pandas as pd
-
-    from hw_kafka_streams_spark.streaming.stateful import (
-        streaming_sprt_monitor,
-    )
-
-    rows = []
-    # biased: all successes; fair: strict alternation
-    for i in range(10):
-        rows.append((0, "biased", i, 1_700_000_000_000_000 + i * 1000, 1))
-        rows.append((0, "fair", 100 + i, 1_700_000_000_000_000 + i * 1000, i % 2))
-    for i in range(10, 30):
-        rows.append((1, "biased", i, 1_700_000_000_000_000 + i * 1000, 1))
-        rows.append((1, "fair", 100 + i, 1_700_000_000_000_000 + i * 1000, i % 2))
-    pdf = pd.DataFrame(rows, columns=["b", "key", "id", "ts_us", "s"])
-    for b in (0, 1):
-        spark.createDataFrame(
-            pdf[pdf.b == b][["key", "id", "ts_us", "s"]]
-        ).coalesce(1).write.mode("append").parquet(f"{tmpdir}/sprt")
-    stream = (
-        spark.readStream.schema("key string, id long, ts_us long, s long")
-        .parquet(f"{tmpdir}/sprt")
-        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-    )
-    name = f"sprt_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_sprt_monitor(stream, "key", "ts", "id", "s")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        final = spark.sql(
-            f"select key, max(n_total) n, max(n_at_decision) nd,"
-            f" max(decision) d from {name} where n_total = 30"
-            f" group by key"
-        ).collect()
-    finally:
-        q.stop()
-    by_key = {r.key: r for r in final}
-    # all-success LLR crosses ln19 at n = ceil(ln19/ln1.2) = 17
-    expect_n = math.ceil(math.log(19) / math.log(1.2))
-    assert by_key["biased"].d == "H1"
-    assert by_key["biased"].nd == expect_n and expect_n > 10  # in batch 2
-    assert by_key["fair"].d == "continue" and by_key["fair"].nd is None
-
-
-def test_sprt_batch_twin_matches_query_registry(spark, sf_dir):
-    """The batch degrade over the real events stream must agree with
-    q_sprt_audit (same per-type decision, stopping index, final LLR)
-    — the oracle-checked query pins the math, the monitor inherits
-    it."""
-    from hw_kafka_streams_spark.queries import queries
-    from hw_kafka_streams_spark.sources.catalog import load_table
-    from hw_kafka_streams_spark.streaming.stateful import (
-        streaming_sprt_monitor,
-    )
-
-    e = load_table(spark, "events", sf_dir).withColumn(
-        "s", (F.col("value") > 35).cast("int")
-    )
-    mon = {
-        r.key: r
-        for r in streaming_sprt_monitor(
-            e, "event_type", "ts", "event_id", "s"
-        ).collect()
-    }
-    for r in queries()["q_sprt_audit"](spark, sf_dir).collect():
-        m = mon[r.event_type]
-        assert m.decision == r.decision
-        assert m.n_at_decision == r.n_to_decision
-        assert m.n_total == r.n_events
-        assert abs(m.llr - r.llr_final) < 1e-4
-
-
-def test_streaming_page_hinkley_drift_alarms_across_batches(spark, tmpdir):
-    """State carries across microbatches: batch 1 establishes a level-10
-    baseline, batch 2 shifts the mean to 13 (a drift EWMA's pointwise
-    k-sigma test would never flag) and PH must alarm against the
-    CARRIED cumulative statistic; a steady key never alarms."""
-    import pandas as pd
-
-    from hw_kafka_streams_spark.streaming.stateful import (
-        streaming_page_hinkley,
-    )
-
-    rows = []
-    for i in range(30):
-        v = 10.0 + (0.5 if i % 2 else -0.5)
-        rows.append((0, "drifty", i, 1_700_000_000_000_000 + i * 1000, v))
-        rows.append((0, "steady", 100 + i, 1_700_000_000_000_000 + i * 1000, v))
-    for i in range(30, 80):
-        v = 13.0 + (0.5 if i % 2 else -0.5)  # persistent +3 shift
-        rows.append((1, "drifty", i, 1_700_000_000_000_000 + i * 1000, v))
-        w = 10.0 + (0.5 if i % 2 else -0.5)
-        rows.append((1, "steady", 100 + i, 1_700_000_000_000_000 + i * 1000, w))
-    pdf = pd.DataFrame(rows, columns=["b", "key", "id", "ts_us", "v"])
-    for b in (0, 1):
-        spark.createDataFrame(
-            pdf[pdf.b == b][["key", "id", "ts_us", "v"]]
-        ).coalesce(1).write.mode("append").parquet(f"{tmpdir}/ph")
-    stream = (
-        spark.readStream.schema("key string, id long, ts_us long, v double")
-        .parquet(f"{tmpdir}/ph")
-        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-    )
-    name = f"ph_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_page_hinkley(stream, "key", "ts", "id", "v", delta=0.05,
-                               lam=10.0)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        final = spark.sql(
-            f"select key, max(n_total) n, max(n_alarm_points) a,"
-            f" max(first_alarm_n) fan from {name} group by key"
-        ).collect()
-    finally:
-        q.stop()
-    by_key = {r.key: r for r in final}
-    assert by_key["drifty"].n == 80
-    assert by_key["drifty"].a >= 1
-    assert by_key["drifty"].fan is not None and by_key["drifty"].fan > 30
-    assert by_key["steady"].a == 0
-
-
-def test_page_hinkley_batch_twin_matches_hand_fold(spark):
-    """The batch degrade (applyInPandas) runs the identical fold: same
-    PH trajectory, alarm count, and first-alarm index as a hand
-    replay."""
-    from hw_kafka_streams_spark.streaming.stateful import (
-        streaming_page_hinkley,
-    )
-
-    vals = [10.0] * 20 + [14.0] * 15
-    df = spark.createDataFrame(
-        [("k", i, 1_700_000_000_000_000 + i * 1000, v)
-         for i, v in enumerate(vals)],
-        "key string, id long, ts_us long, v double",
-    ).withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-    row = streaming_page_hinkley(
-        df, "key", "ts", "id", "v", delta=0.05, lam=10.0
-    ).collect()[0]
-    n, cum, m, min_m, alarms, fan = 0, 0.0, 0.0, 0.0, 0, None
-    for v in vals:
-        n += 1
-        cum += v
-        m += v - cum / n - 0.05
-        min_m = min(min_m, m)
-        if m - min_m > 10.0:
-            alarms += 1
-            if fan is None:
-                fan = n
-    assert row.n_total == 35
-    assert row.n_alarm_points == alarms and alarms >= 1
-    assert row.first_alarm_n == fan
-    assert abs(row.ph - (m - min_m)) < 1e-12
