@@ -10,18 +10,21 @@ Spark-first mapping:
   v2 in the reference becomes checkpointed at-least-once to Kafka —
   documented semantic gap; end-to-end exactly-once holds for file
   sinks).
-- GlobalKTable → a small static DataFrame broadcast to every task —
-  the same full-replication decision the reference makes per instance.
-  Live dictionary updates → ``foreachBatch`` re-reading the dims each
-  microbatch (still broadcast-joined; see
+- GlobalKTable → a small dim collected to the driver and inlined in
+  the plan — the same full-replication decision the reference makes
+  per instance. A static dim passed to ``filtered_messages`` is read
+  once, when the query is defined, as the banned words are. Live
+  dictionary updates → ``foreachBatch`` re-reading the dims each
+  microbatch through :func:`process_batch_with_refresh` (see
   :func:`run_reference_topology`).
-- leftJoin+null+filter → one stream-static LEFT ANTI broadcast join.
-- transformValues → fold of regexp_replace (operators/censor.py).
+- leftJoin+null+filter → a filter on ``receiver:sender`` against the
+  collected blocked keys.
+- transformValues → scheduled regexp_replace passes (operators/censor.py).
 
-No shuffle anywhere in the streaming plan: source partitions map 1:1
-to tasks, both joins are broadcast — the plan scales with input
-partitions alone, which is exactly how you want a 100-TB/day topic
-consumed.
+No join and no shuffle anywhere in the streaming plan: source
+partitions map 1:1 to tasks in one codegen stage — the plan scales
+with input partitions alone, which is exactly how you want a
+100-TB/day topic consumed.
 """
 
 from __future__ import annotations
@@ -80,7 +83,9 @@ def read_control_table(spark: SparkSession, bootstrap: str, topic: str) -> DataF
         F.col("value").cast("string").alias("value"),
         F.col("offset"),
     )
-    return serde.compact_changelog(kv).select("key", "value")
+    # one partition: the dim is tiny, and the compaction then runs in
+    # the scan's stage with no exchange
+    return serde.compact_changelog(kv.coalesce(1)).select("key", "value")
 
 
 def run_reference_topology(
@@ -150,7 +155,7 @@ def read_control_dir(spark: SparkSession, path: str) -> DataFrame:
     GlobalKTable refresh path is exercisable end-to-end without Kafka.
     """
     kv = spark.read.schema("key string, value string, offset long").parquet(path)
-    return serde.compact_changelog(kv).select("key", "value")
+    return serde.compact_changelog(kv.coalesce(1)).select("key", "value")
 
 
 def run_file_topology_with_refresh(
@@ -213,7 +218,9 @@ def run_file_topology(
 
     Same logical plan as the Kafka job (the transformation is
     source-agnostic); lets the topology be exercised end-to-end where
-    no broker exists.
+    no broker exists. ``blocked`` is read once, here, when the query is
+    defined; dims that change while the query runs go through
+    :func:`process_batch_with_refresh` instead.
     """
     schema = "sender string, text string, receiver string"
     stream = spark.readStream.schema(schema).parquet(messages_dir)

@@ -14,8 +14,11 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
+
+from pyspark.sql import functions as F
 
 from hw_kafka_streams_spark.operators.censor import censor_column, filter_pipeline
 
@@ -81,6 +84,26 @@ def test_censor_overlapping_words_fold_order(spark):
     assert df.select(censor_column("text", ["bc", "ab"]).alias("t")).first().t == "a**"
 
 
+def test_guarded_passes_match_jvm_fold(spark):
+    """The guarded passes against one plain ``regexp_replace`` per word,
+    both on the JVM: first characters whose case folding is irregular
+    (``İ ı ſ K ß``), class metacharacters (``- ] ^ \\ & [``) and an
+    emoji, in lower, Title and UPPER text."""
+    words = ["İx", "ıy", "ſa", "\u212ab", "ßc", "-d", "]e", "^f", "\\g", "&h", "[i", "\U0001F600j", "ab", "SS", "ẞz"]
+    texts = [
+        f"q {t} {t}{t}"
+        for w in words
+        for t in (w, w.lower(), w.title(), w.upper())
+    ] + ["İX IY ſA KB ẞC ßC ssc SSC \u212aB kb"]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    fold = F.col("text")
+    for w in words:
+        fold = F.regexp_replace(fold, "(?iu)" + re.escape(w), "*" * len(w))
+    got = dict(df.select("i", censor_column("text", words)).collect())
+    want = dict(df.select("i", fold).collect())
+    assert got == want
+
+
 def _fold(text, words):
     """The reference censor in Python: one case-insensitive literal
     ``re.sub`` per word, in list order."""
@@ -116,12 +139,52 @@ def test_censor_column_matches_fold(spark, words, texts):
 
 
 def test_block_is_anti_join_plan(spark):
-    """The physical plan must be a broadcast anti-join (no shuffle)."""
+    """Blocking is a filter on the collected keys: no join and no
+    exchange of any kind, broadcast included."""
     messages, blocked, words = _fixtures(spark)
     out = filter_pipeline(messages, blocked, words)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert "SortMergeJoin" not in plan
+    assert "Filter" in plan
+    assert "Join" not in plan and "Exchange" not in plan and "Broadcast" not in plan
+
+
+def _blocking(spark, keys, rows):
+    """The (sender, receiver) pairs ``filtered_messages`` keeps."""
+    from hw_kafka_streams_spark.operators.censor import filtered_messages
+
+    msgs = spark.createDataFrame(
+        [(s, "t", r) for s, r in rows], "sender string, text string, receiver string"
+    )
+    blocked = spark.createDataFrame([(k, "blocked") for k in keys], "key string, value string")
+    out = filtered_messages(msgs, blocked, [])
+    return {(r.sender, r.receiver) for r in out.collect()}, out
+
+
+def _anti_join(rows, keys):
+    keys = {k for k in keys if k is not None}
+    return {(s, r) for s, r in rows if s is None or r is None or f"{r}:{s}" not in keys}
+
+
+@pytest.mark.parametrize("n_keys", [0, 5, 50])
+def test_blocking_matches_anti_join(spark, n_keys):
+    """Quotes, backslashes, colons, newlines and Cyrillic in keys; null
+    senders and receivers kept; a null key blocks nothing; 5 keys plan
+    as ``In``, 50 as ``InSet``."""
+    odd = ["o'k", "back\\slash", "a:b", "new\nline", "логин", "q\\'", "''"]
+    users = odd + [f"u{i}" for i in range(60)]
+    pairs = [(s, r) for s in users[:12] for r in users[:12]]
+    keys = [f"{r}:{s}" for s, r in pairs][: max(n_keys - 1, 0)]
+    if n_keys:
+        keys.append(None)
+    rows = pairs + [(None, "u1"), ("u1", None), (None, None)]
+    kept, out = _blocking(spark, keys, rows)
+    assert kept == _anti_join(rows, keys)
+    assert len(kept) == len(rows) - max(n_keys - 1, 0)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    if n_keys == 5:
+        assert " IN (" in plan
+    if n_keys == 50:
+        assert "INSET" in plan
 
 
 def test_empty_word_list(spark):

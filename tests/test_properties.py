@@ -89,18 +89,27 @@ def test_censor_pass_rules():
     def groups(words):
         return [p for p, _ in censor_passes(words)]
 
-    # no touch: one pass per length
-    assert groups(["ab", "cd", "xyz", "ef"]) == ["(?iu)ab|cd|ef", "(?iu)xyz"]
+    # no touch: one pass per length; each pass leads with a lookahead of
+    # its words' first characters (their case closures)
+    assert groups(["ab", "cd", "xyz", "ef"]) == [
+        "(?iu)(?=[ACEace])(?:ab|cd|ef)",
+        "(?iu)(?=[Xx])(?:xyz)",
+    ]
     # an earlier word overlapping the start of a later one may share
-    assert groups(["ab", "bc"]) == ["(?iu)ab|bc"]
+    assert groups(["ab", "bc"]) == ["(?iu)(?=[ABab])(?:ab|bc)"]
     # a later word starting before an earlier one may not
-    assert groups(["bc", "ab"]) == ["(?iu)bc", "(?iu)ab"]
+    assert groups(["bc", "ab"]) == ["(?iu)(?=[Bb])(?:bc)", "(?iu)(?=[Aa])(?:ab)"]
     # containment across lengths, case-insensitively: "B" inside "ab"
-    assert groups(["ab", "B"]) == ["(?iu)ab", "(?iu)B"]
+    assert groups(["ab", "B"]) == ["(?iu)(?=[Aa])(?:ab)", "(?iu)(?=[Bb])(?:B)"]
     # a word with '*' is a barrier; empty words are skipped
-    assert groups(["x", "", "*y", "z"]) == ["(?iu)x", "(?iu)\\*y", "(?iu)z"]
-    # masks count characters, never lowered whole words ("İ".lower() is 2)
-    assert censor_passes(["İx"]) == [("(?iu)İx", "**")]
+    assert groups(["x", "", "*y", "z"]) == [
+        "(?iu)(?=[Xx])(?:x)",
+        "(?iu)(?=[\\*])(?:\\*y)",
+        "(?iu)(?=[Zz])(?:z)",
+    ]
+    # masks count characters, never lowered whole words ("İ".lower() is
+    # 2); non-ASCII guard members are one-character ranges
+    assert censor_passes(["İx"]) == [("(?iu)(?=[Iiİ-İ̇-̇])(?:İx)", "**")]
     assert censor_passes([]) == []
 
 

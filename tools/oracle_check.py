@@ -1,7 +1,8 @@
 """Driver-mimic: run every registered query in Spark AND its DuckDB
 oracle on the same parquet, compare row-count + schema + sorted values.
 
-Usage: python tools/oracle_check.py [--vanilla] [--lenient] [sf_dir] [query ...]
+Usage: python tools/oracle_check.py [--vanilla] [--lenient]
+           [--hashes out.json] [--against old.json] [sf_dir] [query ...]
 
 Replicates the driver's t2 gate locally (order-insensitive,
 column-name-sorted compare) so oracle mismatches are caught before a
@@ -17,10 +18,19 @@ Round-1 lessons baked in (CORRECTNESS_r01):
   Spark DOUBLE 1.0 vs DuckDB TINYINT 1). ``--lenient`` restores 6-dp.
 - List/tuple cells are an ERROR: the driver's pandas canonicalizer
   crashes on them (unhashable type) — queries must emit scalars only.
+
+``--hashes out.json`` writes each query's result hash: the SHA-256 of
+its Spark rows as ``_norm_rows`` normalizes and sorts them (null for a
+query that errored). ``--against old.json`` compares this run's hashes
+with an earlier run's, such as one taken on a parent checkout, lists
+every query whose hash differs, and fails if any does. A refactor that
+keeps every hash changed no query's output.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import math
 import sys
 from pathlib import Path
@@ -107,8 +117,21 @@ def lint_oracle_types(con, oracles: dict[str, str]) -> dict[str, list[str]]:
     return bad
 
 
+def rows_hash(cols, norm_rows) -> str:
+    """SHA-256 of the sorted column names and the ``_norm_rows`` output:
+    equal for two runs whose results compare equal."""
+    blob = json.dumps([sorted(cols), norm_rows], ensure_ascii=False)
+    return hashlib.sha256(blob.encode()).hexdigest()
+
+
 def compare_query(spark, con, fn, oracle: str, sf_dir: str) -> list[str]:
     """Run one query both ways; return a list of mismatch messages."""
+    return check_query(spark, con, fn, oracle, sf_dir)[0]
+
+
+def check_query(spark, con, fn, oracle: str, sf_dir: str) -> tuple[list[str], str | None]:
+    """:func:`compare_query`'s messages, plus the Spark result's
+    :func:`rows_hash` (None when a cell cannot be normalized)."""
     sdf = fn(spark, sf_dir)
     srows = [tuple(r) for r in sdf.collect()]
     scols = sdf.columns
@@ -116,13 +139,17 @@ def compare_query(spark, con, fn, oracle: str, sf_dir: str) -> list[str]:
     dcols = [d[0] for d in drel.description]
     drows = drel.fetchall()
     msgs: list[str] = []
+    try:
+        sn = _norm_rows(scols, srows)
+    except ListCellError as exc:
+        msgs.append(str(exc))
+        return msgs, None
     if sorted(scols) != sorted(dcols):
         msgs.append(f"schema: spark={sorted(scols)} duckdb={sorted(dcols)}")
     if len(srows) != len(drows):
         msgs.append(f"rowcount: spark={len(srows)} duckdb={len(drows)}")
     if not msgs:
         try:
-            sn = _norm_rows(scols, srows)
             dn = _norm_rows(dcols, drows)
         except ListCellError as exc:
             msgs.append(str(exc))
@@ -130,7 +157,13 @@ def compare_query(spark, con, fn, oracle: str, sf_dir: str) -> list[str]:
             if sn != dn:
                 diff = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
                 msgs.append(f"values differ, first diffs: {diff}")
-    return msgs
+    return msgs, rows_hash(scols, sn)
+
+
+def diff_hashes(old: dict, new: dict) -> list[str]:
+    """The queries whose hash differs between two ``--hashes`` files,
+    a query present in only one of them included."""
+    return sorted(n for n in old.keys() | new.keys() if old.get(n, "missing") != new.get(n, "missing"))
 
 
 def vanilla_spark():
@@ -146,6 +179,18 @@ def vanilla_spark():
     )
 
 
+def _take_path(argv: list[str], flag: str) -> str | None:
+    """Remove ``flag PATH`` from ``argv`` and return PATH."""
+    if flag not in argv:
+        return None
+    i = argv.index(flag)
+    if i + 1 >= len(argv):
+        raise SystemExit(f"{flag} needs a path")
+    path = argv[i + 1]
+    del argv[i : i + 2]
+    return path
+
+
 def main() -> int:
     global LENIENT
     argv = [a for a in sys.argv[1:]]
@@ -155,6 +200,8 @@ def main() -> int:
     if "--lenient" in argv:
         LENIENT = True
         argv.remove("--lenient")
+    hashes_out = _take_path(argv, "--hashes")
+    against = _take_path(argv, "--against")
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
@@ -173,6 +220,7 @@ def main() -> int:
     qs = e.queries()
     oracles = e.oracle_sql()
     failures = []
+    hashes: dict[str, str | None] = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -183,9 +231,10 @@ def main() -> int:
                 dt = time.monotonic() - t0
                 print(f"  {name:40s} rows-only ({n} rows)  [{dt:5.1f}s]")
                 continue
-            msgs = compare_query(spark, con, fn, oracles[name], sf_dir)
+            msgs, hashes[name] = check_query(spark, con, fn, oracles[name], sf_dir)
         except Exception as exc:  # driver records these as err rows
             msgs = [f"ERROR: {type(exc).__name__}: {exc}"]
+            hashes[name] = None
         dt = time.monotonic() - t0
         # return per-query persisted intermediates (library operators
         # register them; see hw_kafka_streams_spark/cache.py)
@@ -197,6 +246,20 @@ def main() -> int:
             failures.append(name)
 
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    if hashes_out:
+        with open(hashes_out, "w") as f:
+            json.dump(hashes, f, indent=1, sort_keys=True)
+        print(f"{len(hashes)} hashes written to {hashes_out}")
+    if against:
+        with open(against) as f:
+            old = json.load(f)
+        if only:
+            old = {n: h for n, h in old.items() if n in only}
+        changed = diff_hashes(old, hashes)
+        for n in changed:
+            print(f"  hash differs: {n}  {old.get(n, 'missing')} -> {hashes.get(n, 'missing')}")
+        print(f"{len(changed)} of {len(old.keys() | hashes.keys())} hashes differ from {against}")
+        failures += changed
     return 1 if failures else 0
 
 
